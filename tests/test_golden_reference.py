@@ -64,6 +64,62 @@ def test_windowed_count_invariant(spark, reference_dir):
             assert r["agg"] == min(r["rank"] + 1, window), (window, r)
 
 
+def _window_model(rows, window, agg):
+    """Python model of the reference query: rank over (key, value), then
+    ``agg`` over the trailing ranks [max(0, r-window+1), r]."""
+    ordered = sorted(rows)
+    out = set()
+    for r, (key, _) in enumerate(ordered):
+        win = [v for _, v in ordered[max(0, r - window + 1): r + 1]]
+        a = {"sum": sum, "count": len, "min": min, "max": max}.get(agg)
+        out.add((r, key, a(win) if a else sum(win) / len(win)))
+    return out
+
+
+def test_simple103_analogue_matches_model(spark):
+    """The golden trio's shape without the reference mount: 103 rows with
+    key == value and one duplicate key, P=4 (~26 rows per range), windows
+    16 < 26 < 79, 91 (the halo spans several ranges) and l > n.  The
+    Window path and both scalable paths must equal the Python model for
+    every aggregate."""
+    from uw_mapreduce_spark.operators.scale import sliding_minmax_scalable
+    from uw_mapreduce_spark.operators.window import sliding_aggregate
+
+    keys = [(i * 37) % 102 for i in range(102)] + [50]
+    rows = [(k, k) for k in keys]
+    kv = spark.createDataFrame(rows, "key long, value long")
+    for window in (*WINDOWS, 200):
+        for agg in ("sum", "count", "avg", "min", "max"):
+            want = _window_model(rows, window, agg)
+            paths = {
+                "window": sliding_aggregate(kv, ["key", "value"], "value", window, agg=agg),
+                "scalable": (
+                    sliding_minmax_scalable if agg in ("min", "max") else sliding_aggregate_scalable
+                )(kv, ["key", "value"], "value", window, agg=agg, num_partitions=4),
+            }
+            for path, out in paths.items():
+                got = {(r["rank"], r["key"], r["agg"]) for r in out.collect()}
+                assert got == want, (path, window, agg)
+
+
+def test_tosort100_analogue_windowed_count(spark):
+    """tosort100's self-checking property without the mount: with every
+    value 1 (duplicate keys included), the trailing sum is
+    min(rank+1, l) on the Window and the scalable path alike."""
+    from uw_mapreduce_spark.operators.window import sliding_aggregate
+
+    kv = spark.createDataFrame([((i * 53) % 61, 1) for i in range(100)], "key long, value long")
+    for window in (1, 16, 100, 150):
+        for out in (
+            sliding_aggregate(kv, ["key", "value"], "value", window),
+            sliding_aggregate_scalable(kv, ["key", "value"], "value", window, num_partitions=4),
+        ):
+            rows = out.collect()
+            assert sorted(r["rank"] for r in rows) == list(range(100))
+            for r in rows:
+                assert r["agg"] == min(r["rank"] + 1, window), (window, r)
+
+
 def test_two_path_agreement_100k(spark, reference_dir):
     """Window path ≡ scalable path on the reference's largest shipped
     input (`input/tosort100000.txt`, 100k rows — the scale row of
@@ -183,8 +239,8 @@ def test_scalable_invariant_5m_rows_with_hot_key(spark):
     duplicated 500k times) with value=1, so the trailing-window sum must
     equal min(rank+1, l) at every row — verified distributedly, no
     single-partition comparison path.  Exercises adaptive border
-    sampling, the heavy-hitter union, offset broadcasting, and the
-    prefix-difference join at 50x the reference's largest input.
+    sampling, the heavy-hitter union, driver rank offsets, and halo
+    replication across ranges at 50x the reference's largest input.
     (The full two-path exceptAll agreement at this volume was also run
     once — 0 mismatches — but costs ~140s via the single-partition
     Window path, so the suite keeps the invariant form.)"""

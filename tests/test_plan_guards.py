@@ -181,3 +181,52 @@ def test_pareto_scalable_route_avoids_unpartitioned_window(spark):
 
     for m in re.finditer(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
         assert "_pid" in m.group(1), f"unpartitioned window survived: {m.group(0)[:200]}"
+
+
+def _kv_frame(spark):
+    import pyspark.sql.functions as F
+
+    return spark.range(0, 3000).select(
+        ((F.col("id") * 7919) % 1000).alias("key"), ((F.col("id") * 31) % 97).alias("value")
+    )
+
+
+_RANK_JOIN = r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[[^\]]*\brank#"
+
+
+def test_scalable_range_pass_has_no_cache_or_rank_join(spark):
+    """Scalable sum, min/max and global rank run as ONE range pass:
+    halo rows ride the range exchange, so no frame is cached and no
+    self-join on a shifted rank is needed for the window's far end."""
+    import re
+
+    from uw_mapreduce_spark.operators.rank import global_rank_scalable
+    from uw_mapreduce_spark.operators.scale import (
+        sliding_aggregate_scalable,
+        sliding_minmax_scalable,
+    )
+
+    df = _kv_frame(spark)
+    frames = {
+        "sum": sliding_aggregate_scalable(df, ["key", "value"], "value", 91, num_partitions=4),
+        "max": sliding_minmax_scalable(
+            df, ["key", "value"], "value", 91, agg="max", num_partitions=4
+        ),
+        "rank": global_rank_scalable(df, ["key", "value"], num_partitions=4),
+    }
+    for name, out in frames.items():
+        plan = _plan(out)
+        assert "InMemoryRelation" not in plan, name
+        assert not re.search(_RANK_JOIN, plan), (name, plan[:2000])
+
+
+def test_scalable_minmax_uses_running_frames_only(spark):
+    """The block suffix of sliding min/max must be a descending RUNNING
+    frame: a (currentRow, unboundedFollowing) frame recomputes the rest
+    of the block for every row, O(l) per row."""
+    from uw_mapreduce_spark.operators.scale import sliding_minmax_scalable
+
+    out = sliding_minmax_scalable(
+        _kv_frame(spark), ["key", "value"], "value", 91, agg="min", num_partitions=4
+    )
+    assert "unboundedfollowing" not in _plan(out).lower()

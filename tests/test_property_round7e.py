@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import itertools
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _SETTINGS = dict(
@@ -171,25 +171,73 @@ def test_holt_keyed_matches_python_model(spark, series):
     assert got == want
 
 
+_INF = float("inf")
+
+
+def _spark_order(x):
+    """Sort key for Spark's ascending order: NULL first, NaN last."""
+    if x is None:
+        return (0, 0.0)
+    return (2, 0.0) if x != x else (1, x)
+
+
+def _comparable(x):
+    return "NaN" if isinstance(x, float) and x != x else x
+
+
+_PM_VALUES = st.none() | st.integers(min_value=-10**6, max_value=10**6)
+
+
 @settings(**_SETTINGS)
 @given(
-    vals=st.lists(st.integers(min_value=-10**6, max_value=10**6),
-                  min_size=1, max_size=60),
+    rows=st.one_of(
+        # unique ascending keys, spread over several ranges
+        st.lists(_PM_VALUES, min_size=1, max_size=60).map(
+            lambda vals: [(float(i), v) for i, v in enumerate(vals)]
+        ),
+        # few distinct keys, NULL, NaN and ±inf among keys and values
+        st.lists(
+            st.tuples(
+                st.none() | st.sampled_from([float("nan"), _INF, -_INF]) | st.integers(-5, 5).map(float),
+                st.none() | st.sampled_from([float("nan"), _INF, -_INF]) | st.integers(-9, 9).map(float),
+            ),
+            min_size=1, max_size=60,
+        ),
+    ),
 )
-def test_prefix_max_scalable_matches_running_max(spark, vals):
+# all-equal keys: one range, no borders
+@example(rows=[(3.0, v) for v in (5, -2, 9, None, 9, 1, 12)])
+# NULL, NaN and ±inf keys; a NaN value is above every other value
+@example(rows=[(None, 4.0), (float("nan"), 7.0), (_INF, 1.0), (-_INF, None), (0.0, 2.0),
+               (1.0, float("nan")), (None, None), (float("nan"), 3.0), (2.0, -1.0)])
+# more partitions than distinct keys
+@example(rows=[(float(i % 2), i) for i in range(7)])
+# empty input
+@example(rows=[])
+def test_prefix_max_scalable_matches_running_max(spark, rows):
+    """Inclusive and exclusive running max in (k, i) order, with ties on
+    k broken by the row index i; NULL values are skipped."""
     from uw_mapreduce_spark.operators.scale import prefix_max_scalable
 
-    rows = [(i, v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "i long, v long").repartition(6)
+    data = [(k, i, v) for i, (k, v) in enumerate(rows)]
+    vtype = "double" if any(isinstance(v, float) for _, v in rows) else "long"
+    df = spark.createDataFrame(data, f"k double, i long, v {vtype}").repartition(6)
     got = {
-        r["i"]: r["prefix_max"]
-        for r in prefix_max_scalable(df, ["i"], "v", num_partitions=4).collect()
+        r["i"]: (r["incl"], r["excl"])
+        for r in prefix_max_scalable(df, ["k", "i"], "v", out_col="incl", num_partitions=4)
+        .join(prefix_max_scalable(df, ["k", "i"], "v", out_col="excl", num_partitions=4,
+                                  inclusive=False).select("i", "excl"), "i")
+        .collect()
     }
     acc, want = None, {}
-    for i, v in rows:
-        acc = v if acc is None or v > acc else acc
-        want[i] = acc
-    assert got == want
+    for k, i, v in sorted(data, key=lambda t: (_spark_order(t[0]), t[1])):
+        before = acc
+        if v is not None and (acc is None or _spark_order(v) > _spark_order(acc)):
+            acc = v
+        want[i] = (acc, before)
+    assert {i: tuple(map(_comparable, p)) for i, p in got.items()} == {
+        i: tuple(map(_comparable, p)) for i, p in want.items()
+    }
 
 
 def test_priority_sample_exact_k_and_estimator(spark):

@@ -3,7 +3,7 @@ brute-force model on arbitrary inputs (hypothesis-generated)."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from uw_mapreduce_spark.operators.scale import (
@@ -12,47 +12,100 @@ from uw_mapreduce_spark.operators.scale import (
 )
 from uw_mapreduce_spark.operators.window import sliding_aggregate
 
-rows_strategy = st.lists(
-    st.tuples(st.integers(-1000, 1000), st.integers(-10**6, 10**6)),
-    min_size=1,
-    max_size=40,
-)
+_NONFINITE = st.sampled_from([float("nan"), float("inf"), float("-inf")])
+_KEYS = {
+    "long": st.integers(-1000, 1000),
+    "double": st.none() | _NONFINITE | st.integers(-50, 50).map(float),
+}
+_VALUES = {
+    "long": st.integers(-10**6, 10**6),
+    "int": st.none() | st.integers(-1000, 1000),
+    # halves: finite sums are exact in double whatever the order
+    "double": st.none() | _NONFINITE | st.integers(-2000, 2000).map(lambda x: x / 2),
+}
+
+
+@st.composite
+def sliding_inputs(draw):
+    key_t, value_t = draw(st.sampled_from([("long", "long"), ("long", "int"), ("double", "double")]))
+    rows = draw(st.lists(st.tuples(_KEYS[key_t], _VALUES[value_t]), min_size=1, max_size=40))
+    return f"key {key_t}, value {value_t}", rows
+
+
+def spark_order(x):
+    """Sort key for Spark's ascending order: NULL first, NaN last."""
+    if x is None:
+        return (0, 0.0)
+    return (2, 0.0) if x != x else (1, x)
+
+
+def comparable(x):
+    return "NaN" if isinstance(x, float) and x != x else x
 
 
 def brute(rows, l, agg):
-    ordered = sorted(rows)
+    """(rank, agg) over [max(0, r-l+1), r] in (key, value) order, with
+    SQL semantics: NULL values skipped, NULL sum/avg/min/max over a frame
+    with no value, NaN above every value for min/max."""
+    ordered = sorted(rows, key=lambda kv: (spark_order(kv[0]), spark_order(kv[1])))
     out = []
     for r in range(len(ordered)):
-        win = [v for _, v in ordered[max(0, r - l + 1): r + 1]]
-        out.append((r, {"sum": sum, "min": min, "max": max}[agg](win)))
+        win = [v for _, v in ordered[max(0, r - l + 1): r + 1] if v is not None]
+        if agg == "count":
+            a = len(win)
+        elif not win:
+            a = None
+        elif agg == "avg":
+            a = sum(win) / len(win)
+        elif agg == "sum":
+            a = sum(win)
+        else:
+            a = {"min": min, "max": max}[agg](win, key=spark_order)
+        out.append((r, comparable(a)))
     return out
 
 
+def ranked(df):
+    return sorted((r["rank"], comparable(r["agg"])) for r in df.collect())
+
+
+_INF = float("inf")
+
+
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(rows=rows_strategy, l=st.integers(1, 50))
-def test_sliding_paths_match_brute_force(spark, rows, l):
-    df = spark.createDataFrame(rows, "key long, value long")
-    expected_sum = brute(rows, l, "sum")
-    got_w = sorted(
-        (r["rank"], r["agg"])
-        for r in sliding_aggregate(df, ["key", "value"], "value", l).collect()
-    )
-    got_s = sorted(
-        (r["rank"], r["agg"])
-        for r in sliding_aggregate_scalable(
-            df, ["key", "value"], "value", l, num_partitions=3
-        ).collect()
-    )
-    assert got_w == expected_sum
-    assert got_s == expected_sum
-    expected_min = brute(rows, l, "min")
-    got_m = sorted(
-        (r["rank"], r["agg"])
-        for r in sliding_minmax_scalable(
-            df, ["key", "value"], "value", l, agg="min", num_partitions=3
-        ).collect()
-    )
-    assert got_m == expected_min
+@given(inputs=sliding_inputs(), l=st.integers(1, 50))
+# all-equal keys: one range, no borders
+@example(inputs=("key long, value long", [(7, v) for v in range(-12, 12)]), l=5)
+# NULL, NaN and ±inf keys; NULL, NaN and ±inf values leaving the frame
+@example(inputs=("key double, value double", [
+    (None, 1.0), (float("nan"), 2.0), (_INF, None), (-_INF, 4.0), (0.0, _INF),
+    (1.0, 1.5), (2.0, -_INF), (3.0, float("nan")), (4.0, 2.5), (5.0, None),
+    (6.0, 3.0), (7.0, -1.0), (None, None), (float("nan"), _INF), (8.0, 0.5),
+]), l=3)
+# nullable ints: frames with no value
+@example(inputs=("key long, value int", [(k, None if k % 3 else k) for k in range(20)]), l=3)
+# l > n
+@example(inputs=("key long, value long", [(k, k * k) for k in range(12)]), l=40)
+# l larger than one range (~14 rows each at P=3), halo spanning two ranges
+@example(inputs=("key long, value long", [(k, k % 7 - 3) for k in range(41)]), l=33)
+# more partitions than distinct keys
+@example(inputs=("key long, value long", [(k % 2, k) for k in range(9)]), l=4)
+# empty input
+@example(inputs=("key long, value long", []), l=3)
+def test_sliding_paths_match_brute_force(spark, inputs, l):
+    schema, rows = inputs
+    df = spark.createDataFrame(rows, schema)
+    assert ranked(sliding_aggregate(df, ["key", "value"], "value", l)) == brute(rows, l, "sum")
+    for agg in ("sum", "count", "avg"):
+        got = ranked(sliding_aggregate_scalable(
+            df, ["key", "value"], "value", l, agg=agg, num_partitions=3
+        ))
+        assert got == brute(rows, l, agg), agg
+    for agg in ("min", "max"):
+        got = ranked(sliding_minmax_scalable(
+            df, ["key", "value"], "value", l, agg=agg, num_partitions=3
+        ))
+        assert got == brute(rows, l, agg), agg
 
 
 @settings(deadline=None, max_examples=12, suppress_health_check=list(HealthCheck))

@@ -64,7 +64,7 @@ def kmeans_lloyd_exact(
     spark = df.sparkSession
     # the quantized frame feeds the seed draw plus one stats collect per
     # iteration — cache it so the corpus is read and floor-quantized
-    # once, not iters+1 times (the _ranged_with_offsets discipline).
+    # once, not iters+1 times.
     q = persist_scoped(
         df.select(F.col(id_col).alias("_id"), _quantized(vec_col, scale).alias("_c")),
         "kmeans",

@@ -16,9 +16,9 @@ Two implementations:
   up to ~10M rows, wrong at 100 TB.
 - ``global_rank_scalable`` — the reference's own two-pass prefix-count
   algorithm, which is exactly what ``RDD.zipWithIndex`` implements:
-  pass 1 counts records per (range-partitioned, sorted) partition,
-  pass 2 numbers records with broadcast prefix offsets.  O(n/P) memory
-  per task, no single-partition bottleneck.
+  pass 1 counts records per range of keys, pass 2 numbers each range's
+  records from its prefix offset.  O(n/P) memory per task, no
+  single-partition bottleneck.
 """
 
 from __future__ import annotations
@@ -88,22 +88,17 @@ def global_rank_scalable(
 ) -> DataFrame:
     """0-based global rank with no single-partition stage (100 TB path).
 
-    Plan: range-partition by ``order_by`` (Spark's sampled
-    RangePartitioner ≈ reference Sample+Sort jobs), per-partition counts
-    collected as P tiny rows (≈ O8 sentinel counts), broadcast back as
-    rank offsets added to a per-partition row_number (≈ O9 prefix-count
-    ranking) — the two-pass prefix-count algorithm, entirely JVM-side
-    (see scale._ranged_with_offsets).
+    Plan: the range pass of ``scale._ranged_with_offsets`` with no
+    halo — deterministic histogram borders on ``order_by[0]`` (≈
+    reference Sample+Sort jobs), per-range counts collected as P tiny
+    rows (≈ O8 sentinel counts), one range exchange, and each range's
+    driver-side rank offset added to its per-range row_number (≈ O9
+    prefix-count ranking) — entirely JVM-side, no join.
     """
     from .scale import _ranged_with_offsets
 
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     out = _ranged_with_offsets(df, order_by, None, num_partitions)
-    if rank_col != "rank":
-        out = out.withColumnRenamed("rank", rank_col)
-    return out
+    return out.withColumnRenamed("rank", rank_col)
 
 
 def grouped_weighted_median(

@@ -7,38 +7,41 @@ reference solves global windowing with 5 MR jobs: sampled range partition
 (Perfect), bounded replication + per-partition totals + prefix-sum window
 evaluation (Aggr) — `/root/reference/src/SlidingAggregation.java:433-536`.
 
-This module reproduces those guarantees (O(n/P) per-task memory, O(1)
-extra rounds, no broadcast of data) with a Spark-native plan that stays
-entirely JVM-side — no Python row serialization anywhere:
+Every scalable consumer — sliding sum/count/avg/min/max, prefix sum,
+prefix max, and through them rank, ntile, packing, evaluation and the
+catalog prefix faces — reads its rows from ONE range pass,
+``_ranged_with_offsets``, which stays entirely JVM-side (no Python row
+serialization anywhere):
 
-  1. deterministic range partitioning — a bounded border pass
-     (the reference's Sample job re-derived as a commutative min/max/count
-     histogram, see ``_deterministic_borders``) assigns each row an
-     explicit partition-id column with the key property that partition
-     i's keys all precede partition i+1's.  The ranged frame is cached
-     for the two passes, but because the borders are a pure function of
-     the data, cache loss or early release merely recomputes identical
-     partitions — it can never re-border mid-query (which Spark's
-     randomly-seeded RangePartitioner could, under cache eviction).
-  2. pass 1: per-partition (count, total) via ``groupBy(pid)`` — a
-     JVM hash aggregate replacing the reference's in-band sentinel
-     counts (:159-168) and partition totals (:305-310); P tiny rows
-     collected and turned into prefix offsets on the driver.
-  3. pass 2: a PER-PARTITION window (PARTITION BY pid ORDER BY key) —
-     parallel, spillable — assigns local row numbers and local prefix
-     sums; broadcast-joining the P-row offset table turns them into the
-     global rank (replaces job 3) and the global running aggregate
-     S(r) (replaces job 5's prefix pass :401-417).
-  4. window by prefix difference: agg over ranks [r-l+1, r] is
-     S(r) - S(r-l), fetched with an equi self-join on rank-l — a plain
-     shuffled 1:1 join instead of the reference's bounded replication
-     (job 4, :241-313).  Data shipped twice total, independent of
-     window size — strictly better than the reference's ≤3× which
-     degrades as l grows.
+  1. deterministic range borders — a bounded border pass (the
+     reference's Sample job re-derived as a commutative min/max/count
+     histogram, see ``_deterministic_borders``).  Range j holds keys in
+     (b_{j-1}, b_j], so every key of range j precedes every key of
+     range j+1.  The borders are a pure function of the data, so a
+     recompute routes every row identically — it can never re-border
+     mid-query (which Spark's randomly-seeded RangePartitioner could).
+  2. one P-row aggregate per range — the row count, plus the prefix
+     consumer's value total (sum, or max) — collected to the driver:
+     the reference's in-band sentinel counts (:159-168) and partition
+     totals (:305-310).
+  3. on the driver: each range's rank offset, its carry-in (prefix
+     consumers) and its halo sources (trailing windows of l rows): the
+     ranges just before it whose exact row counts add up to ≥ l-1.
+  4. ONE exchange.  Each row goes to its own range and, through
+     ``explode(sequence(pid, last[pid]))``, to each later range whose
+     trailing l-1 rows reach back into it — the reference's bounded
+     replication (`remotelyRelevantReducers` and the replication loop,
+     :257-303).  Halo rows per range ≤ l-1 plus one preceding range.
+  5. one window spec per range (PARTITION BY range ORDER BY key): the
+     rank is a driver constant plus ``row_number``; sum/count/avg are
+     running totals minus their ``lag(·, l)`` (O(1) per row); min/max
+     use the block decomposition (blocks of l ranks: a running prefix,
+     a descending running suffix and ``lag(suffix, l-1)``); prefix
+     consumers add the carry-in.  Only each range's own rows are kept.
 
-Every stage is O(n/P) memory and fully parallel.  The prefix-difference
-trick requires an invertible aggregate (sum/count/avg); non-invertible
-aggregates (min/max) route to the Window path or a partition_by spec.
+No cache, no ``count()`` barrier and no join: a pass is its border jobs,
+one stats job and the consumer's own action.  Per-task memory is
+O(n/P + l + one range); the driver holds O(P) values.
 
 Integer values accumulate in int64 (the reference's int32 overflow
 fixed — SURVEY.md §2.3.5); floats accumulate in double.
@@ -46,14 +49,14 @@ fixed — SURVEY.md §2.3.5); floats accumulate in double.
 
 from __future__ import annotations
 
+from bisect import bisect_right
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
-
-from ..caching import persist_scoped
 
 _INVERTIBLE = ("sum", "count", "avg")
-_SCOPE = "uwms.scale"
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
 _HIST_TYPES = (
@@ -300,69 +303,151 @@ def _pid_expr(order_col: str, borders: list):
     return F.when(key.isNull(), F.lit(0)).otherwise(tree(0, len(borders)))
 
 
+def _per_range(values: list):
+    """``values[_pid]``: one driver constant per range, as a column."""
+    return F.element_at(F.array(*[F.lit(v) for v in values]), F.col("_pid") + 1)
+
+
+def _spark_max(a, b):
+    """max as Spark orders values: NULL skipped, NaN above everything."""
+    if a is None or b is None:
+        return b if a is None else a
+    return a if a != a or (b == b and a >= b) else b
+
+
 def _ranged_with_offsets(
     df: DataFrame,
     order_by: list[str],
     value_col: str | None,
-    num_partitions: int,
+    num_partitions: int | None,
+    window: int | None = None,
+    agg: str = "sum",
+    inclusive: bool = True,
 ) -> DataFrame:
-    """Range-partition ``df`` and attach global rank (and, when
-    ``value_col`` is given, the global inclusive prefix sum ``_prefix``).
+    """The one range pass (module docstring, steps 1-5).
 
-    The returned frame is the input plus ``rank`` (dense, 0-based, in
-    ``order_by`` order) [and ``_prefix``]; internal columns are dropped.
+    Returns ``df`` plus ``rank`` (dense, 0-based, in ``order_by`` order)
+    and, when ``value_col`` is given:
 
-    The ranged frame keeps its partition id as an explicit COLUMN
-    computed from deterministic borders (not ``spark_partition_id()``,
-    which is an execution artifact), is cached for the offsets pass and
-    the rank pass, and registered in a bounded session scope (older
-    invocations' frames are evicted) — cache accumulation is bounded at
-    ~one invocation's working set, and because the whole lineage is
-    deterministic, releasing (or losing) the cache can only cost
-    recompute time, never correctness.
+    * ``window=None``: ``_prefix``, the global running ``agg`` ("sum" or
+      "max") of ``value_col`` in rank order, up to and including the row
+      (``inclusive=False``: over strictly earlier rows);
+    * ``window=l``: ``_agg``, ``agg`` (sum/count/avg/min/max) of
+      ``value_col`` over ranks [max(0, r-l+1), r], with the Window
+      path's NULL, NaN and ±inf semantics.
+
+    In window mode, rows that tie on every ``order_by`` column are
+    ordered by ``value_col`` too: every range holding copies of them then
+    sees the same value sequence, whatever order the shuffle delivers.
     """
-    spark = df.sparkSession
-    order_cols = [F.col(c) for c in order_by]
-
+    if num_partitions is None:
+        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    halo = 0 if window is None else window - 1
     borders = _deterministic_borders(df, order_by[0], num_partitions)
-    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders)).repartition(
-        num_partitions, "_pid"
-    )
-    ranged = persist_scoped(ranged, _SCOPE)
+    parts = len(borders) + 1
+    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders))
 
-    aggs = [F.count(F.lit(1)).alias("_n")]
-    integral = value_col is not None and dict(df.dtypes)[value_col] in (
-        "tinyint", "smallint", "int", "bigint",
-    )
-    if value_col is not None:
-        aggs.append(F.sum(F.col(value_col)).alias("_total"))
-    stats = sorted(
-        (tuple(r) for r in ranged.groupBy("_pid").agg(*aggs).collect()),
-        key=lambda t: t[0],
-    )
+    # Step 2: per-range row counts (and value totals for a prefix).
+    v = None if value_col is None else F.col(value_col)
+    prefix = window is None and v is not None
+    counts, totals = [0] * parts, [None] * parts
+    if parts > 1:
+        total = (F.sum(v) if agg == "sum" else F.max(v)) if prefix else F.lit(None)
+        for pid, n, t in ranged.groupBy("_pid").agg(F.count(F.lit(1)), total).collect():
+            counts[pid], totals[pid] = n, t
 
+    # Step 3: range k's first halo source is the latest range s with
+    # off[k] - off[s] >= halo; last[j] is the latest range j feeds.
+    off = list(accumulate(counts, initial=0))
+    first = [max(0, bisect_right(off, off[k] - halo, 0, k + 1) - 1) for k in range(parts)]
+    last = [bisect_right(first, j) - 1 for j in range(parts)]
+
+    # Step 4: one exchange, each row to its own range and its halo ranges.
+    if last != list(range(parts)):
+        ranged = ranged.withColumn("_pid", F.explode(F.sequence(F.col("_pid"), _per_range(last))))
+    ranged = ranged.repartition(num_partitions, "_pid")
+
+    # Step 5: one window spec per range.
+    tie = [v] if window is not None and value_col not in order_by else []
+    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_by], *tie)
+    out = ranged.withColumn(
+        "rank", (_per_range([off[s] for s in first]) + F.row_number().over(w) - 1).cast("long")
+    )
+    if prefix:
+        out = _with_prefix(out, w, v, agg, inclusive, totals, df.schema[value_col].dataType)
+    elif v is not None and agg in ("min", "max"):
+        out = _with_minmax(out, v, window, agg)
+    elif v is not None:
+        out = _with_running_diff(out, w, v, window, agg, dict(df.dtypes)[value_col])
+    if halo:
+        out = out.where(F.col("rank") >= _per_range(off[:parts]))
+    return out.drop("_pid")
+
+
+def _with_prefix(out, w, v, agg, inclusive, totals, dtype):
+    """``_prefix``: the range's carry-in (the total over all earlier
+    ranges) combined with its running sum or max."""
+    run = w.rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    if agg == "max":
+        carry = [None, *accumulate(totals[:-1], _spark_max)]
+        return out.withColumn("_prefix", F.greatest(F.max(v).over(run), _per_range(carry).cast(dtype)))
+    integral = dtype.simpleString() in _INTEGRAL
     zero = 0 if integral else 0.0
-    offset_rows, r_acc, s_acc = [], 0, zero
-    for row in stats:
-        pid, n = row[0], row[1]
-        offset_rows.append((pid, r_acc, s_acc))
-        r_acc += n
-        if value_col is not None and row[2] is not None:
-            s_acc += row[2]
-    offsets = spark.createDataFrame(
-        offset_rows,
-        f"_pid int, _rank_off long, _sum_off {'long' if integral else 'double'}",
+    carry = accumulate((zero if t is None else t for t in totals[:-1]), initial=zero)
+    return out.withColumn(
+        "_prefix",
+        _per_range(list(carry)).cast("long" if integral else "double")
+        + F.coalesce(F.sum(v).over(run), F.lit(zero)),
     )
 
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = ranged.join(F.broadcast(offsets), "_pid").withColumn(
-        "rank", (F.col("_rank_off") + F.row_number().over(w) - F.lit(1)).cast("long")
+
+def _with_minmax(out, v, window, agg):
+    """``_agg``: trailing min/max by the block decomposition of
+    ``sliding_minmax_scalable``, from running frames only."""
+    fn, pick = (F.min, F.least) if agg == "min" else (F.max, F.greatest)
+    blk = Window.partitionBy("_pid", "_blk")
+    top = Window.unboundedPreceding, Window.currentRow
+    return (
+        out.withColumn("_blk", F.expr(f"rank DIV {window}"))
+        .withColumn("_pfx", fn(v).over(blk.orderBy("rank").rowsBetween(*top)))
+        .withColumn("_sfx", fn(v).over(blk.orderBy(F.col("rank").desc()).rowsBetween(*top)))
+        .withColumn("_agg", pick(
+            "_pfx", F.lag("_sfx", window - 1).over(Window.partitionBy("_pid").orderBy("rank"))
+        ))
+        .drop("_blk", "_pfx", "_sfx")
     )
-    if value_col is not None:
-        w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        local_prefix = F.coalesce(F.sum(F.col(value_col)).over(w_run), F.lit(zero))
-        out = out.withColumn("_prefix", F.col("_sum_off") + local_prefix)
-    return out.drop("_pid", "_rank_off", "_sum_off")
+
+
+def _with_running_diff(out, w, v, window, agg, dtype):
+    """``_agg``: trailing sum/count/avg as running totals minus their
+    value ``window`` rows back (absent: the window starts at rank 0).
+    NULLs are skipped and counted apart, so a frame with no value sums to
+    NULL; non-finite doubles are counted apart from the finite sum, so
+    one that leaves the frame leaves no NaN behind."""
+    inf = float("inf")
+    runs = {"_run_n": F.count(v)}
+    if dtype in ("float", "double"):
+        runs["_run_s"] = F.sum(F.when(~F.isnan(v) & (F.abs(v) != inf), v).otherwise(0.0))
+        runs["_run_nan"] = F.count(F.when(F.isnan(v), 1))
+        runs["_run_pinf"] = F.count(F.when(v == inf, 1))
+        runs["_run_ninf"] = F.count(F.when(v == -inf, 1))
+    else:
+        runs["_run_s"] = F.sum(v)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    for name, e in runs.items():
+        out = out.withColumn(name, e.over(run))
+    d = {name: F.col(name) - F.coalesce(F.lag(name, window).over(w), F.lit(0)) for name in runs}
+    s = d["_run_s"]
+    if "_run_nan" in d:
+        s = (
+            F.when((d["_run_nan"] > 0) | ((d["_run_pinf"] > 0) & (d["_run_ninf"] > 0)), F.lit(float("nan")))
+            .when(d["_run_pinf"] > 0, F.lit(inf))
+            .when(d["_run_ninf"] > 0, F.lit(-inf))
+            .otherwise(s)
+        )
+    n = d["_run_n"]
+    s = F.when(n > 0, s)
+    return out.withColumn("_agg", {"sum": s, "count": n, "avg": s / n}[agg]).drop(*runs)
 
 
 def sliding_aggregate_scalable(
@@ -378,47 +463,20 @@ def sliding_aggregate_scalable(
     """Distributed trailing-window aggregate with no single-partition stage.
 
     Same semantics as ``window.sliding_aggregate`` (0-based rank over
-    ``order_by``; frame = rows [max(0, r-window+1), r]).  ``agg`` must be
-    invertible: sum, count, or avg.
+    ``order_by``; frame = rows [max(0, r-window+1), r]; NULL values
+    skipped, NULL sum/avg over a frame with no value).  ``agg`` must be
+    sum, count, or avg; min/max take ``sliding_minmax_scalable``.
     """
     if window < 1:
         raise ValueError("window must be >= 1")
     if agg not in _INVERTIBLE:
         raise ValueError(
             f"scalable path supports invertible aggregates {_INVERTIBLE}; "
-            f"use sliding_aggregate (Window path) or a partition_by spec for {agg!r}"
+            f"use sliding_minmax_scalable, sliding_aggregate (Window path) "
+            f"or a partition_by spec for {agg!r}"
         )
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    integral = dict(df.dtypes)[value_col] in ("tinyint", "smallint", "int", "bigint")
-    zero = 0 if integral else 0.0
-    prefix_df = _ranged_with_offsets(df, order_by, value_col, num_partitions)
-    # Both sides of the prefix-difference self-join read this frame;
-    # cache + barrier so the rank/prefix window pass runs once, not per
-    # subtree (measured ~40% of query time at sf0.1).
-    prefix_df = persist_scoped(prefix_df, _SCOPE)
-    prefix_df.count()
-    if rank_col != "rank":
-        prefix_df = prefix_df.withColumnRenamed("rank", rank_col)
-
-    # Window by prefix difference: S(r) - S(r-l).  1:1 equi-join on a
-    # unique dense key; AQE picks the physical join.
-    lookup = prefix_df.select(
-        (F.col(rank_col) + F.lit(window)).alias(rank_col),
-        F.col("_prefix").alias("_prefix_before"),
-    )
-    joined = prefix_df.join(lookup, on=rank_col, how="left")
-    win_sum = F.col("_prefix") - F.coalesce(F.col("_prefix_before"), F.lit(zero))
-    win_count = F.least(F.col(rank_col) + F.lit(1), F.lit(window)).cast("long")
-    if agg == "sum":
-        agg_expr = win_sum
-    elif agg == "count":
-        agg_expr = win_count
-    else:  # avg
-        agg_expr = win_sum / win_count
-    return joined.withColumn(agg_col, agg_expr).drop("_prefix", "_prefix_before")
+    out = _ranged_with_offsets(df, order_by, value_col, num_partitions, window=window, agg=agg)
+    return out.withColumnRenamed("rank", rank_col).withColumnRenamed("_agg", agg_col)
 
 
 def sliding_minmax_scalable(
@@ -433,68 +491,26 @@ def sliding_minmax_scalable(
 ) -> DataFrame:
     """Distributed trailing-window MIN/MAX — the non-invertible case.
 
-    Prefix-difference does not invert min/max, so this uses the classic
-    block decomposition (two-stacks / sparse-table idea, expressed in
-    SQL windows): with blocks of exactly ``window`` rows
+    Running totals do not invert min/max, so the range pass uses the
+    classic block decomposition (two-stacks / sparse-table idea,
+    expressed in SQL windows): with blocks of exactly ``window`` rows
     (block = rank DIV window), the trailing window [r-l+1, r] spans at
     most two adjacent blocks, and
 
         win_min(r) = min( suffix_min(block of r-l+1, from r-l+1),
                           prefix_min(block of r, up to r) )
 
-    Both pieces are RUNNING aggregates inside a block (one forward, one
-    backward) — per-block windows, fully parallel, O(window) rows per
-    block.  The suffix piece for rank r-l+1 is fetched with the same
-    1:1 equi self-join on a shifted rank the sum path uses.  Total: one
-    range exchange, two per-block windows, one shuffled join — no
-    replication, no single-partition stage.
+    Both pieces are RUNNING aggregates inside a block (the suffix one
+    over the block in descending order), so each row costs O(1); the
+    suffix piece at rank r-l+1 is a ``lag`` of l-1 rows within the
+    range, whose halo holds it.
     """
     if window < 1:
         raise ValueError("window must be >= 1")
     if agg not in ("min", "max"):
         raise ValueError("use sliding_aggregate_scalable for invertible aggregates")
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    agg_fn = F.min if agg == "min" else F.max
-
-    ranked = _ranged_with_offsets(df, order_by, None, num_partitions)
-    if rank_col != "rank":
-        ranked = ranked.withColumnRenamed("rank", rank_col)
-    ranked = ranked.withColumn("_blk", F.expr(f"{rank_col} DIV {window}"))
-
-    # Both pieces share ONE window spec (same partitioning + ascending
-    # order, different frames) so Spark evaluates them in a single
-    # WindowExec pass: no second exchange, no descending re-sort.
-    w_base = Window.partitionBy("_blk").orderBy(F.col(rank_col))
-    w_fwd = w_base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_bwd = w_base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    pieces = ranked.withColumn("_pfx", agg_fn(F.col(value_col)).over(w_fwd)).withColumn(
-        "_sfx", agg_fn(F.col(value_col)).over(w_bwd)
-    )
-    # Both join sides below reference `pieces`; cache it (columnar,
-    # same scope as the ranged frame) so the window pass is not
-    # evaluated per subtree — there is no common-subplan reuse across
-    # DataFrame self-joins.  The count() is the usual eager barrier so
-    # AQE's concurrent subtree stages don't race the cache population.
-    pieces = persist_scoped(pieces, _SCOPE)
-    pieces.count()
-
-    # Row r looks up the suffix piece at rank r-l+1; ship it keyed by the
-    # rank that will need it.  Rows in r's own block contribute via _pfx,
-    # so when r-l+1 falls in the same block (only possible when
-    # r-l+1 == block start) the suffix piece is redundant but harmless.
-    lookup = pieces.select(
-        (F.col(rank_col) + F.lit(window - 1)).alias(rank_col),
-        F.col("_sfx").alias("_sfx_prev"),
-    )
-    joined = pieces.join(lookup, on=rank_col, how="left")
-    win_val = F.when(
-        F.col("_sfx_prev").isNotNull(), F.least(F.col("_pfx"), F.col("_sfx_prev"))
-        if agg == "min"
-        else F.greatest(F.col("_pfx"), F.col("_sfx_prev")),
-    ).otherwise(F.col("_pfx"))
-    return joined.withColumn(agg_col, win_val).drop("_blk", "_pfx", "_sfx", "_sfx_prev")
+    out = _ranged_with_offsets(df, order_by, value_col, num_partitions, window=window, agg=agg)
+    return out.withColumnRenamed("rank", rank_col).withColumnRenamed("_agg", agg_col)
 
 
 def prefix_max_scalable(
@@ -511,58 +527,13 @@ def prefix_max_scalable(
     Streaming's watermark bookkeeping).  ``inclusive=False`` computes
     the EXCLUSIVE prefix max (max over strictly-preceding rows, NULL
     for the global first row) — the dominance test of the skyline
-    operator (`operators/skyline.pareto_frontier`): the local window
-    ends at ``-1`` and the carry-in stays the same exclusive
-    per-partition composition.
+    operator (`operators/skyline.pareto_frontier`).
 
-    Same two-pass shape as `_ranged_with_offsets` (O8/O13 in the
-    reference, `SlidingAggregation.java:159-168,305-310`): range
-    partition by deterministic borders, per-partition MAX (P-row
-    collect), driver computes each partition's EXCLUSIVE carry-in max,
-    broadcast back, per-partition running max window, combine with
-    ``greatest``.  Unlike prefix sums max has no inverse, but carry-in
-    composition is associative all the same — O(n/P) per machine,
-    O(P) driver.
+    The range pass's prefix mode with a MAX total per range: each range
+    starts from the max of all earlier ranges (its carry-in) — max has
+    no inverse, but carry-in composition is associative all the same.
     """
-    order_cols = [F.col(c) for c in order_by]
-    borders = _deterministic_borders(df, order_by[0], num_partitions)
-    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders)).repartition(
-        num_partitions, "_pid"
+    out = _ranged_with_offsets(
+        df, order_by, value_col, num_partitions, agg="max", inclusive=inclusive
     )
-    ranged = persist_scoped(ranged, _SCOPE)
-    stats = sorted(
-        (tuple(r) for r in ranged.groupBy("_pid").agg(
-            F.max(F.col(value_col)).alias("_mx")).collect()),
-        key=lambda t: t[0],
-    )
-    carry_rows, acc = [], None
-    for pid, mx in stats:
-        carry_rows.append((pid, acc))
-        if mx is not None and (acc is None or mx > acc):
-            acc = mx
-    # Carry column keeps the VALUE column's type — a hardcoded 'long'
-    # would silently retype (or fail createDataFrame for) int/timestamp/
-    # double inputs (ADVICE r7).
-    carry_schema = StructType(
-        [
-            StructField("_pid", IntegerType(), False),
-            StructField("_carry", df.schema[value_col].dataType, True),
-        ]
-    )
-    carries = df.sparkSession.createDataFrame(carry_rows, carry_schema)
-    w_run = Window.partitionBy("_pid").orderBy(*order_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow if inclusive else -1
-    )
-    local = F.max(F.col(value_col)).over(w_run)
-    if inclusive:
-        out = F.greatest(local, F.coalesce(F.col("_carry"), local))
-    else:
-        # Either side may be NULL (first row of a partition / first
-        # partition); Spark's greatest skips NULLs, so this is the
-        # exclusive max of whichever exist, NULL only when neither does.
-        out = F.greatest(local, F.col("_carry"))
-    return (
-        ranged.join(F.broadcast(carries), "_pid")
-        .withColumn(out_col, out)
-        .drop("_pid", "_carry")
-    )
+    return out.withColumnRenamed("_prefix", out_col).drop("rank")
