@@ -71,8 +71,10 @@ def _window_model(rows, window, agg):
     out = set()
     for r, (key, _) in enumerate(ordered):
         win = [v for _, v in ordered[max(0, r - window + 1): r + 1]]
-        a = {"sum": sum, "count": len, "min": min, "max": max}.get(agg)
-        out.add((r, key, a(win) if a else sum(win) / len(win)))
+        if agg == "avg":
+            out.add((r, key, sum(win) / len(win)))
+        else:
+            out.add((r, key, {"sum": sum, "count": len, "min": min, "max": max}[agg](win)))
     return out
 
 
