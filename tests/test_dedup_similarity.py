@@ -284,7 +284,8 @@ def test_jaccard_max_df_prunes_hot_shingle(spark):
     assert near(None) == near(8) == {(0, 1)}
 
 
-def test_triangle_counts_known_graphs(spark):
+def test_triangle_counts_known_graphs(spark, monkeypatch):
+    from uw_mapreduce_spark.operators import graph
     from uw_mapreduce_spark.operators.graph import triangle_counts
 
     # K4: every vertex sits in C(3,2) = 3 triangles; 4 triangles total.
@@ -294,6 +295,28 @@ def test_triangle_counts_known_graphs(spark):
     got = {r["v"]: r["n_triangles"] for r in triangle_counts(k4).collect()}
     assert got == {0: 3, 1: 3, 2: 3, 3: 3}
     assert sum(got.values()) // 3 == 4
+    # The broadcast bound caps the closing-edge broadcast too: K4's 6
+    # edges lie between the bound 4 and twice it, so the closing join
+    # must shuffle (auto-broadcast off, so only a forced hint could
+    # broadcast) and give the same counts.
+    monkeypatch.setattr(graph, "_BCAST_MAX_ROWS", 4)
+    confs = ("spark.sql.autoBroadcastJoinThreshold",
+             "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k in confs:
+            spark.conf.set(k, "-1")
+        capped = triangle_counts(k4)
+        assert {r["v"]: r["n_triangles"] for r in capped.collect()} == got
+        plan = capped._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert not [ln for ln in plan.splitlines()
+                if "BroadcastHashJoin" in ln and "LeftSemi" in ln], plan
     # A path has no triangles; result is empty.
     path = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
     assert triangle_counts(path).count() == 0

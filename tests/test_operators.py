@@ -4,14 +4,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from uw_mapreduce_spark.operators import (
-    bernoulli_sample,
-    equi_depth_borders,
-    global_rank,
-    global_rank_scalable,
-    rebalance_by_rank,
-    total_sort,
-)
+from uw_mapreduce_spark.operators.partitioning import rebalance_by_rank, total_sort
+from uw_mapreduce_spark.operators.rank import global_rank, global_rank_scalable
+from uw_mapreduce_spark.operators.sampling import bernoulli_sample, equi_depth_borders
 
 
 def kv(spark, rows):

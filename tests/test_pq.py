@@ -4,6 +4,7 @@ determinism, encode round-trip properties, ADC + re-rank recall floor.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from uw_mapreduce_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
@@ -25,6 +26,10 @@ def test_pq_codebook_shape_and_determinism(spark, sf_small):
 def test_pq_encode_codes_valid_and_more_iterations_cut_mse(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
     cb0 = pq_train(emb, m=8, k=16, iterations=0)  # raw seeds
+    # The zero-step codebook takes the scoped persist too.  storageLevel,
+    # not is_cached: an equal plan cached earlier in the session is shared
+    # without a new persist() on this handle.
+    assert cb0.storageLevel != StorageLevel.NONE
     cb2 = pq_train(emb, m=8, k=16, iterations=2)
     mse = {}
     for name, cb in (("seed", cb0), ("lloyd", cb2)):

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from uw_mapreduce_spark.sources.sinks import write_bucketed, write_table
 from uw_mapreduce_spark.sources.tables import load_table
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_partitioned_write_prunes(spark, sf_small):
     orders = load_table(spark, sf_small, "orders").withColumn(
@@ -68,6 +70,48 @@ def test_cli_end_to_end_matches_golden(reference_dir):
         with open(path) as f:
             golden |= {tuple(map(int, line.split("\t"))) for line in f if line.strip()}
     assert got == golden
+
+
+def test_cli_scalable_matches_model(tmp_path):
+    """Mount-free CLI run of the scalable path: the simple103 analogue
+    keys as ``key\tvalue`` text, window 79 over 4 ranges, parsed output
+    equal to the Python model of the reference query."""
+    from tests.test_golden_reference import _window_model
+
+    keys = [(i * 37) % 102 for i in range(102)] + [50]
+    rows = [(k, k) for k in keys]
+    src = tmp_path / "simple103.txt"
+    src.write_text("".join(f"{k}\t{v}\n" for k, v in rows))
+    out = str(tmp_path / "out")
+    r = subprocess.run(
+        [
+            sys.executable, "-m", "uw_mapreduce_spark", str(src), out, "--scalable",
+            "--window", "79", "--partitions", "4", "--master", "local[2]",
+        ],
+        capture_output=True, text=True, cwd=REPO, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    got = set()
+    for path in glob.glob(f"{out}/part-*"):
+        with open(path) as f:
+            got |= {tuple(map(int, line.split("\t"))) for line in f if line.strip()}
+    assert got == _window_model(rows, 79, "sum")
+
+
+def test_cli_modules_import_without_pandas():
+    """The CLI's modules load without the rest of the operator surface:
+    importing them in a fresh interpreter (no JVM) pulls in neither
+    pandas nor the similarity operators."""
+    code = (
+        "import sys\n"
+        "import uw_mapreduce_spark.session, uw_mapreduce_spark.sources.text_kv\n"
+        "import uw_mapreduce_spark.operators.window, uw_mapreduce_spark.operators.scale\n"
+        "print(sorted({'pandas', 'uw_mapreduce_spark.operators.similarity'} & set(sys.modules)))\n"
+    )
+    r = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                       cwd=REPO, timeout=120)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.strip() == "[]", r.stdout
 
 
 def test_csv_json_roundtrip(spark, sf_small):

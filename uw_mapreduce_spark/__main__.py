@@ -75,10 +75,8 @@ def main(argv: list[str] | None = None) -> int:
         result.write.mode("overwrite").option("header", True).csv(args.output)
     else:
         result.write.mode("overwrite").parquet(args.output)
-    n = spark.read.text(args.output).count() if args.format == "text" else None
     print(f"wrote {args.output} (window={args.window}, agg={args.agg}, "
-          f"path={'scalable' if args.scalable else 'window'})"
-          + (f", {n} lines" if n is not None else ""))
+          f"path={'scalable' if args.scalable else 'window'})")
     spark.stop()
     return 0
 

@@ -1,123 +1,2 @@
-from .anomaly import rolling_zscore_anomalies
-from .classify import label_centroid_sums, nearest_centroid_classify
-from .debounce import debounce
-from .funnel import funnel_steps
-from .sessions import sessionize_capped
-from .skyline import pareto_frontier
-from .bpe import bpe_encode, bpe_train
-from .diff import diff_summary, table_diff, table_diff_columns
-from .evaluation import binary_centroid_scores, gains_table, kfold_centroid_cv, roc_auc
-from .heavyhitters import exact_heavy_hitters
-from .intervals import coalesce_intervals
-from .lm import bigram_lm_scores
-from .graph import bfs_hops, k_core, pagerank, personalized_pagerank, triangle_counts
-from .dedup import ppjoin_pairs, sorted_neighborhood_pairs
-from .profile import profile_columns
-from .bloomjoin import bloom_build, bloom_prune, bloom_semi_join
-from .merge import apply_changelog, incremental_rollup, scd2_intervals
-from .packing import chunk_documents, deterministic_shuffle, pack_documents
-from .partitioning import range_partition, rebalance_by_rank, sort_within_partitions, total_sort
-from .rank import global_rank, global_rank_scalable, grouped_quantiles, grouped_weighted_median, ntile_scalable
-from .pq import ivf_pq_topk, pq_adc_topk, pq_encode, pq_train
-from .quantize import quantize_embeddings_int8, quantize_stats_int8, standardize_embeddings
-from .sampling import (
-    bernoulli_sample,
-    equi_depth_borders,
-    mixture_sample,
-    order_statistic_bounds,
-    pps_sample,
-    systematic_sample,
-    temperature_mixture_sample,
-    winsorized_summary,
-)
-from .zorder import z_value, zorder_by, zorder_by_n
-from .window import sliding_aggregate
-from .retrieval import bm25_topk, rrf_fuse
-from .scale import sliding_aggregate_scalable
-from .similarity import load_ann_index, save_ann_index
-from .sketch import count_min_estimates
-from .split import hash_sample, hash_split
-from .resample import (
-    clamped_running_sum,
-    ewma_keyed,
-    gap_fill_interpolate,
-    gap_fill_locf,
-)
-
-__all__ = [
-    "bfs_hops",
-    "debounce",
-    "funnel_steps",
-    "clamped_running_sum",
-    "ewma_keyed",
-    "gap_fill_interpolate",
-    "grouped_quantiles",
-    "grouped_weighted_median",
-    "k_core",
-    "label_centroid_sums",
-    "nearest_centroid_classify",
-    "ntile_scalable",
-    "pareto_frontier",
-    "personalized_pagerank",
-    "sessionize_capped",
-    "sorted_neighborhood_pairs",
-    "standardize_embeddings",
-    "systematic_sample",
-    "temperature_mixture_sample",
-    "apply_changelog",
-    "ivf_pq_topk",
-    "mixture_sample",
-    "pps_sample",
-    "pq_adc_topk",
-    "pq_encode",
-    "pq_train",
-    "quantize_embeddings_int8",
-    "quantize_stats_int8",
-    "bernoulli_sample",
-    "bigram_lm_scores",
-    "bloom_build",
-    "bpe_encode",
-    "bpe_train",
-    "bloom_prune",
-    "bloom_semi_join",
-    "bm25_topk",
-    "rrf_fuse",
-    "chunk_documents",
-    "coalesce_intervals",
-    "count_min_estimates",
-    "deterministic_shuffle",
-    "equi_depth_borders",
-    "global_rank",
-    "hash_sample",
-    "hash_split",
-    "binary_centroid_scores",
-    "gains_table",
-    "kfold_centroid_cv",
-    "roc_auc",
-    "exact_heavy_hitters",
-    "incremental_rollup",
-    "global_rank_scalable",
-    "order_statistic_bounds",
-    "pack_documents",
-    "pagerank",
-    "ppjoin_pairs",
-    "range_partition",
-    "profile_columns",
-    "rebalance_by_rank",
-    "load_ann_index",
-    "rolling_zscore_anomalies",
-    "save_ann_index",
-    "scd2_intervals",
-    "sliding_aggregate",
-    "sliding_aggregate_scalable",
-    "table_diff",
-    "table_diff_columns",
-    "diff_summary",
-    "triangle_counts",
-    "sort_within_partitions",
-    "total_sort",
-    "winsorized_summary",
-    "z_value",
-    "zorder_by",
-    "zorder_by_n",
-]
+"""Distributed operators, one module each; import them from their submodule
+(``from uw_mapreduce_spark.operators.scale import ...``)."""

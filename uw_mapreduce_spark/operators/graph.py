@@ -248,7 +248,7 @@ def triangle_counts(
     # the single biggest exchange in the triangle faces).  Above the
     # bound, the r7-OOM-safe est-sized wedge exchange stands unchanged.
     n_edges = und.count()
-    if n_edges <= 2 * _BCAST_MAX_ROWS:
+    if n_edges <= _BCAST_MAX_ROWS:
         tris = wedges.join(F.broadcast(closing), ["x", "y"], "left_semi")
     else:
         tris = wedges.repartition(parts, "x", "y").join(

@@ -74,7 +74,7 @@ def _assign_codes(sv: DataFrame, codebook: DataFrame) -> DataFrame:
     rewrite was A/B'd and reverted — higher-order candidate scans never
     reach codegen, and downstream inlining (posexplode, pushed filters)
     re-evaluates the interpreted scan per consumer (measured 650 s CPU
-    on one task vs ~7 s for this shape; AB_r11.json)."""
+    on one task vs ~7 s for this shape; commit e389d0c)."""
     cand = sv.join(F.broadcast(codebook), "sub").select(
         "vid",
         "sub",
@@ -126,8 +126,6 @@ def pq_train(
     codebook = sv.join(F.broadcast(seed_ids), "vid").select(
         "sub", "code", F.col("sv").alias("cv")
     )
-    if not iterations:
-        return codebook
     # Per Lloyd step: the argmin carries each winner's sub-vector out
     # of `_assign_codes` (the former shape re-joined assignments
     # against the sub-vector frame — one (vid, sub)-keyed exchange +

@@ -46,7 +46,7 @@ def sliding_events(spark: SparkSession, sf_dir: str, window: int = DEFAULT_WINDO
 
 
 def sliding_events_scalable(spark: SparkSession, sf_dir: str, window: int = DEFAULT_WINDOW) -> DataFrame:
-    """Two-pass mapPartitions path — no single-partition stage (100 TB)."""
+    """The range pass — no single-partition stage (100 TB)."""
     out = sliding_aggregate_scalable(
         _events_prepared(spark, sf_dir),
         order_by=["ts", "event_id"],
