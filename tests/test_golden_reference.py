@@ -205,8 +205,8 @@ def test_borders_histogram_partitioning_invariant(spark):
     """The histogram border pass must be a pure function of the data
     MULTISET: identical borders whatever the input partitioning (its
     aggregates are all commutative), identical across repeated calls,
-    and types the histogram cannot bin (strings, non-finite doubles)
-    must fall back to the exact path and still yield sorted borders."""
+    strings (which the histogram cannot bin) take the exact path, and
+    non-finite doubles still yield sorted borders."""
     from pyspark.sql import functions as F
 
     from uw_mapreduce_spark.operators.scale import _deterministic_borders
@@ -224,8 +224,8 @@ def test_borders_histogram_partitioning_invariant(spark):
     bs = _deterministic_borders(df, "s", 8)
     assert bs == sorted(bs) and bs == _deterministic_borders(df, "s", 8)
 
-    # Non-finite doubles: bin width would be infinite; exact fallback
-    # must kick in and produce usable borders.
+    # Non-finite doubles: ±inf take the log-scale histogram's two
+    # extreme buckets and the finite keys still produce usable borders.
     inf = spark.range(10_000).select(
         F.when(F.col("id") % 100 == 0, F.lit(float("inf")))
         .when(F.col("id") % 100 == 1, F.lit(float("-inf")))

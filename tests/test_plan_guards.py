@@ -230,3 +230,85 @@ def test_scalable_minmax_uses_running_frames_only(spark):
         _kv_frame(spark), ["key", "value"], "value", 91, agg="min", num_partitions=4
     )
     assert "unboundedfollowing" not in _plan(out).lower()
+
+
+def _uniform_long_frame(spark, n=20_000):
+    import pyspark.sql.functions as F
+
+    return spark.range(n).select(F.xxhash64("id").alias("k"), (F.col("id") % 100).alias("v"))
+
+
+def test_scalable_pass_job_count(spark):
+    """The range pass is one border-histogram job plus the consumer's
+    own action: scalable sum (l=91, P=8) and global rank, each through a
+    noop write, launch ≤ 4 Spark jobs (a groupBy collect and a shuffled
+    write are two jobs each under AQE).  The separate min/max stats scan
+    and the P-row count scan are gone."""
+    from uw_mapreduce_spark.operators.rank import global_rank_scalable
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
+
+    sc = spark.sparkContext
+    df = _uniform_long_frame(spark)
+    calls = {
+        "sum": lambda: sliding_aggregate_scalable(df, ["k"], "v", 91, num_partitions=8),
+        "rank": lambda: global_rank_scalable(df, ["k"], num_partitions=8),
+    }
+    for name, call in calls.items():
+        group = f"scalable-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            call().write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 4, (name, len(jobs))
+
+
+def test_murmur3_port_matches_spark_hash(spark):
+    """The driver's port of Murmur3_x86_32.hashInt is Spark's hash()."""
+    import pyspark.sql.functions as F
+
+    from uw_mapreduce_spark.operators.scale import _murmur3_int
+
+    got = spark.range(-1000, 1001).select(F.hash(F.col("id").cast("int"))).collect()
+    assert [r[0] for r in got] == [_murmur3_int(i) for i in range(-1000, 1001)]
+
+
+def test_range_codes_hit_distinct_shuffle_tasks():
+    """code[k] ≡ k (mod parts) and the codes' hash partitions differ, for
+    every range count up to P, so no two ranges share a shuffle task."""
+    from uw_mapreduce_spark.operators.scale import _murmur3_int, _range_codes
+
+    for p in range(1, 65):
+        for parts in {1, (p + 1) // 2, p}:
+            codes = _range_codes(parts, p)
+            assert [c % parts for c in codes] == list(range(parts)), (parts, p)
+            assert len({_murmur3_int(c) % p for c in codes}) == parts, (parts, p)
+
+
+def test_scalable_pass_one_range_per_task(spark):
+    """At P=8 on uniform keys every range windows in a task of its own:
+    8 non-empty shuffle partitions, each one contiguous block of ranks
+    (plain pids 0..7 hash into only 5 of the 8)."""
+    import pyspark.sql.functions as F
+
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
+
+    out = sliding_aggregate_scalable(_uniform_long_frame(spark), ["k"], "v", 91, num_partitions=8)
+    blocks = (
+        out.withColumn("p", F.spark_partition_id())
+        .groupBy("p")
+        .agg(F.min("rank").alias("lo"), F.max("rank").alias("hi"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    assert len(blocks) == 8, blocks
+    assert all(b["hi"] - b["lo"] + 1 == b["n"] for b in blocks), blocks
+
+
+def test_prefix_max_scalable_defaults_to_shuffle_partitions(spark):
+    """prefix_max_scalable resolves num_partitions=None like its
+    siblings: the session's shuffle partitions, not a fixed 32."""
+    from uw_mapreduce_spark.operators.scale import prefix_max_scalable
+
+    out = prefix_max_scalable(_uniform_long_frame(spark, 2000), ["k"], "v")
+    assert out.rdd.getNumPartitions() == int(spark.conf.get("spark.sql.shuffle.partitions"))

@@ -141,6 +141,74 @@ def test_borders_partition_invariants(spark, key_mults, p):
     ).orderBy("_pid").collect()
     for a, b in zip(bounds, bounds[1:]):
         assert a["hi"] < b["lo"]
+    # the histogram's exact rows per range
+    assert borders.counts == _range_rows(tagged, len(borders) + 1)
+
+
+def _range_rows(tagged, parts, value=None):
+    """Rows (or sum and max of ``value``) per ``_pid``, 0 / None for an
+    empty range."""
+    import pyspark.sql.functions as F
+
+    if value is None:
+        got = dict(tagged.groupBy("_pid").count().collect())
+        return [got.get(j, 0) for j in range(parts)]
+    agged = tagged.groupBy("_pid").agg(F.sum(value), F.max(value)).collect()
+    got = {r[0]: (r[1], r[2]) for r in agged}
+    return [got.get(j, (None, None)) for j in range(parts)]
+
+
+def _check_exact_counts(df, p):
+    """``counts`` and the sum/max ``totals`` of the borders equal a
+    groupBy over the ranges ``_pid_expr`` routes rows to."""
+    from uw_mapreduce_spark.operators.scale import _deterministic_borders, _pid_expr
+
+    borders = _deterministic_borders(df, "k", p)
+    parts = len(borders) + 1
+    tagged = df.withColumn("_pid", _pid_expr("k", borders))
+    assert borders.counts == _range_rows(tagged, parts)
+    want = _range_rows(tagged, parts, "v")
+    for i, agg in enumerate(("sum", "max")):
+        b = _deterministic_borders(df, "k", p, value_col="v", agg=agg)
+        assert b == borders and b.counts == borders.counts
+        assert [t if t == t else "nan" for t in b.totals] == [
+            w[i] if w[i] == w[i] else "nan" for w in want
+        ], agg
+    return borders
+
+
+def test_border_counts_exact_on_special_keys(spark):
+    """Exact per-range counts and value totals on the key shapes the
+    histogram must place correctly: NULL, NaN, ±inf and signed zeros
+    (NULL in range 0, NaN in the last), a heavy key, a one-month span of
+    µs timestamps (one or two log-scale buckets before refinement) and
+    strings (the exact fallback)."""
+    import pyspark.sql.functions as F
+
+    nan, inf = float("nan"), float("inf")
+    special = [None, nan, inf, -inf, -0.0, 0.0] + [float(i) for i in range(-40, 40)]
+    rows = [(k, float(i % 7) - 3) for i, k in enumerate(special * 4)]
+    b = _check_exact_counts(spark.createDataFrame(rows, "k double, v double"), 6)
+    assert len(b) == 5 and b.counts[0] >= 4 and b.counts[-1] >= 4
+
+    ids = spark.range(6000)
+    heavy = ids.select(
+        F.when(F.col("id") < 4000, F.lit(7)).otherwise(F.col("id")).cast("long").alias("k"),
+        (F.col("id") % 13).alias("v"),
+    )
+    assert _check_exact_counts(heavy, 8)[0] == 7
+
+    month_us = 31 * 86_400 * 10**6
+    ts = ids.select(
+        F.timestamp_micros(F.lit(1_700_000_000_000_000) + F.pmod(F.xxhash64("id"), F.lit(month_us)))
+        .alias("k"),
+        F.col("id").alias("v"),
+    )
+    counts = _check_exact_counts(ts, 8).counts
+    assert len(counts) == 8 and max(counts) * 8 < 1.15 * 6000, counts
+
+    strings = ids.select(F.col("id").cast("string").alias("k"), F.col("id").alias("v"))
+    assert len(_check_exact_counts(strings, 8)) == 7
 
 
 pack_strategy = st.lists(st.integers(0, 50), min_size=1, max_size=30)

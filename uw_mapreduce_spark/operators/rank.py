@@ -89,11 +89,11 @@ def global_rank_scalable(
     """0-based global rank with no single-partition stage (100 TB path).
 
     Plan: the range pass of ``scale._ranged_with_offsets`` with no
-    halo — deterministic histogram borders on ``order_by[0]`` (≈
-    reference Sample+Sort jobs), per-range counts collected as P tiny
-    rows (≈ O8 sentinel counts), one range exchange, and each range's
-    driver-side rank offset added to its per-range row_number (≈ O9
-    prefix-count ranking) — entirely JVM-side, no join.
+    halo — deterministic histogram borders on ``order_by[0]`` with
+    exact per-range counts from the same buckets (≈ reference
+    Sample+Sort jobs and O8 sentinel counts), one range exchange, and
+    each range's driver-side rank offset added to its per-range
+    row_number (≈ O9 prefix-count ranking) — entirely JVM-side, no join.
     """
     from .scale import _ranged_with_offsets
 

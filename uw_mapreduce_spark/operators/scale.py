@@ -13,35 +13,39 @@ catalog prefix faces — reads its rows from ONE range pass,
 ``_ranged_with_offsets``, which stays entirely JVM-side (no Python row
 serialization anywhere):
 
-  1. deterministic range borders — a bounded border pass (the
-     reference's Sample job re-derived as a commutative min/max/count
-     histogram, see ``_deterministic_borders``).  Range j holds keys in
-     (b_{j-1}, b_j], so every key of range j precedes every key of
-     range j+1.  The borders are a pure function of the data, so a
+  1. deterministic range borders with EXACT per-range totals — one
+     bounded histogram job (plus ≤2 refinement jobs for narrow or
+     clustered keys), see ``_deterministic_borders``.  It merges the
+     reference's Sample job with the per-partition counts its Rank round
+     takes in-band (:159-168).  Range j holds keys in (b_{j-1}, b_j], so
+     every key of range j precedes every key of range j+1.  Borders are
+     histogram interval maxima, so every interval lies inside one range
+     and adds its row count — and, for a prefix consumer, its value
+     total (sum, or max): the reference's partition totals (:305-310) —
+     to that range.  The borders are a pure function of the data, so a
      recompute routes every row identically — it can never re-border
      mid-query (which Spark's randomly-seeded RangePartitioner could).
-  2. one P-row aggregate per range — the row count, plus the prefix
-     consumer's value total (sum, or max) — collected to the driver:
-     the reference's in-band sentinel counts (:159-168) and partition
-     totals (:305-310).
-  3. on the driver: each range's rank offset, its carry-in (prefix
+  2. on the driver: each range's rank offset, its carry-in (prefix
      consumers) and its halo sources (trailing windows of l rows): the
      ranges just before it whose exact row counts add up to ≥ l-1.
-  4. ONE exchange.  Each row goes to its own range and, through
+  3. ONE exchange.  Each row goes to its own range and, through
      ``explode(sequence(pid, last[pid]))``, to each later range whose
      trailing l-1 rows reach back into it — the reference's bounded
      replication (`remotelyRelevantReducers` and the replication loop,
      :257-303).  Halo rows per range ≤ l-1 plus one preceding range.
-  5. one window spec per range (PARTITION BY range ORDER BY key): the
+     Range k travels as ``_pid = code[k]`` (``_range_codes``): code[k] ≡
+     k (mod ranges), chosen on the driver so that no two ranges share a
+     shuffle partition of ``repartition(P, _pid)``.
+  4. one window spec per range (PARTITION BY range ORDER BY key): the
      rank is a driver constant plus ``row_number``; sum/count/avg are
      running totals minus their ``lag(·, l)`` (O(1) per row); min/max
      use the block decomposition (blocks of l ranks: a running prefix,
      a descending running suffix and ``lag(suffix, l-1)``); prefix
      consumers add the carry-in.  Only each range's own rows are kept.
 
-No cache, no ``count()`` barrier and no join: a pass is its border jobs,
-one stats job and the consumer's own action.  Per-task memory is
-O(n/P + l + one range); the driver holds O(P) values.
+No cache, no ``count()`` barrier and no join: a pass is its border jobs
+and the consumer's own action.  Per-task memory is O(n/P + l + one
+range); the driver holds O(P) values.
 
 Integer values accumulate in int64 (the reference's int32 overflow
 fixed — SURVEY.md §2.3.5); floats accumulate in double.
@@ -67,129 +71,168 @@ _HIST_TYPES = (
 
 def _as_double(key, dtype: str):
     """Order-preserving double image of a key, for histogram binning only
-    (borders themselves are exact values of the original type).  Temporal
-    types go through microseconds-since-epoch; timestamp_ntz is read in
-    the session zone, which is constant within a session so the image is
-    stable for any recompute (and binning error can only cost balance,
-    never correctness — routing compares exact key values)."""
+    (borders themselves are exact values of the original type).  Every
+    image is monotone non-decreasing in the key, which the exact range
+    counts rely on: temporal types go through their epoch offset,
+    timestamp_ntz as a zone-free interval from the epoch (a cast to
+    timestamp would follow the session zone's DST jumps out of order)."""
     if dtype == "date":
         return F.unix_date(key).cast("double")
     if dtype == "timestamp":
         return F.unix_micros(key).cast("double")
     if dtype == "timestamp_ntz":
-        return F.unix_micros(key.cast("timestamp")).cast("double")
+        since = key - F.expr("TIMESTAMP_NTZ'1970-01-01 00:00:00'")
+        return since.cast("interval second").cast("decimal(20,6)").cast("double")
     return key.cast("double")
 
 
-def _borders_from_intervals(intervals, n: int, num_partitions: int) -> list:
-    """Equi-depth walk over disjoint (count, min, max) intervals sorted
-    by key: border i is the top key of the interval where cumulative
-    EXACT row count crosses i·n/P — `chooseBorders`
+def _borders_from_intervals(intervals, n: int, num_partitions: int):
+    """Equi-depth walk over disjoint (count, max) intervals sorted by
+    key: border i is the top key of the interval where cumulative EXACT
+    row count crosses i·n/P — `chooseBorders`
     (`SlidingAggregation.java:75-83`) with intervals in place of sample
-    elements.  Borders are actual data values (interval maxima)."""
+    elements.  Borders are actual data values (interval maxima), so
+    every interval lies inside one range.  Returns the borders and the
+    range of each interval."""
     borders: list = []
+    ranges: list[int] = []
     cum, j = 0, 1
-    for cnt, mn, mx in intervals:
+    for cnt, mx in intervals:
+        ranges.append(len(borders))
         cum += cnt
-        while j < num_partitions and cum * num_partitions >= j * n:
-            if not borders or mx > borders[-1]:
-                borders.append(mx)
-            j += 1
-        if j >= num_partitions:
-            break
-    return borders
+        if j < num_partitions and cum * num_partitions >= j * n:
+            borders.append(mx)
+            j = cum * num_partitions // n + 1  # the next threshold not yet crossed
+    return borders, ranges
+
+
+class _Borders(list):
+    """Sorted border values — range j holds keys in (b_{j-1}, b_j] —
+    carrying each range's exact row count (``counts``) and value total
+    (``totals``: the sum or max of the requested value; None without
+    one).  NULL keys count in range 0 and NaN keys in the last, where
+    ``_pid_expr`` routes them.  A single range needs no offsets: when
+    there are no borders, the counts are only filled in if the
+    histogram had them anyway."""
+
+    def __init__(self, borders=(), counts=None, totals=None):
+        super().__init__(borders)
+        self.counts = counts or [0] * (len(self) + 1)
+        self.totals = totals or [None] * (len(self) + 1)
+
+
+def _spark_sum(a, b):
+    """sum as Spark aggregates it: NULL skipped."""
+    return b if a is None else a if b is None else a + b
+
+
+def _spark_max(a, b):
+    """max as Spark orders values: NULL skipped, NaN above everything."""
+    if a is None or b is None:
+        return b if a is None else a
+    return a if a != a or (b == b and a >= b) else b
+
+
+# Per-range value totals of the prefix consumers: the Spark aggregate
+# and the driver fold that combines its partial results.
+_TOTALS = {"sum": (F.sum, _spark_sum), "max": (F.max, _spark_max)}
 
 
 def _borders_histogram(
-    keyed: DataFrame, dtype: str, num_partitions: int, buckets_per_partition: int
-) -> list:
-    """Equi-depth borders from a deterministic bounded histogram.
+    keyed: DataFrame, dtype: str, num_partitions: int, buckets_per_partition: int, agg
+) -> _Borders | None:
+    """Equi-depth borders with exact per-range counts and totals, from a
+    deterministic bounded histogram; None when the key's double image
+    cannot tell keys apart (bigints or decimals equal above 2^-53 of
+    their magnitude), which takes the exact fallback.
 
-    One stats aggregate (count/min/max — one scan, P tiny partials),
-    then one histogram aggregate ``groupBy(bucket)`` over
-    B = buckets_per_partition·P fixed-width buckets — map-side combine
-    caps each task's shuffle output at B rows, so unlike an exact
-    distinct-key aggregate the shuffle is O(maps·B) REGARDLESS of key
-    cardinality (the round-3 fix: a near-unique key no longer shuffles
-    ~n rows before the real range exchange).  Every aggregate used
-    (count/min/max) is commutative, so the result — and therefore the
-    partitioning — is a pure function of the data multiset, independent
-    of task order or input partitioning.
+    Level 0 needs no min/max pass: ONE ``groupBy(bucket)`` over the
+    monotone log-scale image ``floor(signum(x)·log2(1+|x|)·s)`` of the
+    key's double image x (one ``log2`` per row), with s = max(16, 2P)
+    buckets per binary octave; ±inf take the two extreme buckets, and
+    NULL keys and NaN keys are two more groups of the same job.
+    Map-side combine caps each task's shuffle output at the populated
+    buckets — at most 2·1025·s + 2 for any double — so the shuffle does
+    not grow with key cardinality.  Every aggregate (count/min/max and
+    the value total) is commutative, so the borders — and therefore the
+    partitioning — are a pure function of the data multiset,
+    independent of task order or input partitioning.
 
     Overweight buckets (count > n/4P, more than one distinct key) are
-    refined in ≤2 further bounded passes of 64 sub-buckets each over the
-    ACTUAL per-bucket [min, max] span; a bucket that narrows to
-    min == max is a heavy key seen with its EXACT count, so a hot key
-    pulls borders toward equal row counts and gets its range to itself
-    (equal keys must share a partition — extreme skew yielding fewer
-    than P ranges IS the equal-rows optimum).  At most 4P buckets can
-    exceed n/4P, so each refinement collects ≤ 4P·64 rows: driver bytes
-    stay O(P), n-independent.
+    refined in ≤2 further passes, each splitting them linearly over
+    their ACTUAL [min, max] image.  At most 4P buckets can exceed n/4P;
+    each pass collects ≤ 4P·max(8, buckets_per_partition) rows and gives
+    the pending buckets as many children as that allows (≥ 64 each at
+    the default), so a narrow key span — one month of µs timestamps sits in
+    one or two level-0 buckets — is split as finely as a wide one.  A
+    bucket that narrows to min == max is a heavy key seen with its
+    EXACT count, so a hot key pulls borders toward equal row counts and
+    gets its range to itself (equal keys must share a partition —
+    extreme skew yielding fewer than P ranges IS the equal-rows
+    optimum).  Driver rows stay O(P), n-independent.
+
+    The images are monotone, so the final intervals are disjoint and
+    ordered by their bucket path (level-0 bucket, child, grandchild).
+    Borders are interval maxima, so each range's count and total is the
+    sum over the intervals inside it.
     """
     key = F.col("_k")
     kd = _as_double(key, dtype)
-    if dtype in ("float", "double"):
-        # NaN sorts above every value in Spark; excluded here, NaN rows
-        # fall past every border into the last range — the sort-correct
-        # placement — without poisoning min/max/binning.
-        keyed = keyed.where(~F.isnan(key))
-    stats = keyed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(key).alias("mn"), F.max(key).alias("mx"),
-        F.min(kd).alias("mnd"), F.max(kd).alias("mxd"),
-    ).collect()[0]
-    n = stats["n"]
-    if n == 0 or stats["mn"] == stats["mx"]:
-        return []
-    import math
+    nan = F.isnan(key) if dtype in ("float", "double") else F.lit(False)
+    total, fold = _TOTALS[agg] if agg else (lambda _v: F.lit(None), _spark_sum)
+    aggs = [F.count(F.lit(1)), F.min(key), F.max(key), F.min(kd), F.max(kd), total(F.col("_v"))]
 
-    mnd, mxd = float(stats["mnd"]), float(stats["mxd"])
-    if not (mxd > mnd) or not (math.isfinite(mnd) and math.isfinite(mxd)):
-        # Double images collapse (bigints differing only below 2^-53 of
-        # their magnitude) or are non-finite (±Infinity keys make every
-        # bin width infinite): binning cannot discriminate — exact
-        # fallback.
-        return _borders_exact(keyed, n, num_partitions, buckets_per_partition)
-
-    level0 = max(2 * num_partitions, buckets_per_partition * num_partitions)
-    child_b = max(8, min(64, buckets_per_partition))
+    s = float(max(16, 2 * num_partitions))
+    level0 = F.when(~nan, F.floor(F.signum(kd) * F.log2(F.lit(1.0) + F.abs(kd)) * F.lit(s)))
+    level: list = []  # (bucket path, count, min, max, min image, max image, total)
+    edge = {False: (0, None), True: (0, None)}  # NULL keys, NaN keys: (count, total)
+    hist = keyed.groupBy(nan.alias("_nan"), level0.alias("_b")).agg(*aggs)
+    for is_nan, b, *agged in hist.collect():
+        if b is None:
+            edge[is_nan] = (agged[0], agged[5])
+        else:
+            level.append(((b,), *agged))
+    n = sum(iv[1] for iv in level)
     refine_min = max(2, n // (4 * num_partitions))
-    final: list = []  # (count, min, max)
-    pending = [(stats["mn"], stats["mx"], stats["mnd"], stats["mxd"], level0)]
-    for _depth in range(3):  # level-0 pass + ≤2 refinement passes
+    budget = 4 * num_partitions * buckets_per_partition
+    child_min = max(8, min(64, buckets_per_partition))
+    final: list = []
+    for depth in range(3):  # level-0 pass + ≤2 refinement passes
+        pending = []
+        for iv in level:
+            _path, cnt, mn, mx, mnd, mxd, _t = iv
+            refine = depth < 2 and cnt > refine_min and mn != mx and mxd > mnd
+            (pending if refine else final).append(iv)
         if not pending:
             break
-        expr, off = None, 0
-        for mn, mx, mnd, mxd, nb in pending:
-            w = (mxd - mnd) / nb
-            local = F.least(
-                F.lit(nb - 1),
-                F.greatest(F.lit(0), F.floor((kd - F.lit(mnd)) / F.lit(w))),
-            )
+        nb = max(child_min, budget // len(pending))
+        expr = None
+        for i, (_path, _c, mn, mx, mnd, mxd, _t) in enumerate(pending):
+            local = F.least(F.lit(nb - 1), F.greatest(
+                F.lit(0), F.floor((kd - F.lit(mnd)) / F.lit((mxd - mnd) / nb))
+            ))
             cond = (key >= F.lit(mn)) & (key <= F.lit(mx))
-            b = F.lit(off) + local
+            b = F.lit(i * nb) + local
             expr = F.when(cond, b) if expr is None else expr.when(cond, b)
-            off += nb
-        buckets = sorted(
-            (tuple(r) for r in keyed.select(expr.alias("_b"), "_k")
-             .where(F.col("_b").isNotNull())
-             .groupBy("_b")
-             .agg(
-                 F.count(F.lit(1)).alias("_c"),
-                 F.min(key).alias("_mn"), F.max(key).alias("_mx"),
-                 F.min(kd).alias("_mnd"), F.max(kd).alias("_mxd"),
-             ).collect()),
-            key=lambda t: t[0],
-        )
-        pending = []
-        for _b, cnt, mn, mx, mnd, mxd in buckets:
-            if _depth < 2 and cnt > refine_min and mn != mx and mxd > mnd:
-                pending.append((mn, mx, mnd, mxd, child_b))
-            else:
-                final.append((cnt, mn, mx))
-    assert not pending  # the last pass routes everything to `final`
-    final.sort(key=lambda t: (t[1], t[2]))
-    return _borders_from_intervals(final, n, num_partitions)
+        level = [
+            (pending[b // nb][0] + (b % nb,), *agged)
+            for b, *agged in keyed.select("*", expr.alias("_b"))
+            .where(F.col("_b").isNotNull()).groupBy("_b").agg(*aggs).collect()
+        ]
+    if any(c > refine_min and mn != mx and not mxd > mnd for _p, c, mn, mx, mnd, mxd, _t in final):
+        return None
+    final.sort(key=lambda iv: iv[0])
+    borders, ranges = _borders_from_intervals([(iv[1], iv[3]) for iv in final], n, num_partitions)
+    if final and len(borders) > ranges[-1]:
+        borders.pop()  # a border at the top key would leave only NaN above it
+    parts = len(borders) + 1
+    counts, totals = [0] * parts, [None] * parts
+    groups = [(0, *edge[False]), (parts - 1, *edge[True])]
+    groups += [(j, iv[1], iv[6]) for j, iv in zip(ranges, final)]
+    for j, cnt, t in groups:
+        counts[j] += cnt
+        totals[j] = fold(totals[j], t)
+    return _Borders(borders, counts, totals)
 
 
 def _borders_exact(
@@ -227,9 +270,23 @@ def _borders_exact(
     if not pairs:
         return []
     total_w = sum(w for _, w in pairs)
-    return _borders_from_intervals(
-        [(w, k_, k_) for k_, w in pairs], total_w, num_partitions
-    )
+    return _borders_from_intervals([(w, k_) for k_, w in pairs], total_w, num_partitions)[0]
+
+
+def _range_totals(keyed: DataFrame, borders: list, agg) -> _Borders:
+    """The exact fallback's per-range counts and totals: one P-row
+    groupBy over the ranges (the reference's in-band sentinel counts,
+    `SlidingAggregation.java:159-168`)."""
+    if not borders:
+        return _Borders()
+    parts = len(borders) + 1
+    total = F.lit(None) if agg is None else _TOTALS[agg][0](F.col("_v"))
+    counts, totals = [0] * parts, [None] * parts
+    for pid, cnt, t in keyed.groupBy(_pid_expr("_k", borders).alias("_pid")).agg(
+        F.count(F.lit(1)), total
+    ).collect():
+        counts[pid], totals[pid] = cnt, t
+    return _Borders(borders, counts, totals)
 
 
 def _deterministic_borders(
@@ -237,12 +294,18 @@ def _deterministic_borders(
     order_col: str,
     num_partitions: int,
     sample_per_partition: int = 64,
-) -> list:
-    """Equi-depth range borders, deterministic and driver-bounded.
+    *,
+    value_col: str | None = None,
+    agg: str = "sum",
+) -> _Borders:
+    """Equi-depth range borders with exact per-range row counts,
+    deterministic and driver-bounded.
 
-    This is the reference's Sample job (`SlidingAggregation.java:38-84`:
-    Bernoulli-sample the keys, sort the sample, pick the P-1 equi-depth
-    positions — `chooseBorders` :75-83) re-derived with three fixes:
+    This merges two rounds of the reference: its Sample job
+    (`SlidingAggregation.java:38-84`: Bernoulli-sample the keys, sort
+    the sample, pick the P-1 equi-depth positions — `chooseBorders`
+    :75-83) and the per-partition counts its Rank round takes in-band
+    (:159-168).  Three fixes to the Sample job:
 
     * its unseeded ``Random`` (:35) is replaced by commutative exact
       aggregates (count/min/max histogram for numeric keys; value-hash
@@ -257,22 +320,29 @@ def _deterministic_borders(
       narrows to one key, or the unconditional heavy rule in the
       fallback), so extreme skew still yields equal-ROW-count ranges.
 
-    Numeric/temporal keys take `_borders_histogram` (bounded shuffle:
-    map-side-combined bucket counts, never a per-distinct-key exchange);
-    other types take `_borders_exact`.  Returns a sorted list of border
-    VALUES; partition j holds keys in (b_{j-1}, b_j].
+    Numeric/temporal keys take `_borders_histogram`, whose buckets give
+    the counts too (bounded shuffle: map-side-combined bucket counts,
+    never a per-distinct-key exchange); other types, and numerics whose
+    double images collapse, take `_borders_exact` and then count the
+    ranges with one P-row groupBy.  With ``value_col``, each range also
+    carries its ``agg`` ("sum" or "max") of that column.  Returns a
+    `_Borders`: the sorted border VALUES, partition j holding keys in
+    (b_{j-1}, b_j], with ``.counts`` and ``.totals`` per range.
     """
     if num_partitions <= 1:
-        return []
-    key = F.col(order_col)
-    keyed = df.select(key.alias("_k")).where(key.isNotNull())
+        return _Borders()
+    key = F.col(order_col).alias("_k")
+    keyed = df.select(key) if value_col is None else df.select(key, F.col(value_col).alias("_v"))
+    total = None if value_col is None else agg
     dtype = dict(keyed.dtypes)["_k"]
     if dtype in _HIST_TYPES or dtype.startswith("decimal"):
-        return _borders_histogram(keyed, dtype, num_partitions, sample_per_partition)
-    n = keyed.count()
-    if n == 0:
-        return []
-    return _borders_exact(keyed, n, num_partitions, sample_per_partition)
+        found = _borders_histogram(keyed, dtype, num_partitions, sample_per_partition, total)
+        if found is not None:
+            return found
+    valued = keyed.where(F.col("_k").isNotNull())
+    n = valued.count()
+    borders = _borders_exact(valued, n, num_partitions, sample_per_partition) if n else []
+    return _range_totals(keyed, borders, total)
 
 
 def _pid_expr(order_col: str, borders: list):
@@ -304,15 +374,46 @@ def _pid_expr(order_col: str, borders: list):
 
 
 def _per_range(values: list):
-    """``values[_pid]``: one driver constant per range, as a column."""
-    return F.element_at(F.array(*[F.lit(v) for v in values]), F.col("_pid") + 1)
+    """``values[range]``: one driver constant per range, as a column.
+    ``_pid`` holds the range index or, after step 3, its shuffle code;
+    both are ≡ the range modulo the number of ranges."""
+    return F.element_at(
+        F.array(*[F.lit(v) for v in values]), F.pmod(F.col("_pid"), F.lit(len(values))) + 1
+    )
 
 
-def _spark_max(a, b):
-    """max as Spark orders values: NULL skipped, NaN above everything."""
-    if a is None or b is None:
-        return b if a is None else a
-    return a if a != a or (b == b and a >= b) else b
+def _murmur3_int(x: int, seed: int = 42) -> int:
+    """Spark's ``Murmur3_x86_32.hashInt``: what ``hash()`` and the hash
+    partitioning of ``repartition(P, col)`` compute for an int column."""
+    m = 0xFFFFFFFF
+
+    def rotl(v, r):
+        return ((v << r) | (v >> (32 - r))) & m
+
+    k = rotl(x * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
+    h ^= 4
+    h = (h ^ h >> 16) * 0x85EBCA6B & m
+    h = (h ^ h >> 13) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _range_codes(parts: int, num_partitions: int) -> list[int]:
+    """``_pid`` code per range for the exchange ``repartition(P, _pid)``,
+    whose task for a row is ``pmod(murmur3(_pid), P)``: code[k] ≡ k (mod
+    parts), the least such int whose task no earlier range has, so every
+    range gets a shuffle task of its own (plain pids 0..7 land in 5 of 8
+    tasks at P=8).  A range that finds no free task among its first
+    64·P candidates keeps its index."""
+    used, codes = set(), []
+    for k in range(parts):
+        stop = min(2**31, k + 64 * num_partitions * parts)
+        free = (c for c in range(k, stop, parts) if _murmur3_int(c) % num_partitions not in used)
+        code = next(free, k)
+        used.add(_murmur3_int(code) % num_partitions)
+        codes.append(code)
+    return codes
 
 
 def _ranged_with_offsets(
@@ -324,7 +425,7 @@ def _ranged_with_offsets(
     agg: str = "sum",
     inclusive: bool = True,
 ) -> DataFrame:
-    """The one range pass (module docstring, steps 1-5).
+    """The one range pass (module docstring, steps 1-4).
 
     Returns ``df`` plus ``rank`` (dense, 0-based, in ``order_by`` order)
     and, when ``value_col`` is given:
@@ -343,31 +444,31 @@ def _ranged_with_offsets(
     if num_partitions is None:
         num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     halo = 0 if window is None else window - 1
-    borders = _deterministic_borders(df, order_by[0], num_partitions)
-    parts = len(borders) + 1
-    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders))
-
-    # Step 2: per-range row counts (and value totals for a prefix).
     v = None if value_col is None else F.col(value_col)
     prefix = window is None and v is not None
-    counts, totals = [0] * parts, [None] * parts
-    if parts > 1:
-        total = (F.sum(v) if agg == "sum" else F.max(v)) if prefix else F.lit(None)
-        for pid, n, t in ranged.groupBy("_pid").agg(F.count(F.lit(1)), total).collect():
-            counts[pid], totals[pid] = n, t
 
-    # Step 3: range k's first halo source is the latest range s with
+    # Step 1: borders with each range's row count (and value total for a prefix).
+    borders = _deterministic_borders(
+        df, order_by[0], num_partitions, value_col=value_col if prefix else None, agg=agg
+    )
+    parts = len(borders) + 1
+    counts, totals = borders.counts, borders.totals
+    ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders))
+
+    # Step 2: range k's first halo source is the latest range s with
     # off[k] - off[s] >= halo; last[j] is the latest range j feeds.
     off = list(accumulate(counts, initial=0))
     first = [max(0, bisect_right(off, off[k] - halo, 0, k + 1) - 1) for k in range(parts)]
     last = [bisect_right(first, j) - 1 for j in range(parts)]
 
-    # Step 4: one exchange, each row to its own range and its halo ranges.
+    # Step 3: one exchange, each row to its own range and its halo
+    # ranges, every range to a shuffle task of its own.
     if last != list(range(parts)):
         ranged = ranged.withColumn("_pid", F.explode(F.sequence(F.col("_pid"), _per_range(last))))
+    ranged = ranged.withColumn("_pid", _per_range(_range_codes(parts, num_partitions)))
     ranged = ranged.repartition(num_partitions, "_pid")
 
-    # Step 5: one window spec per range.
+    # Step 4: one window spec per range.
     tie = [v] if window is not None and value_col not in order_by else []
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_by], *tie)
     out = ranged.withColumn(
@@ -518,7 +619,7 @@ def prefix_max_scalable(
     order_by: list[str],
     value_col: str,
     out_col: str = "prefix_max",
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     inclusive: bool = True,
 ) -> DataFrame:
     """Global running maximum of ``value_col`` in ``order_by`` order,

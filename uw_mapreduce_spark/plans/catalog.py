@@ -1065,10 +1065,7 @@ def running_revenue_global(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "_price_c", F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long")
     )
-    out = _ranged_with_offsets(
-        orders, ["o_orderdate", "o_orderkey"], "_price_c",
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
+    out = _ranged_with_offsets(orders, ["o_orderdate", "o_orderkey"], "_price_c", None)
     return out.select(
         "o_orderkey", F.col("_prefix").cast("long").alias("run_total_c")
     )
