@@ -257,6 +257,36 @@ def test_cosine_numpy_blocked_equals_exact(spark, sf_small):
     assert set(blocked) == exact
 
 
+def test_blocked_kernels_drop_zero_norm_rows_on_both_paths(spark):
+    """Zero vectors have no cosine: neither BLAS kernel may pair them or
+    rank them, as a query or as a neighbor, and the broadcast path
+    (one block) and the block-pair path (block_rows=16) agree."""
+    from uw_mapreduce_spark.operators.similarity import (
+        cosine_near_dup_pairs_numpy,
+        knn_self_blas,
+    )
+
+    rows = [(i, [float(i * 7 % 5 + 1), float(i * 3 % 4), float(i % 2)]) for i in range(60)]
+    rows += [(1000 + i, [0.0, 0.0, 0.0]) for i in range(5)]
+    rows += [(2000 + i, [1.0, 2.0, 3.0]) for i in range(6)]  # a tie family
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    zero = set(range(1000, 1005))
+
+    def both_paths(kernel, **kw):
+        one, many = (
+            sorted(tuple(r) for r in kernel(corpus, block_rows=b, **kw).collect())
+            for b in (65536, 16)
+        )
+        assert one == many
+        return one
+
+    pairs = both_paths(cosine_near_dup_pairs_numpy, threshold=0.9)
+    assert pairs and not zero & {i for p in pairs for i in p}
+    edges = both_paths(knn_self_blas, k=4)
+    assert {q for q, _n, _r in edges} == {i for i, _v in rows} - zero
+    assert not zero & {n for _q, n, _r in edges}
+
+
 def test_jaccard_max_df_prunes_hot_shingle(spark):
     """A shingle hot enough to exceed max_df is dropped from the
     inverted index (it alone can no longer connect a pair), while true

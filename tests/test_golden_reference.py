@@ -84,7 +84,6 @@ def test_simple103_analogue_matches_model(spark):
     16 < 26 < 79, 91 (the halo spans several ranges) and l > n.  The
     Window path and both scalable paths must equal the Python model for
     every aggregate."""
-    from uw_mapreduce_spark.operators.scale import sliding_minmax_scalable
     from uw_mapreduce_spark.operators.window import sliding_aggregate
 
     keys = [(i * 37) % 102 for i in range(102)] + [50]
@@ -95,9 +94,9 @@ def test_simple103_analogue_matches_model(spark):
             want = _window_model(rows, window, agg)
             paths = {
                 "window": sliding_aggregate(kv, ["key", "value"], "value", window, agg=agg),
-                "scalable": (
-                    sliding_minmax_scalable if agg in ("min", "max") else sliding_aggregate_scalable
-                )(kv, ["key", "value"], "value", window, agg=agg, num_partitions=4),
+                "scalable": sliding_aggregate_scalable(
+                    kv, ["key", "value"], "value", window, agg=agg, num_partitions=4
+                ),
             }
             for path, out in paths.items():
                 got = {(r["rank"], r["key"], r["agg"]) for r in out.collect()}
@@ -154,9 +153,7 @@ def test_two_path_agreement_100k(spark, reference_dir):
         assert wd.exceptAll(sc).count() == 0
 
     # Non-invertible path (block decomposition) at the same volume.
-    from uw_mapreduce_spark.operators.scale import sliding_minmax_scalable
-
-    mm = sliding_minmax_scalable(
+    mm = sliding_aggregate_scalable(
         kv, order_by=["key", "value"], value_col="value", window=500, agg="min",
         num_partitions=8,
     ).select(*cols)

@@ -61,7 +61,7 @@ def test_bernoulli_sample_deterministic_with_seed(spark):
 
 
 def test_sliding_minmax_scalable_matches_window_path(spark):
-    from uw_mapreduce_spark.operators.scale import sliding_minmax_scalable
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
     from uw_mapreduce_spark.operators.window import sliding_aggregate
 
     df = kv(spark, [((i * 37) % 101, (i * 53) % 997) for i in range(300)])
@@ -73,7 +73,7 @@ def test_sliding_minmax_scalable_matches_window_path(spark):
             }
             b = {
                 (r["rank"], r["agg"])
-                for r in sliding_minmax_scalable(
+                for r in sliding_aggregate_scalable(
                     df, ["key", "value"], "value", l, agg=agg, num_partitions=5
                 ).collect()
             }

@@ -201,15 +201,12 @@ def test_scalable_range_pass_has_no_cache_or_rank_join(spark):
     import re
 
     from uw_mapreduce_spark.operators.rank import global_rank_scalable
-    from uw_mapreduce_spark.operators.scale import (
-        sliding_aggregate_scalable,
-        sliding_minmax_scalable,
-    )
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
 
     df = _kv_frame(spark)
     frames = {
         "sum": sliding_aggregate_scalable(df, ["key", "value"], "value", 91, num_partitions=4),
-        "max": sliding_minmax_scalable(
+        "max": sliding_aggregate_scalable(
             df, ["key", "value"], "value", 91, agg="max", num_partitions=4
         ),
         "rank": global_rank_scalable(df, ["key", "value"], num_partitions=4),
@@ -224,9 +221,9 @@ def test_scalable_minmax_uses_running_frames_only(spark):
     """The block suffix of sliding min/max must be a descending RUNNING
     frame: a (currentRow, unboundedFollowing) frame recomputes the rest
     of the block for every row, O(l) per row."""
-    from uw_mapreduce_spark.operators.scale import sliding_minmax_scalable
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
 
-    out = sliding_minmax_scalable(
+    out = sliding_aggregate_scalable(
         _kv_frame(spark), ["key", "value"], "value", 91, agg="min", num_partitions=4
     )
     assert "unboundedfollowing" not in _plan(out).lower()
@@ -312,3 +309,56 @@ def test_prefix_max_scalable_defaults_to_shuffle_partitions(spark):
 
     out = prefix_max_scalable(_uniform_long_frame(spark, 2000), ["k"], "v")
     assert out.rdd.getNumPartitions() == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_range_consumers_default_to_shuffle_partitions(spark, sf_small, monkeypatch):
+    """roc_auc and the quantile-normalize face build as many ranges as
+    the session has shuffle partitions, not a fixed 32."""
+    import pyspark.sql.functions as F
+
+    from uw_mapreduce_spark.operators import scale
+    from uw_mapreduce_spark.operators.evaluation import roc_auc
+
+    asked = []
+    borders = scale._deterministic_borders
+
+    def recording(*args, **kwargs):
+        asked.append(args[2])
+        return borders(*args, **kwargs)
+
+    monkeypatch.setattr(scale, "_deterministic_borders", recording)
+    scored = spark.range(200).select(
+        (F.col("id") % 2).alias("is_pos"), ((F.col("id") * 37) % 101).cast("double").alias("score")
+    )
+    roc_auc(scored)
+    QUERIES["quantile_normalize_events"](spark, sf_small)
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert len(asked) >= 2 and set(asked) == {want}, asked
+
+
+def test_blocked_kernels_size_blocks_from_border_counts(spark, sf_small):
+    """Multi-block BLAS kernels read each block's size from the borders'
+    exact counts: the call launches only the corpus count (2 jobs) and
+    the border histogram with its refinement passes, never a separate
+    block-size job."""
+    from uw_mapreduce_spark.operators.similarity import (
+        cosine_near_dup_pairs_numpy,
+        knn_self_blas,
+    )
+    from uw_mapreduce_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    emb = load_table(spark, sf_small, "embeddings")
+    calls = {
+        "near-dup": lambda: cosine_near_dup_pairs_numpy(emb, 0.30, block_rows=64),
+        "knn": lambda: knn_self_blas(emb, k=3, block_rows=64),
+    }
+    for name, call in calls.items():
+        group = f"blocked-call-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 6, (name, len(jobs))

@@ -6,10 +6,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from uw_mapreduce_spark.operators.scale import (
-    sliding_aggregate_scalable,
-    sliding_minmax_scalable,
-)
+from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
 from uw_mapreduce_spark.operators.window import sliding_aggregate
 
 _NONFINITE = st.sampled_from([float("nan"), float("inf"), float("-inf")])
@@ -102,7 +99,7 @@ def test_sliding_paths_match_brute_force(spark, inputs, l):
         ))
         assert got == brute(rows, l, agg), agg
     for agg in ("min", "max"):
-        got = ranked(sliding_minmax_scalable(
+        got = ranked(sliding_aggregate_scalable(
             df, ["key", "value"], "value", l, agg=agg, num_partitions=3
         ))
         assert got == brute(rows, l, agg), agg

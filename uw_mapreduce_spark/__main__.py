@@ -44,7 +44,7 @@ def main(argv: list[str] | None = None) -> int:
     from .session import get_spark
     from .sources.text_kv import read_text_kv, write_text_kv
     from .operators.window import sliding_aggregate
-    from .operators.scale import sliding_aggregate_scalable, sliding_minmax_scalable
+    from .operators.scale import sliding_aggregate_scalable
 
     spark = get_spark(app_name="uw-mapreduce-spark-cli", master=args.master)
     if args.partitions:
@@ -55,13 +55,8 @@ def main(argv: list[str] | None = None) -> int:
     else:
         kv = read_text_kv(spark, args.input)
 
-    if args.scalable and args.agg in ("sum", "count", "avg"):
+    if args.scalable:
         out = sliding_aggregate_scalable(
-            kv, ["key", "value"], "value", args.window, agg=args.agg,
-            num_partitions=args.partitions,
-        )
-    elif args.scalable:
-        out = sliding_minmax_scalable(
             kv, ["key", "value"], "value", args.window, agg=args.agg,
             num_partitions=args.partitions,
         )

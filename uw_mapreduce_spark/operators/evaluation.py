@@ -100,7 +100,7 @@ def roc_auc(
     scored: DataFrame,
     is_pos_col: str = "is_pos",
     score_col: str = "score",
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """One-row exact AUC: (n_pos, n_neg, num2, auc_micro).
 
@@ -149,7 +149,7 @@ def rank_sum_test(
     df: DataFrame,
     treated_col: str = "treated",
     value_col: str = "v",
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test, one exact row:
     (n_treatment, n_control, u2_treatment, z_micro).

@@ -59,7 +59,7 @@ from itertools import accumulate
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_INVERTIBLE = ("sum", "count", "avg")
+_SLIDING_AGGS = ("sum", "count", "avg", "min", "max")
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
@@ -503,8 +503,22 @@ def _with_prefix(out, w, v, agg, inclusive, totals, dtype):
 
 
 def _with_minmax(out, v, window, agg):
-    """``_agg``: trailing min/max by the block decomposition of
-    ``sliding_minmax_scalable``, from running frames only."""
+    """``_agg``: trailing MIN/MAX, the non-invertible case.
+
+    Running totals do not invert min/max, so the range pass uses the
+    classic block decomposition (two-stacks / sparse-table idea,
+    expressed in SQL windows): with blocks of exactly ``window`` rows
+    (block = rank DIV window), the trailing window [r-l+1, r] spans at
+    most two adjacent blocks, and
+
+        win_min(r) = min( suffix_min(block of r-l+1, from r-l+1),
+                          prefix_min(block of r, up to r) )
+
+    Both pieces are RUNNING aggregates inside a block (the suffix one
+    over the block in descending order), so each row costs O(1); the
+    suffix piece at rank r-l+1 is a ``lag`` of l-1 rows within the
+    range, whose halo holds it.
+    """
     fn, pick = (F.min, F.least) if agg == "min" else (F.max, F.greatest)
     blk = Window.partitionBy("_pid", "_blk")
     top = Window.unboundedPreceding, Window.currentRow
@@ -565,51 +579,15 @@ def sliding_aggregate_scalable(
 
     Same semantics as ``window.sliding_aggregate`` (0-based rank over
     ``order_by``; frame = rows [max(0, r-window+1), r]; NULL values
-    skipped, NULL sum/avg over a frame with no value).  ``agg`` must be
-    sum, count, or avg; min/max take ``sliding_minmax_scalable``.
+    skipped, NULL sum/avg over a frame with no value), for the same
+    five aggregates: sum, count and avg by running totals minus their
+    value ``window`` rows back (`_with_running_diff`), min and max by
+    block decomposition (`_with_minmax`).
     """
     if window < 1:
         raise ValueError("window must be >= 1")
-    if agg not in _INVERTIBLE:
-        raise ValueError(
-            f"scalable path supports invertible aggregates {_INVERTIBLE}; "
-            f"use sliding_minmax_scalable, sliding_aggregate (Window path) "
-            f"or a partition_by spec for {agg!r}"
-        )
-    out = _ranged_with_offsets(df, order_by, value_col, num_partitions, window=window, agg=agg)
-    return out.withColumnRenamed("rank", rank_col).withColumnRenamed("_agg", agg_col)
-
-
-def sliding_minmax_scalable(
-    df: DataFrame,
-    order_by: list[str],
-    value_col: str,
-    window: int,
-    agg: str = "min",
-    rank_col: str = "rank",
-    agg_col: str = "agg",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Distributed trailing-window MIN/MAX — the non-invertible case.
-
-    Running totals do not invert min/max, so the range pass uses the
-    classic block decomposition (two-stacks / sparse-table idea,
-    expressed in SQL windows): with blocks of exactly ``window`` rows
-    (block = rank DIV window), the trailing window [r-l+1, r] spans at
-    most two adjacent blocks, and
-
-        win_min(r) = min( suffix_min(block of r-l+1, from r-l+1),
-                          prefix_min(block of r, up to r) )
-
-    Both pieces are RUNNING aggregates inside a block (the suffix one
-    over the block in descending order), so each row costs O(1); the
-    suffix piece at rank r-l+1 is a ``lag`` of l-1 rows within the
-    range, whose halo holds it.
-    """
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    if agg not in ("min", "max"):
-        raise ValueError("use sliding_aggregate_scalable for invertible aggregates")
+    if agg not in _SLIDING_AGGS:
+        raise ValueError(f"agg must be one of {sorted(_SLIDING_AGGS)}")
     out = _ranged_with_offsets(df, order_by, value_col, num_partitions, window=window, agg=agg)
     return out.withColumnRenamed("rank", rank_col).withColumnRenamed("_agg", agg_col)
 

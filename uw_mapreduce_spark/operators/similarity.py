@@ -572,91 +572,85 @@ def cosine_near_dup_lsh_blas(
     )
 
 
-def cosine_near_dup_pairs_numpy(
+def _blocked_pairs(
     corpus: DataFrame,
-    threshold: float = 0.45,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_rows: int = 65536,
+    id_col: str,
+    vec_col: str,
+    block_rows: int,
+    kernel,
+    schema,
+    both_ways: bool,
 ) -> DataFrame:
-    """Exact near-dup pairs with the O(n²) scoring done as BLAS matmul.
+    """The exact all-pairs skeleton of `cosine_near_dup_pairs_numpy` and
+    `knn_self_blas`: every pair of unit rows of ``corpus`` is scored as a
+    BLAS ``q @ rᵀ`` strip, and ``kernel(qids, rids, sims, same)`` turns
+    each strip into a pandas frame of ``schema``.  ``same`` says the
+    strip's rows are among its columns too (a row can meet itself);
+    cross-block strips run left block against right block, and also
+    right against left with ``both_ways``.
 
-    Catalyst higher-order functions evaluate lambdas interpreted and
-    allocate per-pair arrays — measured ~10s for 2M pairs; one
-    numpy ``batch @ matrixᵀ`` does the same work in milliseconds.  This
-    is the justified Pandas/Arrow drop-down: dense linear algebra is the
-    one thing the built-in expression engine can't express efficiently.
+    Zero-norm vectors have no defined cosine and are dropped here, from
+    both roles.  A strip is ≤ ``_STRIP_ROWS`` query rows, each with its
+    FULL row of columns, so no kernel output depends on the strip size.
 
-    The pairing is BLOCKED and runs ENTIRELY executor-side: the id
-    space is split into B = ``ceil(n / block_rows)`` ranges
-    (deterministic sampled borders — same machinery as the scalable
-    sliding path), each row is tagged with its block and replicated into
-    the B block-PAIRS it participates in ((min(b,k), max(b,k)) for
-    every k), and one ``applyInPandas`` over groupBy(pair) runs the
-    block-vs-block ``L @ Rᵀ`` matmul per group.  Each qualifying pair
-    (a < b) lives in exactly one group (block ranges are ordered and
-    disjoint), so every pair is emitted exactly once.
+    One block (n ≤ ``block_rows``): collect the corpus (bounded by
+    block_rows), broadcast it and score every scan batch against it —
+    no shuffle.
 
-    Topology at 100 TB: total shuffle is n·B rows — the inherent
-    O(n²/block_rows) data motion of an exact all-pairs baseline — but
-    it is a single shuffle fanned across B(B+1)/2 independent groups on
-    executors; the DRIVER holds nothing (no collect, no broadcast
-    lifecycle), and per-task memory is bounded by ~2 blocks of vectors.
-    ``cosine_near_dup_lsh`` remains the sub-quadratic path when recall
-    < 1 is acceptable.
-
-    At sf0.1 (2k vectors) this is one block — a single broadcast kernel
-    with no shuffle at all (the fast path below).
+    More blocks: the ids are split into B = ⌈n / block_rows⌉ ranges by
+    the range pass's exact-count histogram borders
+    (`scale._deterministic_borders`), and `scale._pid_expr` routes each
+    row to its block.  A block over the ×4 slack (duplicate-heavy ids)
+    re-borders globally with more blocks (≤2 retries); the check reads
+    the borders' own per-range counts, so it launches no job.  Each row
+    then joins the B block-pairs it belongs to, (min(b,k), max(b,k))
+    for every k, and one ``applyInPandas`` per pair scores block i
+    against block j on the executors.  Blocks are ordered and disjoint
+    id ranges, so two rows meet in exactly one group, and in a
+    cross-block group every left id is below every right id.  The
+    shuffle is n·B rows (the inherent O(n²/block_rows) data motion of an
+    exact all-pairs baseline), a task holds ~2 blocks of vectors and
+    the driver holds none.
     """
     import math
 
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.types import LongType, StructField, StructType
+    from .scale import _deterministic_borders, _pid_expr
 
-    from .scale import _deterministic_borders
+    def unit(ids, vecs):
+        """The nonzero rows unit-normalized, their ids, and the mask of
+        the rows kept."""
+        mat = np.array(list(vecs), dtype=np.float64)
+        norms = np.linalg.norm(mat, axis=1)
+        keep = norms > 0
+        return ids[keep], mat[keep] / norms[keep, None], keep
+
+    def scored(qids, q, rids, r, same):
+        # strips of query rows bound each sims allocation to strip×block
+        # (≤0.5 GB at the 65k block cap; a whole block would be 34 GB)
+        for s0 in range(0, len(q), _STRIP_ROWS):
+            strip = slice(s0, s0 + _STRIP_ROWS)
+            yield kernel(qids[strip], rids, q[strip] @ r.T, same)
 
     slim = corpus.select(id_col, vec_col)
     n = slim.count()
     if n == 0:
-        return slim.sparkSession.createDataFrame([], "id_a long, id_b long")
-
-    schema = StructType(
-        [StructField("id_a", LongType(), False), StructField("id_b", LongType(), False)]
-    )
-
-    num_blocks = max(1, math.ceil(n / block_rows))
+        return slim.sparkSession.createDataFrame([], schema)
+    num_blocks = math.ceil(n / block_rows)
     if num_blocks == 1:
-        # Fast path: the whole corpus fits one block — collect once
-        # (bounded by block_rows), broadcast, and score every scan batch
-        # against it.  No shuffle; the upper-triangle filter (a < b)
-        # dedups in place.
-        sc = corpus.sparkSession.sparkContext
+        sc = slim.sparkSession.sparkContext
         rows = slim.collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+        ids, mat, _ = unit(np.array([r[0] for r in rows], dtype=np.int64), [r[1] for r in rows])
         order = np.argsort(ids)
         b_ids, b_mat = sc.broadcast(ids[order]), sc.broadcast(mat[order])
 
         def score(batches):
-            blk_ids, blk_mat = b_ids.value, b_mat.value
             for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                q /= np.linalg.norm(q, axis=1, keepdims=True)
-                qids = pdf[id_col].to_numpy()
-                # strip over query rows: bounds the sims allocation to
-                # strip×block (≤0.5 GB at the 65k block cap) instead of
-                # arrow_batch×block
-                for s0 in range(0, len(q), _STRIP_ROWS):
-                    sims = q[s0 : s0 + _STRIP_ROWS] @ blk_mat.T
-                    ii, jj = np.nonzero(sims >= threshold)
-                    a, b = qids[s0 + ii], blk_ids[jj]
-                    keep = a < b
-                    yield pd.DataFrame({"id_a": a[keep], "id_b": b[keep]})
+                if len(pdf):
+                    qids, q, _ = unit(pdf[id_col].to_numpy(), pdf[vec_col])
+                    yield from scored(qids, q, b_ids.value, b_mat.value, True)
 
         # The scan side's partition count IS the parallelism of this
         # path (one broadcast-scored batch stream per partition); a
@@ -665,30 +659,12 @@ def cosine_near_dup_pairs_numpy(
         par = max(1, min(sc.defaultParallelism, math.ceil(n / 256)))
         return slim.repartition(par).mapInPandas(score, schema=schema)
 
-    # Multi-block: executor-side block-pair join.  Borders are a sampled
-    # equi-depth estimate; if any block overshoots the ×4 slack (skewed
-    # or duplicate-heavy ids), re-border globally with more blocks (≤2
-    # retries) — the check is one B-row aggregate, not a data pass.
-    def _tag(borders: list) -> DataFrame:
-        barr = F.array(*[F.lit(int(b)) for b in borders])
-        return slim.withColumn(
-            "_blk", F.size(F.filter(barr, lambda b: b < F.col(id_col)))
-        )
-
     borders = _deterministic_borders(slim, id_col, num_blocks)
     for _retry in range(2):
-        counts = [
-            r["count"] for r in _tag(borders).groupBy("_blk").count().collect()
-        ]
-        if max(counts) <= 4 * block_rows:
+        if (max(borders.counts) if borders else n) <= 4 * block_rows:
             break
         num_blocks = max(num_blocks + 1, math.ceil(n / block_rows * 2))
         borders = _deterministic_borders(slim, id_col, num_blocks)
-    # Tag from the FINAL border list so _blk and nb always agree — if the
-    # last retry reassigned borders, a tagged frame built earlier in the
-    # loop would disagree with nb and rows with _blk >= nb would silently
-    # lose their diagonal (b, b) group (ADVICE r6).
-    tagged = _tag(borders)
     nb = len(borders) + 1  # actual block count after any retry
 
     # Each row joins every block-pair it belongs to: (min(b,k), max(b,k))
@@ -701,46 +677,71 @@ def cosine_near_dup_pairs_numpy(
             F.greatest(F.col("_blk"), k).alias("pj"),
         ),
     )
-    exploded = tagged.select(
+    exploded = slim.select(
+        id_col, vec_col, _pid_expr(id_col, borders).alias("_blk")
+    ).select(
         id_col, vec_col, "_blk", F.explode(pair_structs).alias("_p")
     ).select(id_col, vec_col, "_blk", F.col("_p.pi").alias("_pi"), F.col("_p.pj").alias("_pj"))
 
     def score_pair(key, pdf):
-        pi, pj = int(key[0]), int(key[1])
-        ids = pdf[id_col].to_numpy()
-        mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-
-        def strips(lids, lmat, rids, rmat, upper_only):
-            # strip over left rows: a full block_rows×block_rows sims
-            # allocation at the 65k default would be 34 GB; strips keep
-            # it ≤0.5 GB with identical flops and output
-            outs = []
-            for s0 in range(0, len(lmat), _STRIP_ROWS):
-                sims = lmat[s0 : s0 + _STRIP_ROWS] @ rmat.T
-                ii, jj = np.nonzero(sims >= threshold)
-                a, b = lids[s0 + ii], rids[jj]
-                if upper_only:
-                    keep = a < b
-                    a, b = a[keep], b[keep]
-                outs.append(pd.DataFrame({"id_a": a, "id_b": b}))
-            return (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-            )
-
-        if pi == pj:
-            return strips(ids, mat, ids, mat, upper_only=True)
-        lmask = (pdf["_blk"] == pi).to_numpy()
-        if not lmask.any() or lmask.all():
-            return pd.DataFrame({"id_a": [], "id_b": []}).astype("int64")
-        # Block i's id range precedes block j's entirely, so a < b holds
-        # for every cross pair by construction.
-        return strips(ids[lmask], mat[lmask], ids[~lmask], mat[~lmask],
-                      upper_only=False)
+        ids, mat, keep = unit(pdf[id_col].to_numpy(), pdf[vec_col])
+        if key[0] == key[1]:
+            parts = list(scored(ids, mat, ids, mat, True))
+        else:
+            left = (pdf["_blk"].to_numpy() == key[0])[keep]
+            parts = list(scored(ids[left], mat[left], ids[~left], mat[~left], False))
+            if both_ways:
+                parts += scored(ids[~left], mat[~left], ids[left], mat[left], False)
+        # a kernel over no rows gives the empty frame with its dtypes
+        parts = parts or [kernel(ids[:0], ids[:0], np.zeros((0, 0)), False)]
+        return pd.concat(parts, ignore_index=True)
 
     return exploded.groupBy("_pi", "_pj").applyInPandas(score_pair, schema=schema)
+
+
+def cosine_near_dup_pairs_numpy(
+    corpus: DataFrame,
+    threshold: float = 0.45,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    block_rows: int = 65536,
+) -> DataFrame:
+    """Exact near-dup pairs (id_a < id_b, cosine ≥ ``threshold``) with
+    the O(n²) scoring done as BLAS matmul.
+
+    Catalyst higher-order functions evaluate lambdas interpreted and
+    allocate per-pair arrays — measured ~10s for 2M pairs; one
+    numpy ``batch @ matrixᵀ`` does the same work in milliseconds.  This
+    is the justified Pandas/Arrow drop-down: dense linear algebra is the
+    one thing the built-in expression engine can't express efficiently.
+
+    The pairing runs on `_blocked_pairs`: one broadcast kernel when the
+    corpus fits one block (sf0.1's 2k vectors do), else B =
+    ``ceil(n / block_rows)`` id-range blocks from the exact-count
+    histogram borders, scored block against block on the executors.
+    A pair lives in exactly one block-pair group and is scored one way
+    only, so every pair is emitted exactly once.  ``cosine_near_dup_lsh``
+    remains the sub-quadratic path when recall < 1 is acceptable.
+    Zero-norm vectors pair with nothing.
+    """
+    import numpy as np
+    import pandas as pd
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType(
+        [StructField("id_a", LongType(), False), StructField("id_b", LongType(), False)]
+    )
+
+    def pairs(qids, rids, sims, same):
+        ii, jj = np.nonzero(sims >= threshold)
+        a, b = qids[ii], rids[jj]
+        if same:  # each unordered pair once, as a < b
+            keep = a < b
+            a, b = a[keep], b[keep]
+        return pd.DataFrame({"id_a": a, "id_b": b})
+
+    return _blocked_pairs(corpus, id_col, vec_col, block_rows, pairs, schema, both_ways=False)
 
 
 def save_ann_index(centroids: DataFrame, path: str) -> None:
@@ -960,7 +961,8 @@ def knn_graph_artifact(
     never served.
 
     The key also carries a BUILDER-VERSION token (hash of the
-    `knn_self_blas` source) so a kernel change invalidates artifacts
+    `knn_self_blas` and `_blocked_pairs` sources and of the border
+    helpers they call) so a kernel change invalidates artifacts
     persisted by older code, and a cache-miss build commits via
     write-temp-then-rename so concurrent sessions can never interleave
     or clobber a committed artifact (`_commit_artifact`).  After a
@@ -980,14 +982,15 @@ def knn_graph_artifact(
     job); the returned frame is always a plain parquet scan."""
     import os
 
-    from .scale import _deterministic_borders
+    from .scale import _deterministic_borders, _pid_expr
 
     spark = corpus.sparkSession
     family = f"k{k}_"
-    # Version covers the kernel AND the helper that shapes its blocks —
-    # a borders-only change also rebuilds.
+    # Version covers the kernel, its block-pair skeleton AND the helpers
+    # that border and route its blocks — a change to any one rebuilds.
+    version = _builder_version(knn_self_blas, _blocked_pairs, _deterministic_borders, _pid_expr)
     key = (
-        f"{family}v{_builder_version(knn_self_blas, _deterministic_borders)}"
+        f"{family}v{version}"
         f"_{_corpus_fingerprint(corpus, id_col, vec_col)}"
     )
     root = _artifact_cache_dir(cache_dir)
@@ -1029,14 +1032,16 @@ def near_dup_pairs_artifact(
     deterministic (the fingerprint and build are independent jobs)."""
     import os
 
-    from .scale import _deterministic_borders
+    from .scale import _deterministic_borders, _pid_expr
 
     spark = corpus.sparkSession
     t_milli = int(round(threshold * 1000))
     family = f"ndp{t_milli}_"
+    version = _builder_version(
+        cosine_near_dup_pairs_numpy, _blocked_pairs, _deterministic_borders, _pid_expr
+    )
     key = (
-        f"{family}"
-        f"v{_builder_version(cosine_near_dup_pairs_numpy, _deterministic_borders)}"
+        f"{family}v{version}"
         f"_{_corpus_fingerprint(corpus, id_col, vec_col)}"
     )
     root = _artifact_cache_dir(cache_dir)
@@ -1126,17 +1131,16 @@ def knn_self_blas(
     interpreted per-pair dot would cost ~10 s per 2M pairs while one
     block matmul does it in milliseconds).
 
-    Same executor-side block-pair topology as
-    `cosine_near_dup_pairs_numpy`: deterministic id-range blocks, each
-    row replicated to its B block-pairs, one ``applyInPandas`` matmul
-    per group.  Each group emits every member row's top-(k+tie_slack)
-    candidates from the opposite side (both directions off-diagonal,
-    self-masked on the diagonal); a final per-query window over the
-    ≤B·(k+slack) candidates picks the exact global top-k with ties on
-    neighbor id.  Exact-tie families at a block's k-boundary
-    (identical vectors — e.g. duplicated corpora — tie bit-for-bit)
-    are EXPANDED: the whole family at the boundary sim is emitted so
-    the global id-tiebreak stays exact, bounded by a
+    Same `_blocked_pairs` skeleton as `cosine_near_dup_pairs_numpy`:
+    one broadcast kernel, or id-range blocks from the exact-count
+    histogram borders with one ``applyInPandas`` matmul per block-pair.
+    Each strip emits every query row's top-(k+tie_slack) candidates
+    (both directions off-diagonal, self-masked on the diagonal); a
+    final per-query window over the ≤B·(k+slack) candidates picks the
+    exact global top-k with ties on neighbor id.  Exact-tie families at
+    a block's k-boundary (identical vectors — e.g. duplicated corpora —
+    tie bit-for-bit) are EXPANDED: the whole family at the boundary sim
+    is emitted so the global id-tiebreak stays exact, bounded by a
     ``max(16·(k+slack), 1024)`` expansion cap that raises only on
     near-degenerate corpora (a family that size would re-quadratize
     the plan — dedup the corpus first).  Zero-norm vectors have no defined cosine
@@ -1145,21 +1149,11 @@ def knn_self_blas(
 
     Returns (query_id, neighbor_id, rnk), rnk 1-based.
     """
-    import math
-
     import numpy as np
     import pandas as pd
 
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    from .scale import _deterministic_borders
-
-    slim = corpus.select(id_col, vec_col)
-    n = slim.count()
-    if n == 0:
-        return slim.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rnk long"
-        )
     kk = k + tie_slack
     schema = StructType(
         [
@@ -1169,21 +1163,22 @@ def knn_self_blas(
         ]
     )
 
-    def topk_rows(qids, nids, sims):
+    def edges(q, nb, s):
+        return pd.DataFrame({"query_id": q, "neighbor_id": nb, "_sim": s})
+
+    def topk_rows(qids, nids, sims, same):
         """Per left-row top-kk of sims (rows=qids, cols=nids), emitted
         as a long frame sorted deterministically (sim desc, nid asc).
         Fully vectorized (argsort + axis-wise lexsort); only rows whose
         boundary tie family crosses the cut fall back to per-row
         expansion — a ~10x map-stage win over the per-row Python loop
         on 20k-row corpora."""
+        if same:  # a query is not its own neighbor
+            sims[qids[:, None] == nids[None, :]] = -np.inf
         m = sims.shape[1]
         take = min(kk, m)
         if take <= 0 or not sims.shape[0]:
-            return (
-                np.array([], dtype=np.int64),
-                np.array([], dtype=np.int64),
-                np.array([], dtype=np.float64),
-            )
+            return edges(qids[:0], nids[:0], np.zeros(0))
         # argpartition (introselect) for the unordered top-take — the
         # per-row lexsort below imposes the deterministic order, so a
         # full-width argsort would pay ~2x for ordering that is
@@ -1244,146 +1239,9 @@ def knn_self_blas(
             out_q = np.concatenate([out_q, np.array(ex_q, dtype=np.int64)])
             out_n = np.concatenate([out_n, np.array(ex_n, dtype=np.int64)])
             out_s = np.concatenate([out_s, np.array(ex_s, dtype=np.float64)])
-        return out_q, out_n, out_s
+        return edges(out_q, out_n, out_s)
 
-    num_blocks = max(1, math.ceil(n / block_rows))
-    if num_blocks == 1:
-        sc = corpus.sparkSession.sparkContext
-        rows = slim.collect()
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([r[1] for r in rows], dtype=np.float64)
-        nz = np.linalg.norm(mat, axis=1) > 0
-        ids, mat = ids[nz], mat[nz]
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        order = np.argsort(ids)
-        b_ids, b_mat = sc.broadcast(ids[order]), sc.broadcast(mat[order])
-
-        def score(batches):
-            blk_ids, blk_mat = b_ids.value, b_mat.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = np.array(list(pdf[vec_col]), dtype=np.float64)
-                qids = pdf[id_col].to_numpy()
-                qnz = np.linalg.norm(q, axis=1) > 0
-                q, qids = q[qnz], qids[qnz]
-                if not len(q):
-                    continue
-                q /= np.linalg.norm(q, axis=1, keepdims=True)
-                # strip over query rows: bounds sims to strip×block
-                # (≤0.5 GB at the 65k block cap); each strip row still
-                # sees the FULL corpus, so top-k and tie expansion are
-                # unchanged
-                for s0 in range(0, len(q), _STRIP_ROWS):
-                    qi = qids[s0 : s0 + _STRIP_ROWS]
-                    sims = q[s0 : s0 + _STRIP_ROWS] @ blk_mat.T
-                    sims[qi[:, None] == blk_ids[None, :]] = -np.inf
-                    oq, on, os_ = topk_rows(qi, blk_ids, sims)
-                    yield pd.DataFrame(
-                        {"query_id": oq, "neighbor_id": on, "_sim": os_}
-                    )
-
-        # Parallelism of this path = scan-side partition count; a 2-file
-        # parquet corpus would run the O(n²) kernel on 2 cores
-        # (measured 44 s -> ~4 s at 20k vectors on local[32]).
-        par = max(1, min(
-            corpus.sparkSession.sparkContext.defaultParallelism,
-            math.ceil(n / 256),
-        ))
-        cands = slim.repartition(par).mapInPandas(score, schema=schema)
-    else:
-        def _tag(borders: list) -> DataFrame:
-            barr = F.array(*[F.lit(int(b)) for b in borders])
-            return slim.withColumn(
-                "_blk", F.size(F.filter(barr, lambda b: b < F.col(id_col)))
-            )
-
-        borders = _deterministic_borders(slim, id_col, num_blocks)
-        for _retry in range(2):
-            counts = [
-                r["count"] for r in _tag(borders).groupBy("_blk").count().collect()
-            ]
-            if max(counts) <= 4 * block_rows:
-                break
-            num_blocks = max(num_blocks + 1, math.ceil(n / block_rows * 2))
-            borders = _deterministic_borders(slim, id_col, num_blocks)
-        tagged = _tag(borders)
-        nb = len(borders) + 1
-
-        pair_structs = F.transform(
-            F.sequence(F.lit(0), F.lit(nb - 1)),
-            lambda kx: F.struct(
-                F.least(F.col("_blk"), kx).alias("pi"),
-                F.greatest(F.col("_blk"), kx).alias("pj"),
-            ),
-        )
-        exploded = tagged.select(
-            id_col, vec_col, "_blk", F.explode(pair_structs).alias("_p")
-        ).select(
-            id_col, vec_col, "_blk",
-            F.col("_p.pi").alias("_pi"), F.col("_p.pj").alias("_pj"),
-        )
-
-        def score_pair(key, pdf):
-            pi, pj = int(key[0]), int(key[1])
-            ids = pdf[id_col].to_numpy()
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nzm = np.linalg.norm(mat, axis=1) > 0
-            if not nzm.all():
-                pdf = pdf[nzm]
-                ids, mat = ids[nzm], mat[nzm]
-            if not len(ids):
-                return pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "_sim": []}
-                ).astype({"query_id": "int64", "neighbor_id": "int64", "_sim": "float64"})
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-
-            def topk_strips(lids, lmat, rids, rmat, mask_equal_ids):
-                # strip over query rows (each strip row keeps its FULL
-                # sims row, so top-k + tie expansion are unchanged);
-                # a block_rows² allocation at the 65k default would be
-                # 34 GB — strips bound it at ≤0.5 GB.  Outputs stay
-                # ndarrays end-to-end (concatenate, never element
-                # extends) so the vectorized top-k isn't re-boxed into
-                # Python objects on the at-scale path.
-                oq, on, os_ = [], [], []
-                for s0 in range(0, len(lmat), _STRIP_ROWS):
-                    li = lids[s0 : s0 + _STRIP_ROWS]
-                    sims = lmat[s0 : s0 + _STRIP_ROWS] @ rmat.T
-                    if mask_equal_ids:
-                        sims[li[:, None] == rids[None, :]] = -np.inf
-                    a, b, c = topk_rows(li, rids, sims)
-                    oq.append(a); on.append(b); os_.append(c)
-                return (
-                    np.concatenate(oq) if oq else np.array([], dtype=np.int64),
-                    np.concatenate(on) if on else np.array([], dtype=np.int64),
-                    np.concatenate(os_) if os_ else np.array([], dtype=np.float64),
-                )
-
-            if pi == pj:
-                oq, on, os_ = topk_strips(ids, mat, ids, mat, True)
-                return pd.DataFrame(
-                    {"query_id": oq, "neighbor_id": on, "_sim": os_}
-                )
-            lmask = (pdf["_blk"] == pi).to_numpy()
-            if not lmask.any() or lmask.all():
-                return pd.DataFrame(
-                    {"query_id": [], "neighbor_id": [], "_sim": []}
-                ).astype({"query_id": "int64", "neighbor_id": "int64", "_sim": "float64"})
-            oq1, on1, os1 = topk_strips(ids[lmask], mat[lmask],
-                                        ids[~lmask], mat[~lmask], False)
-            oq2, on2, os2 = topk_strips(ids[~lmask], mat[~lmask],
-                                        ids[lmask], mat[lmask], False)
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate([oq1, oq2]),
-                    "neighbor_id": np.concatenate([on1, on2]),
-                    "_sim": np.concatenate([os1, os2]),
-                }
-            )
-
-        cands = exploded.groupBy("_pi", "_pj").applyInPandas(score_pair, schema=schema)
-
+    cands = _blocked_pairs(corpus, id_col, vec_col, block_rows, topk_rows, schema, both_ways=True)
     w = Window.partitionBy("query_id").orderBy(
         F.col("_sim").desc(), F.col("neighbor_id").asc()
     )

@@ -63,14 +63,14 @@ FROM base
 """
 
 
-def _sliding(spark, sf_dir, window, scalable=False):
+def _sliding(spark, sf_dir, window, scalable=False, agg="sum"):
     fn = sliding_aggregate_scalable if scalable else sliding_aggregate
     out = fn(
         events_u(spark, sf_dir),
         order_by=["ts", "event_id"],
         value_col="value_u",
         window=window,
-        agg="sum",
+        agg=agg,
         agg_col="agg_u",
     )
     return out.select("rank", "event_id", "agg_u")
@@ -1920,25 +1920,11 @@ FROM base
 """
 
 
-def _sliding_minmax(spark, sf_dir, window, agg):
-    from ..operators.scale import sliding_minmax_scalable
-
-    out = sliding_minmax_scalable(
-        events_u(spark, sf_dir),
-        order_by=["ts", "event_id"],
-        value_col="value_u",
-        window=window,
-        agg=agg,
-        agg_col="agg_u",
-    )
-    return out.select("rank", "event_id", "agg_u")
-
-
 query("sliding_min_79_scalable", _SLIDING_MINMAX_SQL.format(fn="MIN", pre=78))(
-    lambda spark, sf_dir: _sliding_minmax(spark, sf_dir, 79, "min")
+    lambda spark, sf_dir: _sliding(spark, sf_dir, 79, scalable=True, agg="min")
 )
 query("sliding_max_91_scalable", _SLIDING_MINMAX_SQL.format(fn="MAX", pre=90))(
-    lambda spark, sf_dir: _sliding_minmax(spark, sf_dir, 91, "max")
+    lambda spark, sf_dir: _sliding(spark, sf_dir, 91, scalable=True, agg="max")
 )
 
 
@@ -6742,7 +6728,7 @@ def quantile_normalize_events(spark, sf_dir):
     hp = hs.groupBy(F.col("v").alias("pv")).agg(
         F.sum("cnt").cast("long").alias("cntp")
     )
-    pp = _ranged_with_offsets(hp, ["pv"], "cntp", 32).select(
+    pp = _ranged_with_offsets(hp, ["pv"], "cntp", None).select(
         "pv",
         (F.col("_prefix") - F.col("cntp")).cast("long").alias("start_p"),
         F.col("_prefix").cast("long").alias("end_p"),
