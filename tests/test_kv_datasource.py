@@ -121,3 +121,20 @@ def test_kvtext_writer_append_and_empty(spark, tmp_path):
         "kvtext"
     ).mode("overwrite").option("path", empty_out).save()
     assert os.path.exists(os.path.join(empty_out, "_SUCCESS"))
+
+
+def test_text_kv_input_splits_fill_the_cores(spark, tmp_path):
+    """A 4.4 MB key/value text file reads as at least one split per core
+    of the local[4] session (the 4 MB default open cost gave 2)."""
+    import random
+
+    from uw_mapreduce_spark.sources.text_kv import read_text_kv
+
+    rng = random.Random(7)
+    path = tmp_path / "kv.txt"
+    path.write_text("".join(
+        f"{rng.randint(-2**31, 2**31 - 1)}\t{rng.randint(-2**31, 2**31 - 1)}\n"
+        for _ in range(205_000)
+    ))
+    assert path.stat().st_size >= 4_400_000
+    assert read_text_kv(spark, str(path)).rdd.getNumPartitions() >= 4

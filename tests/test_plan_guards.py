@@ -261,6 +261,40 @@ def test_scalable_pass_job_count(spark):
         assert len(jobs) <= 4, (name, len(jobs))
 
 
+def test_scalable_halo_is_row_bounded(spark):
+    """Uniform keys, P=8, l=91: the rows written to shuffles (the border
+    histogram's and the exchange's) stay ≤ n + P·(l-1) + n/4.  Each
+    range's halo is its trailing l-1 rows plus at most one histogram
+    interval, not the whole preceding range (which wrote about 2n)."""
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
+
+    sc = spark.sparkContext
+    n, p, l = 20_000, 8, 91
+    df = _uniform_long_frame(spark, n)
+    group = "scalable-halo-rows"
+    sc.setJobGroup(group, group)
+    try:
+        sliding_aggregate_scalable(df, ["k"], "v", l, num_partitions=p).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # status events reach the store asynchronously
+    tracker = sc.statusTracker()
+    stage_ids = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stages = jsc.statusStore().stageList(None, False, False, no_quantiles, None)
+    written = sum(
+        stages.apply(i).shuffleWriteRecords()
+        for i in range(stages.size())
+        if stages.apply(i).stageId() in stage_ids
+    )
+    assert 0 < written <= n + p * (l - 1) + n // 4, written
+
+
 def test_murmur3_port_matches_spark_hash(spark):
     """The driver's port of Murmur3_x86_32.hashInt is Spark's hash()."""
     import pyspark.sql.functions as F

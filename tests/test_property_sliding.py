@@ -85,6 +85,21 @@ _INF = float("inf")
 @example(inputs=("key long, value long", [(k, k * k) for k in range(12)]), l=40)
 # l larger than one range (~14 rows each at P=3), halo spanning two ranges
 @example(inputs=("key long, value long", [(k, k % 7 - 3) for k in range(41)]), l=33)
+# the halo walk at P=3 on 30 distinct keys (three ranges of 10): l = n/P - 1,
+# n/P, n/P + 1, 3n/P (= n at P=3) and 2n
+@example(inputs=("key long, value long", [(k, k % 5 - 2) for k in range(30)]), l=9)
+@example(inputs=("key long, value long", [(k, k % 5 - 2) for k in range(30)]), l=10)
+@example(inputs=("key long, value long", [(k, k % 5 - 2) for k in range(30)]), l=11)
+@example(inputs=("key long, value long", [(k, k % 5 - 2) for k in range(30)]), l=30)
+@example(inputs=("key long, value long", [(k, k % 5 - 2) for k in range(30)]), l=60)
+# NULL keys the walk reaches: l-1 is more than range 0's keyed rows
+@example(inputs=("key double, value double", [
+    (None if k < 5 else float(k), k / 2) for k in range(30)
+]), l=12)
+# one heavy key fills a whole interval, the next range's halo
+@example(inputs=("key long, value long", [
+    (k if k < 9 else 9 if k < 21 else k - 11, k) for k in range(30)
+]), l=5)
 # more partitions than distinct keys
 @example(inputs=("key long, value long", [(k % 2, k) for k in range(9)]), l=4)
 # empty input

@@ -25,14 +25,22 @@ serialization anywhere):
      to that range.  The borders are a pure function of the data, so a
      recompute routes every row identically — it can never re-border
      mid-query (which Spark's randomly-seeded RangePartitioner could).
-  2. on the driver: each range's rank offset, its carry-in (prefix
-     consumers) and its halo sources (trailing windows of l rows): the
-     ranges just before it whose exact row counts add up to ≥ l-1.
+  2. on the driver (`_halo_walk`): each range's rank base, its carry-in
+     (prefix consumers) and its halo threshold (trailing windows of l
+     rows).  The borders carry the histogram's final intervals, each
+     with its exact row count and max key.  Range k walks back from its
+     first row over whole intervals until they hold ≥ l-1 rows; its
+     threshold t_k is the max key of the interval just before them.  A
+     walk that reaches interval 0 takes every earlier row, NULL keys
+     too (ranges 0..K).  t_k never decreases with k.
   3. ONE exchange.  Each row goes to its own range and, through
-     ``explode(sequence(pid, last[pid]))``, to each later range whose
-     trailing l-1 rows reach back into it — the reference's bounded
-     replication (`remotelyRelevantReducers` and the replication loop,
-     :257-303).  Halo rows per range ≤ l-1 plus one preceding range.
+     ``explode(sequence(pid, last(key)))``, to each later range whose
+     threshold lies below its key: ``last(key) = K + _pid_expr(key,
+     t[K+1:])``, a balanced comparison tree like the router's — the
+     reference's bounded replication (`remotelyRelevantReducers` and
+     the replication loop, :257-303).  A range's halo is ≤ l-1 rows plus
+     one interval (an interval holds ≤ n/4P rows unless it is one heavy
+     key's), not whole earlier ranges.
      Range k travels as ``_pid = code[k]`` (``_range_codes``): code[k] ≡
      k (mod ranges), chosen on the driver so that no two ranges share a
      shuffle partition of ``repartition(P, _pid)``.
@@ -44,8 +52,9 @@ serialization anywhere):
      consumers add the carry-in.  Only each range's own rows are kept.
 
 No cache, no ``count()`` barrier and no join: a pass is its border jobs
-and the consumer's own action.  Per-task memory is O(n/P + l + one
-range); the driver holds O(P) values.
+and the consumer's own action.  Per-task memory is O(n/P + l + the
+largest interval); the driver holds the O(P·buckets) final intervals
+and O(P) values per range.
 
 Integer values accumulate in int64 (the reference's int32 overflow
 fixed — SURVEY.md §2.3.5); floats accumulate in double.
@@ -113,12 +122,21 @@ class _Borders(list):
     one).  NULL keys count in range 0 and NaN keys in the last, where
     ``_pid_expr`` routes them.  A single range needs no offsets: when
     there are no borders, the counts are only filled in if the
-    histogram had them anyway."""
+    histogram had them anyway.
 
-    def __init__(self, borders=(), counts=None, totals=None):
+    ``intervals`` are the disjoint key intervals the counts were summed
+    from, in key order, as (range, row count, max key): the histogram's
+    final buckets, or each whole range for the exact fallback (whose
+    last range has no max key).  The histogram's intervals leave out
+    NULL and NaN keys; the fallback's first range counts its NULL keys.
+    The halo walk (`_halo_walk`) cuts each range's halo at an interval
+    edge, so it needs no per-row count."""
+
+    def __init__(self, borders=(), counts=None, totals=None, intervals=()):
         super().__init__(borders)
         self.counts = counts or [0] * (len(self) + 1)
         self.totals = totals or [None] * (len(self) + 1)
+        self.intervals = list(intervals)
 
 
 def _spark_sum(a, b):
@@ -174,7 +192,7 @@ def _borders_histogram(
     The images are monotone, so the final intervals are disjoint and
     ordered by their bucket path (level-0 bucket, child, grandchild).
     Borders are interval maxima, so each range's count and total is the
-    sum over the intervals inside it.
+    sum over the intervals inside it; the intervals are returned too.
     """
     key = F.col("_k")
     kd = _as_double(key, dtype)
@@ -232,7 +250,8 @@ def _borders_histogram(
     for j, cnt, t in groups:
         counts[j] += cnt
         totals[j] = fold(totals[j], t)
-    return _Borders(borders, counts, totals)
+    intervals = [(j, iv[1], iv[3]) for j, iv in zip(ranges, final)]
+    return _Borders(borders, counts, totals, intervals)
 
 
 def _borders_exact(
@@ -276,7 +295,8 @@ def _borders_exact(
 def _range_totals(keyed: DataFrame, borders: list, agg) -> _Borders:
     """The exact fallback's per-range counts and totals: one P-row
     groupBy over the ranges (the reference's in-band sentinel counts,
-    `SlidingAggregation.java:159-168`)."""
+    `SlidingAggregation.java:159-168`).  Each whole range is one
+    interval."""
     if not borders:
         return _Borders()
     parts = len(borders) + 1
@@ -286,7 +306,7 @@ def _range_totals(keyed: DataFrame, borders: list, agg) -> _Borders:
         F.count(F.lit(1)), total
     ).collect():
         counts[pid], totals[pid] = cnt, t
-    return _Borders(borders, counts, totals)
+    return _Borders(borders, counts, totals, zip(range(parts), counts, [*borders, None]))
 
 
 def _deterministic_borders(
@@ -373,6 +393,28 @@ def _pid_expr(order_col: str, borders: list):
     return F.when(key.isNull(), F.lit(0)).otherwise(tree(0, len(borders)))
 
 
+def _halo_walk(intervals: list, off: list[int], halo: int):
+    """Rank base and halo threshold of each range, on the driver.
+
+    Range k walks back from its first row over whole intervals until
+    they hold ≥ ``halo`` rows; its halo is then every earlier row whose
+    key is above t[k], the max key of the interval just before them, and
+    its rank base is off[k] less the rows the walk took.  A walk that
+    reaches interval 0 takes every row before range k, NULL keys too:
+    t[k] is None and the base 0.  A later range starts its walk no
+    earlier, so t is non-decreasing and its Nones come first."""
+    cum = list(accumulate((c for _j, c, _mx in intervals), initial=0))
+    base, t = [], []
+    e = 0  # intervals before range k
+    for k in range(len(off) - 1):
+        while e < len(intervals) and intervals[e][0] < k:
+            e += 1
+        i = bisect_right(cum, cum[e] - halo, 0, e + 1) - 1  # the walk takes intervals i..e-1
+        base.append(off[k] - cum[e] + cum[i] if i > 0 else 0)
+        t.append(intervals[i - 1][2] if i > 0 else None)
+    return base, t
+
+
 def _per_range(values: list):
     """``values[range]``: one driver constant per range, as a column.
     ``_pid`` holds the range index or, after step 3, its shuffle code;
@@ -455,16 +497,17 @@ def _ranged_with_offsets(
     counts, totals = borders.counts, borders.totals
     ranged = df.withColumn("_pid", _pid_expr(order_by[0], borders))
 
-    # Step 2: range k's first halo source is the latest range s with
-    # off[k] - off[s] >= halo; last[j] is the latest range j feeds.
+    # Step 2: each range's rank base and halo threshold.
     off = list(accumulate(counts, initial=0))
-    first = [max(0, bisect_right(off, off[k] - halo, 0, k + 1) - 1) for k in range(parts)]
-    last = [bisect_right(first, j) - 1 for j in range(parts)]
+    base, t = _halo_walk(borders.intervals, off, halo)
+    k_all = t.count(None) - 1  # ranges 0..k_all take every earlier row
 
-    # Step 3: one exchange, each row to its own range and its halo
-    # ranges, every range to a shuffle task of its own.
-    if last != list(range(parts)):
-        ranged = ranged.withColumn("_pid", F.explode(F.sequence(F.col("_pid"), _per_range(last))))
+    # Step 3: one exchange, each row to its own range and to every later
+    # range whose threshold is below its key, every range to a shuffle
+    # task of its own.
+    if halo and parts > 1:
+        last = F.lit(k_all) + _pid_expr(order_by[0], t[k_all + 1:])
+        ranged = ranged.withColumn("_pid", F.explode(F.sequence(F.col("_pid"), last)))
     ranged = ranged.withColumn("_pid", _per_range(_range_codes(parts, num_partitions)))
     ranged = ranged.repartition(num_partitions, "_pid")
 
@@ -472,7 +515,7 @@ def _ranged_with_offsets(
     tie = [v] if window is not None and value_col not in order_by else []
     w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_by], *tie)
     out = ranged.withColumn(
-        "rank", (_per_range([off[s] for s in first]) + F.row_number().over(w) - 1).cast("long")
+        "rank", (_per_range(base) + F.row_number().over(w) - 1).cast("long")
     )
     if prefix:
         out = _with_prefix(out, w, v, agg, inclusive, totals, df.schema[value_col].dataType)

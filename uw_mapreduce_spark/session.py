@@ -36,6 +36,13 @@ RUNTIME_CONFS: dict[str, str] = {
     # where one side is selective (complements operators/bloomjoin.py's
     # explicit map-only prune for the cases the optimizer can't see).
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # File scans split at min(maxPartitionBytes, max(openCost, bytes /
+    # cores)).  The 4 MB default open cost floors splits at 4 MB, so a
+    # 4.4 MB text input read as 2 splits and scanned on 2 of 4 cores; at
+    # 1 MiB every core gets a split from ~4 MB of input up.  There is no
+    # per-read option: Spark 4.1's FilePartition.maxSplitBytes reads
+    # session confs only.
+    "spark.sql.files.openCostInBytes": str(1 << 20),
 }
 
 
