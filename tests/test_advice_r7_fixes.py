@@ -1,6 +1,6 @@
 """Regression pins for the round-7 advice fixes: exact integer
 bucketing in the interval overlap join (negative / huge epochs),
-type-preserving carry in prefix_max_scalable, the empty-compare-cols
+type-preserving carry in the prefix max, the empty-compare-cols
 guard in table_diff_columns, and the host-sized driver-memory default.
 """
 
@@ -58,14 +58,16 @@ def test_interval_overlap_emits_each_pair_once(spark):
 def test_prefix_max_scalable_preserves_value_type(spark):
     """The broadcast carry must take the value column's type: int and
     double inputs previously hit the hardcoded 'long' carry schema."""
-    from uw_mapreduce_spark.operators.scale import prefix_max_scalable
+    from uw_mapreduce_spark.operators.scale import prefix_scalable
 
     df = spark.range(30).select(
         F.col("id").alias("i"),
         (F.col("id") % 7).cast("int").alias("v_int"),
         ((F.col("id") % 5) / 2.0).alias("v_dbl"),
     )
-    out_i = prefix_max_scalable(df, ["i"], "v_int", num_partitions=4).orderBy("i")
+    out_i = prefix_scalable(
+        df, ["i"], "v_int", agg="max", out_col="prefix_max", num_partitions=4
+    ).orderBy("i")
     vals = [r.prefix_max for r in out_i.collect()]
     run = []
     m = None
@@ -74,7 +76,9 @@ def test_prefix_max_scalable_preserves_value_type(spark):
         run.append(m)
     assert vals == run
 
-    out_d = prefix_max_scalable(df, ["i"], "v_dbl", num_partitions=4).orderBy("i")
+    out_d = prefix_scalable(
+        df, ["i"], "v_dbl", agg="max", out_col="prefix_max", num_partitions=4
+    ).orderBy("i")
     dvals = [r.prefix_max for r in out_d.collect()]
     drun = []
     m = None

@@ -37,6 +37,31 @@ def test_builder_version_change_invalidates_cache(spark, sf_small, tmp_path, mon
     assert len(os.listdir(cache)) == 2, "original version must cache-hit again"
 
 
+def test_builder_version_covers_the_border_helpers(spark, sf_small, tmp_path, monkeypatch):
+    """Both BLAS artifacts salt their key with the source of the helpers
+    that compute their block borders, not only the entry points that
+    call them: an edit to `scale._borders_histogram` must rebuild."""
+    import inspect
+
+    from uw_mapreduce_spark.operators import similarity as sim
+
+    hashed = []
+    real_version = sim._builder_version
+
+    def recording(*fns):
+        hashed.append(fns)
+        return real_version(*fns)
+
+    monkeypatch.setattr(sim, "_builder_version", recording)
+    emb = spark.read.parquet(f"{sf_small}/embeddings.parquet").orderBy("vec_id").limit(64)
+    cache = str(tmp_path / "c")
+    sim.knn_graph_artifact(emb, k=3, cache_dir=cache).count()
+    sim.near_dup_pairs_artifact(emb, cache_dir=cache).count()
+    assert len(hashed) == 2
+    for fns in hashed:
+        assert "def _borders_histogram" in "".join(inspect.getsource(f) for f in fns)
+
+
 def test_family_gc_keeps_newest_n(spark, sf_small, tmp_path, monkeypatch):
     """The (N+1)-th corpus snapshot in a family evicts the oldest
     committed artifact (VERDICT r9 item 5) — fingerprint-keyed entries

@@ -5,8 +5,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from uw_mapreduce_spark.operators.partitioning import rebalance_by_rank, total_sort
-from uw_mapreduce_spark.operators.rank import global_rank, global_rank_scalable
+from uw_mapreduce_spark.operators.rank import global_rank
 from uw_mapreduce_spark.operators.sampling import bernoulli_sample, equi_depth_borders
+from uw_mapreduce_spark.operators.scale import global_rank_scalable
 
 
 def kv(spark, rows):
@@ -37,6 +38,18 @@ def test_global_rank_paths_agree(spark):
     assert a == b
     ranks = sorted(r[2] for r in a)
     assert ranks == list(range(200))
+
+
+def test_prefix_scalable_rejects_other_aggs(spark):
+    """Only sum and max have a carry-in; any other agg is refused before
+    a job runs, as sliding_aggregate_scalable refuses unknown aggs."""
+    import pytest
+
+    from uw_mapreduce_spark.operators.scale import prefix_scalable
+
+    for agg in ("min", "avg", "count"):
+        with pytest.raises(ValueError):
+            prefix_scalable(kv(spark, [(1, 1)]), ["key"], "value", agg=agg)
 
 
 def test_total_sort_is_sorted_and_complete(spark):

@@ -200,8 +200,10 @@ def test_scalable_range_pass_has_no_cache_or_rank_join(spark):
     self-join on a shifted rank is needed for the window's far end."""
     import re
 
-    from uw_mapreduce_spark.operators.rank import global_rank_scalable
-    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
+    from uw_mapreduce_spark.operators.scale import (
+        global_rank_scalable,
+        sliding_aggregate_scalable,
+    )
 
     df = _kv_frame(spark)
     frames = {
@@ -241,8 +243,10 @@ def test_scalable_pass_job_count(spark):
     noop write, launch ≤ 4 Spark jobs (a groupBy collect and a shuffled
     write are two jobs each under AQE).  The separate min/max stats scan
     and the P-row count scan are gone."""
-    from uw_mapreduce_spark.operators.rank import global_rank_scalable
-    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
+    from uw_mapreduce_spark.operators.scale import (
+        global_rank_scalable,
+        sliding_aggregate_scalable,
+    )
 
     sc = spark.sparkContext
     df = _uniform_long_frame(spark)
@@ -337,12 +341,51 @@ def test_scalable_pass_one_range_per_task(spark):
 
 
 def test_prefix_max_scalable_defaults_to_shuffle_partitions(spark):
-    """prefix_max_scalable resolves num_partitions=None like its
+    """prefix_scalable resolves num_partitions=None like its
     siblings: the session's shuffle partitions, not a fixed 32."""
-    from uw_mapreduce_spark.operators.scale import prefix_max_scalable
+    from uw_mapreduce_spark.operators.scale import prefix_scalable
 
-    out = prefix_max_scalable(_uniform_long_frame(spark, 2000), ["k"], "v")
+    out = prefix_scalable(_uniform_long_frame(spark, 2000), ["k"], "v", agg="max")
     assert out.rdd.getNumPartitions() == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_range_pass_is_private_to_scale():
+    """Consumers reach the range pass only through the public entry
+    points of `operators/scale.py` (global_rank_scalable,
+    prefix_scalable, sliding_aggregate_scalable): no other package
+    module names `_ranged_with_offsets`, and the only private names any
+    of them take from `scale` are the border helpers of the blocked
+    BLAS kernels, in `similarity._blocked_pairs`."""
+    import ast
+    import pathlib
+
+    import uw_mapreduce_spark
+
+    root = pathlib.Path(uw_mapreduce_spark.__file__).parent
+    named, private = set(), set()
+
+    def scan(node, rel, where):
+        for child in ast.iter_child_nodes(node):
+            inner = child.name if isinstance(child, ast.FunctionDef) else where
+            idents = (getattr(child, f, None) for f in ("id", "attr", "name"))
+            if "_ranged_with_offsets" in idents:
+                named.add(rel)
+            if isinstance(child, ast.ImportFrom) and (child.module or "").split(".")[-1] == "scale":
+                private.update((rel, where, a.name) for a in child.names if a.name.startswith("_"))
+            if isinstance(child, ast.Attribute) and getattr(child.value, "id", None) == "scale":
+                if child.attr.startswith("_"):
+                    private.add((rel, where, child.attr))
+            scan(child, rel, inner)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel != "operators/scale.py":
+            scan(ast.parse(path.read_text()), rel, None)
+    assert named == set(), named
+    assert private == {
+        ("operators/similarity.py", "_blocked_pairs", "_deterministic_borders"),
+        ("operators/similarity.py", "_blocked_pairs", "_pid_expr"),
+    }, private
 
 
 def test_range_consumers_default_to_shuffle_partitions(spark, sf_small, monkeypatch):

@@ -216,27 +216,39 @@ _PM_VALUES = st.none() | st.integers(min_value=-10**6, max_value=10**6)
 @example(rows=[])
 def test_prefix_max_scalable_matches_running_max(spark, rows):
     """Inclusive and exclusive running max in (k, i) order, with ties on
-    k broken by the row index i; NULL values are skipped."""
-    from uw_mapreduce_spark.operators.scale import prefix_max_scalable
+    k broken by the row index i; NULL values are skipped.  The running
+    sum of the same input is checked against the same walk."""
+    from uw_mapreduce_spark.operators.scale import prefix_scalable
 
     data = [(k, i, v) for i, (k, v) in enumerate(rows)]
     vtype = "double" if any(isinstance(v, float) for _, v in rows) else "long"
     df = spark.createDataFrame(data, f"k double, i long, v {vtype}").repartition(6)
-    got = {
-        r["i"]: (r["incl"], r["excl"])
-        for r in prefix_max_scalable(df, ["k", "i"], "v", out_col="incl", num_partitions=4)
-        .join(prefix_max_scalable(df, ["k", "i"], "v", out_col="excl", num_partitions=4,
+
+    def prefixes(agg):
+        return {
+            r["i"]: (r["incl"], r["excl"])
+            for r in prefix_scalable(df, ["k", "i"], "v", agg=agg, out_col="incl", num_partitions=4)
+            .join(prefix_scalable(df, ["k", "i"], "v", agg=agg, out_col="excl", num_partitions=4,
                                   inclusive=False).select("i", "excl"), "i")
-        .collect()
-    }
+            .collect()
+        }
+
+    got, got_sum = prefixes("max"), prefixes("sum")
     acc, want = None, {}
+    total, want_sum = 0, {}
     for k, i, v in sorted(data, key=lambda t: (_spark_order(t[0]), t[1])):
-        before = acc
+        before, total_before = acc, total
         if v is not None and (acc is None or _spark_order(v) > _spark_order(acc)):
             acc = v
+        if v is not None:
+            total += v
         want[i] = (acc, before)
+        want_sum[i] = (total, total_before)
     assert {i: tuple(map(_comparable, p)) for i, p in got.items()} == {
         i: tuple(map(_comparable, p)) for i, p in want.items()
+    }
+    assert {i: tuple(map(_comparable, p)) for i, p in got_sum.items()} == {
+        i: tuple(map(_comparable, p)) for i, p in want_sum.items()
     }
 
 

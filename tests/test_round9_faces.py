@@ -225,7 +225,7 @@ def test_prefix_max_scalable_exclusive_matches_model(spark):
     correct across partition boundaries and carry-in composition —
     checked against a pure-Python model on adversarial layouts
     (descending, all-equal, single row, negative values)."""
-    from uw_mapreduce_spark.operators.scale import prefix_max_scalable
+    from uw_mapreduce_spark.operators.scale import prefix_scalable
 
     cases = [
         [5],
@@ -240,8 +240,8 @@ def test_prefix_max_scalable_exclusive_matches_model(spark):
         df = spark.createDataFrame(rows, "i long, v long").repartition(5)
         got = {
             r["i"]: r["pm"]
-            for r in prefix_max_scalable(
-                df, ["i"], "v", out_col="pm", num_partitions=4, inclusive=False
+            for r in prefix_scalable(
+                df, ["i"], "v", agg="max", out_col="pm", num_partitions=4, inclusive=False
             ).collect()
         }
         acc, want = None, {}

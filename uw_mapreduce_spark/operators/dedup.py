@@ -839,7 +839,7 @@ def sorted_neighborhood_pairs(
     skew possible (contrast Σ|block|² blocking, which degrades on hot
     blocks).
 
-    Scale shape: the rank is `rank.global_rank_scalable` (range
+    Scale shape: the rank is `scale.global_rank_scalable` (range
     exchange + P-row offsets — no single-partition sort), and each of
     the ``window`` neighbor joins is a 1:1 shifted-rank equi-join —
     the reference's own O12 bounded-replication idiom
@@ -847,7 +847,7 @@ def sorted_neighborhood_pairs(
 
     Returns (id_a, key_a, id_b, key_b, delta) candidates; callers
     append their verify predicate (edit distance etc.)."""
-    from .rank import global_rank_scalable
+    from .scale import global_rank_scalable
 
     ranked = global_rank_scalable(
         df.select(F.col(id_col), F.col(key_col)), [key_col, id_col], "_snm_rank"

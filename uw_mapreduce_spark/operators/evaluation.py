@@ -20,7 +20,7 @@ Scale shape (100 TB):
 
 - AUC: one groupBy(score) (map-side combine bounds the shuffle at
   |distinct scores| per task), one scalable prefix sum over the
-  distinct-score frame (`scale._ranged_with_offsets` — range exchange
+  distinct-score frame (`scale.prefix_scalable` — range exchange
   + P-row offsets, no single-partition window), one scalar aggregate.
 - Deciles: `rank.ntile_scalable` on (score desc, id) — two-pass
   global rank, closed-form bucket; the final capture table is k rows.
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .classify import _quantized, label_centroid_sums
+from .scale import prefix_scalable
 
 __all__ = [
     "binary_centroid_scores",
@@ -96,6 +97,27 @@ def binary_centroid_scores(
     )
 
 
+def _u2_frame(df, pos_col, value_col, num_partitions, *aggs):
+    """The value histogram behind `roc_auc` and `rank_sum_test`: per
+    DISTINCT ``value_col``, ``_np`` positive and ``_nn`` negative rows
+    (plus ``aggs``), and its doubled U term ``np · (2·negatives_below +
+    nn)`` — strict wins count 2, ties 1.  The negatives below are the
+    exclusive prefix of ``_nn`` in value order, from the scalable
+    two-pass `scale.prefix_scalable`.  The term is DECIMAL(38,0):
+    positives×below is corpus-sized × corpus-sized and an int64 product
+    wraps silently from ~3e9 pairs (non-ANSI).  Returns the frame and
+    the term."""
+    g = df.groupBy(F.col(value_col).alias("_v")).agg(
+        F.sum(F.col(pos_col)).cast("long").alias("_np"),
+        F.sum(F.lit(1) - F.col(pos_col)).cast("long").alias("_nn"),
+        *aggs,
+    )
+    pref = prefix_scalable(g, ["_v"], "_nn", out_col="_prefix", num_partitions=num_partitions)
+    below = (F.col("_prefix") - F.col("_nn")).cast(_DEC)
+    term = F.col("_np").cast(_DEC) * (F.lit(2).cast(_DEC) * below + F.col("_nn").cast(_DEC))
+    return pref, term
+
+
 def roc_auc(
     scored: DataFrame,
     is_pos_col: str = "is_pos",
@@ -120,21 +142,13 @@ def roc_auc(
     rather than saturating, and throws under ANSI mode).
 
     The ordered cumulative count runs on the scalable two-pass prefix
-    plan (`scale._ranged_with_offsets`), not an unpartitioned window —
-    |distinct scores| grows with the corpus."""
-    from .scale import _ranged_with_offsets
-
-    g = scored.groupBy(F.col(score_col).alias("_s")).agg(
-        F.sum(F.col(is_pos_col)).cast("long").alias("_np"),
-        F.sum(F.lit(1) - F.col(is_pos_col)).cast("long").alias("_nn"),
-    )
-    pref = _ranged_with_offsets(g, ["_s"], "_nn", num_partitions)
-    below = (F.col("_prefix") - F.col("_nn")).cast(_DEC)
-    term = F.col("_np").cast(_DEC) * (F.lit(2).cast(_DEC) * below + F.col("_nn").cast(_DEC))
+    plan (`_u2_frame`), not an unpartitioned window — |distinct scores|
+    grows with the corpus."""
+    pref, u2 = _u2_frame(scored, is_pos_col, score_col, num_partitions)
     tot = pref.agg(
         F.sum("_np").cast("long").alias("n_pos"),
         F.sum("_nn").cast("long").alias("n_neg"),
-        F.sum(term).alias("_num2_dec"),
+        F.sum(u2).alias("_num2_dec"),
     ).withColumn("num2", F.col("_num2_dec").cast("long"))
     num = F.col("_num2_dec") * F.lit(1_000_000).cast(_DEC)
     den = F.lit(2).cast(_DEC) * F.col("n_pos").cast(_DEC) * F.col("n_neg").cast(_DEC)
@@ -171,22 +185,10 @@ def rank_sum_test(
 
     Scale shape: one groupBy(value) histogram (map-side combine), one
     scalable two-pass prefix sum over the distinct-value frame
-    (`scale._ranged_with_offsets` — no unpartitioned window), one
-    scalar aggregate.  The corpus is never range-shuffled, only its
-    value histogram."""
-    from .scale import _ranged_with_offsets
-
-    g = df.groupBy(F.col(value_col).alias("_v")).agg(
-        F.sum(F.col(treated_col)).cast("long").alias("_np"),
-        F.sum(F.lit(1) - F.col(treated_col)).cast("long").alias("_nn"),
-        F.count(F.lit(1)).cast("long").alias("_cnt"),
-    )
-    pref = _ranged_with_offsets(g, ["_v"], "_nn", num_partitions)
-    below = (F.col("_prefix") - F.col("_nn")).cast(_DEC)
-    # treated×below is corpus-sized × corpus-sized — DECIMAL on both
-    # sides or it wraps int64 silently from ~3e9 pairs (non-ANSI).
-    term = F.col("_np").cast(_DEC) * (
-        F.lit(2).cast(_DEC) * below + F.col("_nn").cast(_DEC)
+    (`_u2_frame` — no unpartitioned window), one scalar aggregate.  The
+    corpus is never range-shuffled, only its value histogram."""
+    pref, u2 = _u2_frame(
+        df, treated_col, value_col, num_partitions, F.count(F.lit(1)).cast("long").alias("_cnt")
     )
     t3 = (
         F.col("_cnt").cast(_DEC) * F.col("_cnt").cast(_DEC) * F.col("_cnt").cast(_DEC)
@@ -195,7 +197,7 @@ def rank_sum_test(
     tot = pref.agg(
         F.sum(F.col("_np")).cast(_DEC).alias("n1"),
         F.sum(F.col("_nn")).cast(_DEC).alias("n2"),
-        F.sum(term).alias("u2"),
+        F.sum(u2).alias("u2"),
         F.sum(t3).alias("ties"),
     )
     n = F.col("n1") + F.col("n2")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .scale import global_rank_scalable, prefix_scalable
+
 
 def pack_documents(
     docs: DataFrame,
@@ -35,13 +37,14 @@ def pack_documents(
     with zero tokens occupy no window; their first/last pack is the
     window their offset points at.
 
-    Scale: one range exchange + P-row offset collect (the same
-    ``_ranged_with_offsets`` plan as the scalable rank/sliding family) —
-    per-task memory O(n/P), shuffle carries each row once.
+    Scale: one range exchange + P-row offset collect
+    (`scale.prefix_scalable`, the same range pass as the scalable
+    rank/sliding family) — per-task memory O(n/P), shuffle carries each
+    row once.
     """
-    from .scale import _ranged_with_offsets
-
-    out = _ranged_with_offsets(docs, order_by, token_col, num_partitions)
+    out = prefix_scalable(
+        docs, order_by, token_col, out_col="_prefix", num_partitions=num_partitions
+    )
     start = (F.col("_prefix") - F.col(token_col)).cast("long")
     end_incl = (F.col("_prefix") - F.lit(1)).cast("long")  # last token's offset
     budget = int(budget)
@@ -58,7 +61,7 @@ def pack_documents(
             ),
         )
         .withColumn("n_packs_spanned", (F.col("last_pack") - F.col("first_pack") + F.lit(1)))
-        .drop("_prefix", "rank", "_end_incl")
+        .drop("_prefix", "_end_incl")
     )
 
 
@@ -123,8 +126,6 @@ def deterministic_shuffle(
     the hash — no single-partition stage, and a rerun or partial
     recompute yields the identical permutation.
     """
-    from .rank import global_rank_scalable
-
     hashed = df.withColumn(
         "_h", F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols]))
     )

@@ -14,11 +14,11 @@ Two implementations:
 - ``global_rank`` — ``row_number() OVER (ORDER BY ...) - 1``.  Catalyst
   plans an unpartitioned window, which collapses to ONE partition: fine
   up to ~10M rows, wrong at 100 TB.
-- ``global_rank_scalable`` — the reference's own two-pass prefix-count
-  algorithm, which is exactly what ``RDD.zipWithIndex`` implements:
-  pass 1 counts records per range of keys, pass 2 numbers each range's
-  records from its prefix offset.  O(n/P) memory per task, no
-  single-partition bottleneck.
+- ``scale.global_rank_scalable`` — the reference's own two-pass
+  prefix-count algorithm, which is exactly what ``RDD.zipWithIndex``
+  implements: pass 1 counts records per range of keys, pass 2 numbers
+  each range's records from its prefix offset.  O(n/P) memory per
+  task, no single-partition bottleneck.  ``ntile_scalable`` builds on it.
 """
 
 from __future__ import annotations
@@ -56,11 +56,14 @@ def ntile_scalable(
         j <  large·big  ->  j DIV big + 1
         j >= large·big  ->  large + (j - large·big) DIV (n DIV k) + 1
 
-    so the plan is `global_rank_scalable` (deterministic range borders,
-    P-row offsets, per-partition windows) + a broadcast 1-row count —
-    no stage ever sees more than O(n/P) rows.  Exact int64 arithmetic
-    (SQL DIV), bit-identical to the Window ntile on unique ranks.
+    so the plan is `scale.global_rank_scalable` (deterministic range
+    borders, P-row offsets, per-partition windows) + a broadcast 1-row
+    count — no stage ever sees more than O(n/P) rows.  Exact int64
+    arithmetic (SQL DIV), bit-identical to the Window ntile on unique
+    ranks.
     """
+    from .scale import global_rank_scalable
+
     if k < 1:
         raise ValueError("k must be >= 1")
     ranked = global_rank_scalable(df, order_by, "__nt_rank", num_partitions)
@@ -78,27 +81,6 @@ def ntile_scalable(
         .withColumn(tile_col, tile)
         .drop("__nt_rank", "__nt_n")
     )
-
-
-def global_rank_scalable(
-    df: DataFrame,
-    order_by: list[str],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """0-based global rank with no single-partition stage (100 TB path).
-
-    Plan: the range pass of ``scale._ranged_with_offsets`` with no
-    halo — deterministic histogram borders on ``order_by[0]`` with
-    exact per-range counts from the same buckets (≈ reference
-    Sample+Sort jobs and O8 sentinel counts), one range exchange, and
-    each range's driver-side rank offset added to its per-range
-    row_number (≈ O9 prefix-count ranking) — entirely JVM-side, no join.
-    """
-    from .scale import _ranged_with_offsets
-
-    out = _ranged_with_offsets(df, order_by, None, num_partitions)
-    return out.withColumnRenamed("rank", rank_col)
 
 
 def grouped_weighted_median(

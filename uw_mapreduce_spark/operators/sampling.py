@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .scale import global_rank_scalable
+
 
 def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
     """O4: keep each row independently with probability ``fraction``."""
@@ -38,17 +40,15 @@ def equi_depth_borders(df: DataFrame, col: str, num_partitions: int) -> DataFram
     (no sampling) so it is DuckDB-oracle-checkable; production code uses
     `repartitionByRange`, which samples internally.
 
-    No single-partition stage: positions come from ``global_rank_scalable``
-    (range-partitioned two-pass prefix count, O(n/P) per task) plus one
-    scalar ``count()``; the P-1 target positions broadcast-join against
-    the ranked frame.  Ties take arbitrary ranks, but every row in a run
-    of equal values carries the same value, so the border VALUE at a
-    position is deterministic.
+    No single-partition stage: positions come from
+    ``scale.global_rank_scalable`` (range-partitioned two-pass prefix
+    count, O(n/P) per task) plus one scalar ``count()``; the P-1 target
+    positions broadcast-join against the ranked frame.  Ties take
+    arbitrary ranks, but every row in a run of equal values carries the
+    same value, so the border VALUE at a position is deterministic.
 
     Returns (border_idx long, border <col-type>).
     """
-    from .rank import global_rank_scalable
-
     spark = df.sparkSession
     vals = df.select(F.col(col).alias("border"))
     n = vals.count()
@@ -294,11 +294,9 @@ def systematic_sample(
     of rank.
 
     Keeps rows whose 0-based global rank ≡ offset (mod every_k).  The
-    rank is `rank.global_rank_scalable` — range exchange + P-row
+    rank is `scale.global_rank_scalable` — range exchange + P-row
     offsets, no single-partition sort — and the modulo keep is a
     map-side filter, so the plan is one range exchange end to end."""
-    from .rank import global_rank_scalable
-
     if every_k < 1:
         raise ValueError("every_k must be >= 1")
     ranked = global_rank_scalable(df, order_by, "__sys_rank")

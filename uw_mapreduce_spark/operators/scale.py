@@ -7,11 +7,15 @@ reference solves global windowing with 5 MR jobs: sampled range partition
 (Perfect), bounded replication + per-partition totals + prefix-sum window
 evaluation (Aggr) — `/root/reference/src/SlidingAggregation.java:433-536`.
 
-Every scalable consumer — sliding sum/count/avg/min/max, prefix sum,
-prefix max, and through them rank, ntile, packing, evaluation and the
-catalog prefix faces — reads its rows from ONE range pass,
-``_ranged_with_offsets``, which stays entirely JVM-side (no Python row
-serialization anywhere):
+The module's three public entry points are the three outputs the
+reference computes per row: ``global_rank_scalable`` (the rank from
+prefix counts, `RankReducer` :173-210), ``prefix_scalable`` (a running
+sum or max carried across partition totals, :305-310) and
+``sliding_aggregate_scalable`` (the trailing window, :316-430).  Every
+scalable consumer — ntile, sampling, dedup, packing, evaluation, the
+skyline and the catalog rank/prefix faces — calls one of them, and all
+three read their rows from ONE range pass, ``_ranged_with_offsets``,
+which stays entirely JVM-side (no Python row serialization anywhere):
 
   1. deterministic range borders with EXACT per-range totals — one
      bounded histogram job (plus ≤2 refinement jobs for narrow or
@@ -635,27 +639,51 @@ def sliding_aggregate_scalable(
     return out.withColumnRenamed("rank", rank_col).withColumnRenamed("_agg", agg_col)
 
 
-def prefix_max_scalable(
+def global_rank_scalable(
+    df: DataFrame,
+    order_by: list[str],
+    rank_col: str = "rank",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """0-based global rank with no single-partition stage (100 TB path).
+
+    Plan: the range pass with no halo — deterministic histogram borders
+    on ``order_by[0]`` with exact per-range counts from the same buckets
+    (≈ reference Sample+Sort jobs and O8 sentinel counts), one range
+    exchange, and each range's driver-side rank offset added to its
+    per-range row_number (≈ O9 prefix-count ranking) — entirely
+    JVM-side, no join.
+    """
+    out = _ranged_with_offsets(df, order_by, None, num_partitions)
+    return out.withColumnRenamed("rank", rank_col)
+
+
+def prefix_scalable(
     df: DataFrame,
     order_by: list[str],
     value_col: str,
-    out_col: str = "prefix_max",
-    num_partitions: int | None = None,
+    agg: str = "sum",
+    out_col: str = "prefix",
     inclusive: bool = True,
+    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Global running maximum of ``value_col`` in ``order_by`` order,
-    without a single-partition window — the high-watermark primitive
-    (running max of event time in arrival order is exactly Structured
-    Streaming's watermark bookkeeping).  ``inclusive=False`` computes
-    the EXCLUSIVE prefix max (max over strictly-preceding rows, NULL
-    for the global first row) — the dominance test of the skyline
-    operator (`operators/skyline.pareto_frontier`).
+    """Global running ``agg`` ("sum" or "max") of ``value_col`` in
+    ``order_by`` order, without a single-partition window.
+    ``inclusive=False`` aggregates strictly earlier rows only (an
+    exclusive prefix max is NULL for the global first row, an exclusive
+    sum 0).  Integer values sum in int64, floats in double; a max keeps
+    the value's type.  The running max of event time in arrival order
+    is Structured Streaming's watermark bookkeeping; the exclusive
+    prefix max is the skyline's dominance test.
 
-    The range pass's prefix mode with a MAX total per range: each range
-    starts from the max of all earlier ranges (its carry-in) — max has
-    no inverse, but carry-in composition is associative all the same.
+    The range pass's prefix mode: each range starts from the total of
+    all earlier ranges (its carry-in, from the border histogram's
+    per-range totals) — max has no inverse, but carry-in composition is
+    associative all the same.
     """
+    if agg not in _TOTALS:
+        raise ValueError(f"agg must be one of {sorted(_TOTALS)}")
     out = _ranged_with_offsets(
-        df, order_by, value_col, num_partitions, agg="max", inclusive=inclusive
+        df, order_by, value_col, num_partitions, agg=agg, inclusive=inclusive
     )
     return out.withColumnRenamed("_prefix", out_col).drop("rank")

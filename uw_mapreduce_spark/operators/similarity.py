@@ -826,15 +826,15 @@ def _artifact_exists(spark, marker: str) -> bool:
 
 
 def _builder_version(*fns) -> str:
-    """8-hex token derived from the builder functions' SOURCE, salted
-    into every artifact cache key, so a kernel change automatically
-    invalidates artifacts persisted by older code.  Without it the
-    cache is content-keyed only and persists across commits — after a
-    builder change the oracle sweep and bench would cache-HIT and
-    validate/serve the stale pre-change output, letting a kernel
-    regression pass from leftover disk state.  Comment-only edits also
-    rebuild; a spurious rebuild costs seconds, a stale artifact is a
-    silent wrong answer."""
+    """8-hex token derived from the SOURCE of the builder functions (or
+    whole modules), salted into every artifact cache key, so a kernel
+    change automatically invalidates artifacts persisted by older code.
+    Without it the cache is content-keyed only and persists across
+    commits — after a builder change the oracle sweep and bench would
+    cache-HIT and validate/serve the stale pre-change output, letting a
+    kernel regression pass from leftover disk state.  Comment-only edits
+    also rebuild; a spurious rebuild costs seconds, a stale artifact is
+    a silent wrong answer."""
     import hashlib
     import inspect
 
@@ -961,11 +961,12 @@ def knn_graph_artifact(
     never served.
 
     The key also carries a BUILDER-VERSION token (hash of the
-    `knn_self_blas` and `_blocked_pairs` sources and of the border
-    helpers they call) so a kernel change invalidates artifacts
-    persisted by older code, and a cache-miss build commits via
-    write-temp-then-rename so concurrent sessions can never interleave
-    or clobber a committed artifact (`_commit_artifact`).  After a
+    `knn_self_blas` and `_blocked_pairs` sources and of the whole
+    `scale` module, whose border helpers they call) so a kernel change
+    invalidates artifacts persisted by older code, and a cache-miss
+    build commits via write-temp-then-rename so concurrent sessions can
+    never interleave or clobber a committed artifact
+    (`_commit_artifact`).  After a
     successful build the family is GC'd to the newest
     ``_ARTIFACT_GC_KEEP`` corpus snapshots.
 
@@ -982,13 +983,13 @@ def knn_graph_artifact(
     job); the returned frame is always a plain parquet scan."""
     import os
 
-    from .scale import _deterministic_borders, _pid_expr
+    from . import scale
 
     spark = corpus.sparkSession
     family = f"k{k}_"
-    # Version covers the kernel, its block-pair skeleton AND the helpers
-    # that border and route its blocks — a change to any one rebuilds.
-    version = _builder_version(knn_self_blas, _blocked_pairs, _deterministic_borders, _pid_expr)
+    # Version covers the kernel, its block-pair skeleton AND the module
+    # that borders and routes its blocks — a change to any one rebuilds.
+    version = _builder_version(knn_self_blas, _blocked_pairs, scale)
     key = (
         f"{family}v{version}"
         f"_{_corpus_fingerprint(corpus, id_col, vec_col)}"
@@ -1032,14 +1033,12 @@ def near_dup_pairs_artifact(
     deterministic (the fingerprint and build are independent jobs)."""
     import os
 
-    from .scale import _deterministic_borders, _pid_expr
+    from . import scale
 
     spark = corpus.sparkSession
     t_milli = int(round(threshold * 1000))
     family = f"ndp{t_milli}_"
-    version = _builder_version(
-        cosine_near_dup_pairs_numpy, _blocked_pairs, _deterministic_borders, _pid_expr
-    )
+    version = _builder_version(cosine_near_dup_pairs_numpy, _blocked_pairs, scale)
     key = (
         f"{family}v{version}"
         f"_{_corpus_fingerprint(corpus, id_col, vec_col)}"

@@ -19,7 +19,7 @@ and a map-side filter.  The same "shuffle the vocabulary, not the
 corpus" argument as `grouped_weighted_median`; for genuinely
 continuous x, quantize first (the repo-wide integer-grid discipline) —
 and when the distinct-x count still exceeds ``max_domain``, the prefix
-max routes through the two-pass `scale.prefix_max_scalable` plan so no
+max routes through the two-pass `scale.prefix_scalable` plan so no
 single task ever materializes the whole histogram.
 """
 
@@ -50,8 +50,8 @@ def pareto_frontier(
     window — bounded by |distinct x|, fine for grid-valued domains but
     one task for genuinely continuous x at 100×.  Above ``max_domain``
     distinct values the prefix max routes through the two-pass
-    `scale.prefix_max_scalable(inclusive=False)` plan instead (range
-    partition → per-partition max → broadcast carry-ins → local
+    `scale.prefix_scalable(agg="max", inclusive=False)` plan instead
+    (range partition → per-partition max → broadcast carry-ins → local
     window), and the survivor filter joins back on x without the
     broadcast (a 2³²-row histogram is not broadcastable).  Deciding
     needs |distinct x|, so the histogram aggregate runs EAGERLY at
@@ -63,10 +63,10 @@ def pareto_frontier(
         df.groupBy(x_col).agg(F.max(y_col).alias("_ymax")), _SCOPE
     )
     if h.count() > max_domain:
-        from .scale import prefix_max_scalable
+        from .scale import prefix_scalable
 
-        cum = prefix_max_scalable(
-            h, [x_col], "_ymax", out_col="_best_below", inclusive=False
+        cum = prefix_scalable(
+            h, [x_col], "_ymax", agg="max", out_col="_best_below", inclusive=False
         ).select(x_col, "_best_below")
         joined = df.join(cum, x_col)
     else:

@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..operators.partitioning import rebalance_by_rank
-from ..operators.rank import global_rank, global_rank_scalable
+from ..operators.rank import global_rank
 from ..operators.sampling import bernoulli_sample, equi_depth_borders
-from ..operators.scale import sliding_aggregate_scalable
+from ..operators.scale import global_rank_scalable, prefix_scalable, sliding_aggregate_scalable
 from ..operators.window import sliding_aggregate
 from ..sources.tables import load_table
 from ._registry import (  # noqa: F401  (re-exported)
@@ -1058,17 +1058,14 @@ def running_revenue_global(spark, sf_dir):
     the un-keyed cousin of `window_analytics_orders`' per-customer
     running sum.  An unpartitioned `SUM OVER (ORDER BY …)` collapses to
     one task in Spark; this runs on the scalable two-pass prefix-sum
-    plan instead (range exchange + P-row offsets — the same machinery as
-    the sliding family and `pack_documents`)."""
-    from ..operators.scale import _ranged_with_offsets
-
+    plan instead (`operators/scale.prefix_scalable`: range exchange +
+    P-row offsets — the same machinery as the sliding family and
+    `pack_documents`)."""
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "_price_c", F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long")
     )
-    out = _ranged_with_offsets(orders, ["o_orderdate", "o_orderkey"], "_price_c", None)
-    return out.select(
-        "o_orderkey", F.col("_prefix").cast("long").alias("run_total_c")
-    )
+    out = prefix_scalable(orders, ["o_orderdate", "o_orderkey"], "_price_c", out_col="run_total_c")
+    return out.select("o_orderkey", "run_total_c")
 
 
 @query(
@@ -5014,10 +5011,8 @@ def gini_revenue_customers(spark, sf_dir):
     G = (2·Σi·x₍ᵢ₎ − (n+1)·Σx) / (n·Σx) entirely in integer
     cross-multiplies (DECIMAL(38,0)/HUGEINT — Σi·x reaches ~10¹⁸ at
     sf1 and beyond at corpus scale).  The sort is
-    `rank.global_rank_scalable` over (revenue, custkey) — range
+    `scale.global_rank_scalable` over (revenue, custkey) — range
     exchange + P-row offsets, never a single-task window."""
-    from ..operators.rank import global_rank_scalable
-
     orders = load_table(spark, sf_dir, "orders")
     r = orders.groupBy("o_custkey").agg(
         F.sum(F.floor(F.col("o_totalprice") * F.lit(100.0)).cast("long")).alias(
@@ -6695,7 +6690,7 @@ def quantile_normalize_events(spark, sf_dir):
 
     Scale shape: two value histograms (map-side combine); the pooled
     cumulative scan is the scalable two-pass prefix
-    (`scale._ranged_with_offsets`); the per-source scan is a window
+    (`scale.prefix_scalable`); the per-source scan is a window
     over the SOURCE's distinct values (the `spearman` histogram idiom
     — pre-bin values if one source's distinct count outgrows a task);
     the order-statistic lookup is the bucketized point-in-interval
@@ -6703,7 +6698,6 @@ def quantile_normalize_events(spark, sf_dir):
     bucket fan-out is proportional to its row mass, never all-pairs);
     rows rejoin their normalized value by (source, value) equi-join."""
     from ..operators.rangejoin import range_join
-    from ..operators.scale import _ranged_with_offsets
 
     ev = load_table(spark, sf_dir, "events")
     e = ev.select(
@@ -6728,7 +6722,7 @@ def quantile_normalize_events(spark, sf_dir):
     hp = hs.groupBy(F.col("v").alias("pv")).agg(
         F.sum("cnt").cast("long").alias("cntp")
     )
-    pp = _ranged_with_offsets(hp, ["pv"], "cntp", None).select(
+    pp = prefix_scalable(hp, ["pv"], "cntp", out_col="_prefix").select(
         "pv",
         (F.col("_prefix") - F.col("cntp")).cast("long").alias("start_p"),
         F.col("_prefix").cast("long").alias("end_p"),
@@ -7889,17 +7883,15 @@ def late_arrival_audit_events(spark, sf_dir):
     events a 10-minute or 1-hour watermark would have dropped and the
     worst observed lateness — the measurement that turns watermark
     choice from folklore into data.  The running max uses
-    `operators/scale.prefix_max_scalable` (two-pass carry-in
+    `operators/scale.prefix_scalable(agg="max")` (two-pass carry-in
     composition, O8/O13 structure) — NO single-partition window over
     the corpus, unlike the oracle's plain unpartitioned SQL window."""
-    from ..operators.scale import prefix_max_scalable
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         F.col("ts").cast("date").alias("d"),
     )
-    hw = prefix_max_scalable(ev, ["event_id"], "ts_us", out_col="hw_us")
+    hw = prefix_scalable(ev, ["event_id"], "ts_us", agg="max", out_col="hw_us")
     late = F.col("hw_us") - F.col("ts_us")
     return hw.groupBy("d").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),

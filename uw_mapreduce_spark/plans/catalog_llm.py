@@ -1367,10 +1367,10 @@ def padding_efficiency_documents(spark, sf_dir):
     when documents are batched sorted-by-length vs in arrival order —
     the dynamic-batching decision every training pipeline makes, in
     exact integers.  Both global orders use the SCALABLE two-pass rank
-    (`operators/rank.global_rank_scalable`) — the manifest is one row
+    (`operators/scale.global_rank_scalable`) — the manifest is one row
     per document, but at 10^10 documents even the manifest must not
     hit a single-partition window."""
-    from ..operators.rank import global_rank_scalable
+    from ..operators.scale import global_rank_scalable
 
     docs = load_table(spark, sf_dir, "documents")
     dt = docs.select(
@@ -2586,13 +2586,13 @@ def percentile_rank_embeddings(spark, sf_dir):
     sketch features.
 
     Scale path: NOT 64 unpartitioned windows.  The (pos, q, vec_id)
-    composite order is ranked once by `rank.global_rank_scalable`
+    composite order is ranked once by `scale.global_rank_scalable`
     (range exchange + P-row offsets — O(n/P) per task), and the
     within-dimension rank falls out arithmetically: every vector has
     exactly one row per dimension, so rank_within(pos) =
     global_rank − pos·N with a 1-row broadcast N.  The oracle computes
     the same integer with a plain partitioned row_number."""
-    from ..operators.rank import global_rank_scalable
+    from ..operators.scale import global_rank_scalable
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = F.transform(
@@ -3287,7 +3287,7 @@ def _conformal_parts(spark, sf_dir):
     — reused verbatim by `conformal_threshold_embeddings` and the v5
     curation pipeline so face and composition cannot drift."""
     from ..operators.evaluation import binary_centroid_scores
-    from ..operators.scale import _ranged_with_offsets
+    from ..operators.scale import prefix_scalable
     from ..operators.split import hash_permille
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3299,7 +3299,7 @@ def _conformal_parts(spark, sf_dir):
         .groupBy("score")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    pref = _ranged_with_offsets(calh, ["score"], "cnt", None)
+    pref = prefix_scalable(calh, ["score"], "cnt", out_col="_prefix")
     ncal = calh.agg(F.sum("cnt").cast("long").alias("n_cal"))
     kth = ncal.select(
         F.expr("CAST((n_cal + 10) DIV 10 AS BIGINT)").alias("k"), "n_cal"
