@@ -154,10 +154,10 @@ def test_curation_v7_fused_tail_no_cartesian(spark, sf_small):
 
 
 def test_pareto_scalable_route_avoids_unpartitioned_window(spark):
-    """Above max_domain distinct x the skyline must route its prefix
-    max through the two-pass scalable plan — no `Window [...]` without
-    a partitionBy spec over the full histogram (VERDICT r8 item 5) —
-    and both routes must agree row-for-row."""
+    """The skyline's prefix max runs through the range pass — no
+    `Window [...]` without a partitionBy spec over the full histogram
+    (VERDICT r8 item 5) — and keeps exactly the rows a brute-force
+    skyline keeps."""
     import pyspark.sql.functions as F
 
     from uw_mapreduce_spark.operators.skyline import pareto_frontier
@@ -170,12 +170,13 @@ def test_pareto_scalable_route_avoids_unpartitioned_window(spark):
             ((F.col("id") * 37) % 1009).alias("y"),
         )
     )
-    small = pareto_frontier(df, "x", "y")  # 997 distinct x < default cap
-    big = pareto_frontier(df, "x", "y", max_domain=10)  # forces scalable route
-    assert sorted(map(tuple, small.collect())) == sorted(map(tuple, big.collect()))
-    plan = _plan(big)
+    out = pareto_frontier(df, "x", "y")
+    rows = [(r.rid, r.x, r.y) for r in df.collect()]
+    want = {rid for rid, x, y in rows if all(y > y2 for _r, x2, y2 in rows if x2 < x)}
+    assert {r.rid for r in out.collect()} == want
+    plan = _plan(out)
     # The single-partition histogram window would show as a Window node
-    # whose spec has an empty partition clause; the scalable route's only
+    # whose spec has an empty partition clause; the range pass's only
     # window partitions by _pid.
     import re
 
@@ -299,45 +300,43 @@ def test_scalable_halo_is_row_bounded(spark):
     assert 0 < written <= n + p * (l - 1) + n // 4, written
 
 
-def test_murmur3_port_matches_spark_hash(spark):
-    """The driver's port of Murmur3_x86_32.hashInt is Spark's hash()."""
-    import pyspark.sql.functions as F
-
-    from uw_mapreduce_spark.operators.scale import _murmur3_int
-
-    got = spark.range(-1000, 1001).select(F.hash(F.col("id").cast("int"))).collect()
-    assert [r[0] for r in got] == [_murmur3_int(i) for i in range(-1000, 1001)]
-
-
-def test_range_codes_hit_distinct_shuffle_tasks():
-    """code[k] ≡ k (mod parts) and the codes' hash partitions differ, for
-    every range count up to P, so no two ranges share a shuffle task."""
-    from uw_mapreduce_spark.operators.scale import _murmur3_int, _range_codes
-
-    for p in range(1, 65):
-        for parts in {1, (p + 1) // 2, p}:
-            codes = _range_codes(parts, p)
-            assert [c % parts for c in codes] == list(range(parts)), (parts, p)
-            assert len({_murmur3_int(c) % p for c in codes}) == parts, (parts, p)
-
-
 def test_scalable_pass_one_range_per_task(spark):
-    """At P=8 on uniform keys every range windows in a task of its own:
-    8 non-empty shuffle partitions, each one contiguous block of ranks
-    (plain pids 0..7 hash into only 5 of the 8)."""
+    """Range k windows in shuffle task k, at every P and range count:
+    1, about P/2 and P ranges (few distinct keys for the first two,
+    uniform keys for the last).  The non-empty tasks number the ranges,
+    each holds one contiguous block of ranks, and the exchange passes
+    the range id through (plain pids 0..7 hashed into only 5 of 8
+    tasks)."""
     import pyspark.sql.functions as F
 
-    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
-
-    out = sliding_aggregate_scalable(_uniform_long_frame(spark), ["k"], "v", 91, num_partitions=8)
-    blocks = (
-        out.withColumn("p", F.spark_partition_id())
-        .groupBy("p")
-        .agg(F.min("rank").alias("lo"), F.max("rank").alias("hi"), F.count(F.lit(1)).alias("n"))
-        .collect()
+    from uw_mapreduce_spark.operators.scale import (
+        _deterministic_borders,
+        sliding_aggregate_scalable,
     )
-    assert len(blocks) == 8, blocks
-    assert all(b["hi"] - b["lo"] + 1 == b["n"] for b in blocks), blocks
+
+    n = 4000
+    for p in (1, 3, 8, 13):
+        for parts in sorted({1, (p + 1) // 2, p}):
+            if parts == p > 1:
+                df = _uniform_long_frame(spark, n)
+            else:  # `parts` equally frequent keys make `parts` ranges
+                df = spark.range(n).select((F.col("id") % parts).alias("k"), (F.col("id") % 100).alias("v"))
+            borders = _deterministic_borders(df, "k", p)
+            assert len(borders) + 1 == parts, (p, parts, borders)
+            out = sliding_aggregate_scalable(df, ["k"], "v", 91, num_partitions=p)
+            blocks = (
+                out.withColumn("p", F.spark_partition_id())
+                .groupBy("p")
+                .agg(F.min("rank").alias("lo"), F.max("rank").alias("hi"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            assert len(blocks) == parts, (p, parts, blocks)
+            assert all(b["hi"] - b["lo"] + 1 == b["n"] for b in blocks), (p, parts, blocks)
+            assert sum(b["n"] for b in blocks) == n, (p, parts, blocks)
+            plan = _plan(out).lower()
+            if p > 1:  # Spark plans a 1-partition exchange as SinglePartition
+                assert "shufflepartitionidpassthrough(" in plan, (p, parts, plan[:2000])
+            assert "hashpartitioning(_pid" not in plan, (p, parts, plan[:2000])
 
 
 def test_prefix_max_scalable_defaults_to_shuffle_partitions(spark):

@@ -10,10 +10,12 @@ Reference parity:
   reducer, sorts in memory, and emits the P-1 equi-depth quantiles
   (`SlidingAggregation.java:57-84`, `chooseBorders` :75-83, forced single
   reducer :444).  That single-reducer collect is the reference's
-  scalability bug; Spark's `RangePartitioner` (inside `repartitionByRange`
-  / `orderBy`) does the same job with a distributed reservoir sample, so
-  the *engine* never calls this — it exists as a queryable operator for
-  parity and for explicit-border workflows.
+  scalability bug.  The engine's range pass never calls this: it borders
+  with `scale._deterministic_borders`, a bounded key histogram with exact
+  per-range counts, and avoids Spark's `RangePartitioner` (inside
+  `repartitionByRange` / `orderBy`), whose randomly seeded sample could
+  re-border a recompute.  This exists as a queryable operator for parity
+  and for explicit-border workflows.
 """
 
 from __future__ import annotations
@@ -37,8 +39,9 @@ def equi_depth_borders(df: DataFrame, col: str, num_partitions: int) -> DataFram
     with s sorted sample values and P partitions, border i (1-based) is the
     sample element at 0-based index ``floor((i * s) / P) - 1`` clamped to
     >= 0 — i.e. the largest value of the i-th equi-depth bucket.  Exact
-    (no sampling) so it is DuckDB-oracle-checkable; production code uses
-    `repartitionByRange`, which samples internally.
+    (no sampling) so it is DuckDB-oracle-checkable; the range pass
+    borders with `scale._deterministic_borders` instead, a deterministic
+    histogram, not `repartitionByRange`'s random sample.
 
     No single-partition stage: positions come from
     ``scale.global_rank_scalable`` (range-partitioned two-pass prefix

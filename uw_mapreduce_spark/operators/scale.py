@@ -45,9 +45,10 @@ which stays entirely JVM-side (no Python row serialization anywhere):
      the replication loop, :257-303).  A range's halo is ≤ l-1 rows plus
      one interval (an interval holds ≤ n/4P rows unless it is one heavy
      key's), not whole earlier ranges.
-     Range k travels as ``_pid = code[k]`` (``_range_codes``): code[k] ≡
-     k (mod ranges), chosen on the driver so that no two ranges share a
-     shuffle partition of ``repartition(P, _pid)``.
+     ``repartitionById(P, _pid)`` sends range k to shuffle task k, as
+     the reference's `SortMapper` keys each record by its range index
+     (:87-146): one task per range, no hash in between.  ``_pid`` must
+     stay INT; the pass-through rejects a BIGINT id.
   4. one window spec per range (PARTITION BY range ORDER BY key): the
      rank is a driver constant plus ``row_number``; sum/count/avg are
      running totals minus their ``lag(·, l)`` (O(1) per row); min/max
@@ -420,46 +421,8 @@ def _halo_walk(intervals: list, off: list[int], halo: int):
 
 
 def _per_range(values: list):
-    """``values[range]``: one driver constant per range, as a column.
-    ``_pid`` holds the range index or, after step 3, its shuffle code;
-    both are ≡ the range modulo the number of ranges."""
-    return F.element_at(
-        F.array(*[F.lit(v) for v in values]), F.pmod(F.col("_pid"), F.lit(len(values))) + 1
-    )
-
-
-def _murmur3_int(x: int, seed: int = 42) -> int:
-    """Spark's ``Murmur3_x86_32.hashInt``: what ``hash()`` and the hash
-    partitioning of ``repartition(P, col)`` compute for an int column."""
-    m = 0xFFFFFFFF
-
-    def rotl(v, r):
-        return ((v << r) | (v >> (32 - r))) & m
-
-    k = rotl(x * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
-    h = (rotl(seed ^ k, 13) * 5 + 0xE6546B64) & m
-    h ^= 4
-    h = (h ^ h >> 16) * 0x85EBCA6B & m
-    h = (h ^ h >> 13) * 0xC2B2AE35 & m
-    h ^= h >> 16
-    return h - (1 << 32) if h >> 31 else h
-
-
-def _range_codes(parts: int, num_partitions: int) -> list[int]:
-    """``_pid`` code per range for the exchange ``repartition(P, _pid)``,
-    whose task for a row is ``pmod(murmur3(_pid), P)``: code[k] ≡ k (mod
-    parts), the least such int whose task no earlier range has, so every
-    range gets a shuffle task of its own (plain pids 0..7 land in 5 of 8
-    tasks at P=8).  A range that finds no free task among its first
-    64·P candidates keeps its index."""
-    used, codes = set(), []
-    for k in range(parts):
-        stop = min(2**31, k + 64 * num_partitions * parts)
-        free = (c for c in range(k, stop, parts) if _murmur3_int(c) % num_partitions not in used)
-        code = next(free, k)
-        used.add(_murmur3_int(code) % num_partitions)
-        codes.append(code)
-    return codes
+    """``values[_pid]``: one driver constant per range, as a column."""
+    return F.element_at(F.array(*[F.lit(v) for v in values]), F.col("_pid") + 1)
 
 
 def _ranged_with_offsets(
@@ -507,13 +470,11 @@ def _ranged_with_offsets(
     k_all = t.count(None) - 1  # ranges 0..k_all take every earlier row
 
     # Step 3: one exchange, each row to its own range and to every later
-    # range whose threshold is below its key, every range to a shuffle
-    # task of its own.
+    # range whose threshold is below its key, range k to shuffle task k.
     if halo and parts > 1:
         last = F.lit(k_all) + _pid_expr(order_by[0], t[k_all + 1:])
         ranged = ranged.withColumn("_pid", F.explode(F.sequence(F.col("_pid"), last)))
-    ranged = ranged.withColumn("_pid", _per_range(_range_codes(parts, num_partitions)))
-    ranged = ranged.repartition(num_partitions, "_pid")
+    ranged = ranged.repartitionById(num_partitions, "_pid")
 
     # Step 4: one window spec per range.
     tie = [v] if window is not None and value_col not in order_by else []

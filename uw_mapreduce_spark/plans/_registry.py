@@ -19,10 +19,13 @@ ORACLE: dict[str, str] = {}
 
 # Faces whose query FUNCTION eagerly runs Spark jobs / filesystem side
 # effects before returning the DataFrame (write→re-read round trips,
-# persist→reload equality audits).  Every other catalog face is lazy:
-# calling it only builds a plan.  Plan-shape / explain-only tooling must
-# skip the names listed here — `plans/explain.py` (the explain-sweep
-# CLI) is the consumer that enforces this.
+# persist→reload equality audits).  Calling any other catalog face has
+# no side effect.  Most only build a plan; a face on the range pass
+# (`operators/scale.py`) also collects its border histogram at call
+# time, a read-only job, so explain tooling still runs it.  Plan-shape /
+# explain-only tooling must skip the names listed here —
+# `plans/explain.py` (the explain-sweep CLI) is the consumer that
+# enforces this.
 EAGER_FACES: frozenset[str] = frozenset(
     {
         "kvtext_roundtrip_audit",
@@ -44,9 +47,6 @@ EAGER_FACES: frozenset[str] = frozenset(
         "curation_pipeline_v2",
         "curation_pipeline_v3",
         "dedup_token_savings",
-        # Runs one histogram count at call time to route the prefix max
-        # (grid-bounded broadcast window vs two-pass scalable plan).
-        "pareto_parts_price_size",
     }
 )
 

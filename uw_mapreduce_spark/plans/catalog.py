@@ -4272,10 +4272,9 @@ def pareto_parts_price_size(spark, sf_dir):
     """2-D skyline (`operators/skyline.pareto_frontier`): parts not
     dominated on (cheaper price, larger size) — every strictly cheaper
     part is strictly smaller.  The running max runs over the PRICE
-    HISTOGRAM (cent-grid bounded), not the part table: one hash
-    aggregate, a domain-bounded cumulative window, broadcast-join
-    back, map-side filter — the scalable form of the classic
-    sort-scan skyline."""
+    HISTOGRAM, not the part table: one hash aggregate, the range
+    pass's exclusive prefix max, a join back, a map-side filter — the
+    scalable form of the classic sort-scan skyline."""
     from ..operators.skyline import pareto_frontier
 
     p = load_table(spark, sf_dir, "part").select(

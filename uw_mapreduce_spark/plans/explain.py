@@ -2,9 +2,10 @@
 
 This is the consumer of ``_registry.EAGER_FACES``: faces listed there
 run Spark jobs / filesystem writes / streaming queries at CALL time, so
-an explain-everything sweep must skip them (explaining a lazy face only
-builds a plan; "explaining" an eager one would trigger its side
-effects).  PLANS.md's excerpts come from runs of this tool.
+an explain-everything sweep must skip them ("explaining" one would
+trigger its side effects).  Any other face has none: it builds a plan,
+and a range-pass face also reads its border histogram.  PLANS.md's
+excerpts come from runs of this tool.
 
 Usage::
 
