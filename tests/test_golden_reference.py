@@ -16,9 +16,24 @@ import pytest
 
 from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
 from uw_mapreduce_spark.operators.window import sliding_sum_kv
+from uw_mapreduce_spark.plans.catalog import _REFERENCE_DIR as REF
 from uw_mapreduce_spark.sources.text_kv import read_text_kv
 
 WINDOWS = [16, 79, 91]
+
+# The reference tree's own fixtures.  The tests that read them skip only
+# where a file they read is absent, and run unchanged wherever it is there.
+SIMPLE103 = f"{REF}/input/simple103.txt"
+
+
+def _needs(*patterns: str):
+    missing = [p for p in patterns if not glob.glob(p)]
+    return pytest.mark.skipif(bool(missing), reason=f"reference files absent: {', '.join(missing)}")
+
+
+GOLDEN_WINDOWS = [
+    pytest.param(w, marks=_needs(SIMPLE103, f"{REF}/expected{w}/part-r-*")) for w in WINDOWS
+]
 
 
 def load_golden(reference_dir: str, window: int) -> set[tuple[int, int, int]]:
@@ -35,7 +50,7 @@ def load_golden(reference_dir: str, window: int) -> set[tuple[int, int, int]]:
     return rows
 
 
-@pytest.mark.parametrize("window", WINDOWS)
+@pytest.mark.parametrize("window", GOLDEN_WINDOWS)
 def test_window_path_matches_golden(spark, reference_dir, window):
     kv = read_text_kv(spark, f"{reference_dir}/input/simple103.txt")
     out = sliding_sum_kv(kv, window)
@@ -43,7 +58,7 @@ def test_window_path_matches_golden(spark, reference_dir, window):
     assert got == load_golden(reference_dir, window)
 
 
-@pytest.mark.parametrize("window", WINDOWS)
+@pytest.mark.parametrize("window", GOLDEN_WINDOWS)
 def test_scalable_path_matches_golden(spark, reference_dir, window):
     kv = read_text_kv(spark, f"{reference_dir}/input/simple103.txt")
     out = sliding_aggregate_scalable(
@@ -53,6 +68,7 @@ def test_scalable_path_matches_golden(spark, reference_dir, window):
     assert got == load_golden(reference_dir, window)
 
 
+@_needs(f"{REF}/input/tosort100.txt")
 def test_windowed_count_invariant(spark, reference_dir):
     """tosort100.txt has value=1: window sum degenerates to a windowed
     count == min(rank+1, l) (FIXTURES.md F2's self-checking oracle)."""
@@ -121,6 +137,7 @@ def test_tosort100_analogue_windowed_count(spark):
                 assert r["agg"] == min(r["rank"] + 1, window), (window, r)
 
 
+@_needs(f"{REF}/input/tosort100000.txt")
 def test_two_path_agreement_100k(spark, reference_dir):
     """Window path ≡ scalable path on the reference's largest shipped
     input (`input/tosort100000.txt`, 100k rows — the scale row of

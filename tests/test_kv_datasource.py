@@ -4,7 +4,13 @@ tolerance."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
+
+from uw_mapreduce_spark.plans.catalog import _REFERENCE_DIR as REF
+
+SIMPLE103 = f"{REF}/input/simple103.txt"
 
 
 @pytest.fixture()
@@ -19,6 +25,7 @@ def registered(spark):
     return spark
 
 
+@pytest.mark.skipif(not os.path.exists(SIMPLE103), reason=f"reference file absent: {SIMPLE103}")
 def test_matches_builtin_reader_on_reference_golden(registered):
     from uw_mapreduce_spark.sources.text_kv import read_text_kv
 

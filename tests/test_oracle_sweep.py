@@ -38,6 +38,17 @@ def test_registry_consistency():
     from uw_mapreduce_spark.plans.catalog import EAGER_FACES
 
     assert EAGER_FACES <= set(QUERIES), sorted(EAGER_FACES - set(QUERIES))
+    # REFERENCE_ORACLES count as oracled in the docs' block: a renamed
+    # face would otherwise leave a stale name that inflates that count.
+    # Where the reference tree is there, each must also have built its
+    # oracle.
+    import os
+
+    from uw_mapreduce_spark.plans.catalog import _REFERENCE_DIR, REFERENCE_ORACLES
+
+    assert REFERENCE_ORACLES <= set(QUERIES), sorted(REFERENCE_ORACLES - set(QUERIES))
+    if os.path.exists(f"{_REFERENCE_DIR}/input/simple103.txt"):
+        assert REFERENCE_ORACLES <= set(ORACLE), sorted(REFERENCE_ORACLES - set(ORACLE))
 
 
 def test_doc_counters_match_registry():

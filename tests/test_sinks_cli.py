@@ -8,12 +8,17 @@ import subprocess
 import sys
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
+from uw_mapreduce_spark.plans.catalog import _REFERENCE_DIR as REF
 from uw_mapreduce_spark.sources.sinks import write_bucketed, write_table
 from uw_mapreduce_spark.sources.tables import load_table
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REF_MISSING = [
+    p for p in (f"{REF}/input/simple103.txt", f"{REF}/expected16/part-r-*") if not glob.glob(p)
+]
 
 
 def test_partitioned_write_prunes(spark, sf_small):
@@ -50,6 +55,7 @@ def test_bucketed_join_skips_exchange(spark, sf_small):
         spark.sql("DROP TABLE IF EXISTS ord_bkt")
 
 
+@pytest.mark.skipif(bool(REF_MISSING), reason=f"reference files absent: {', '.join(REF_MISSING)}")
 def test_cli_end_to_end_matches_golden(reference_dir):
     out = tempfile.mkdtemp(prefix="uwms_cli_") + "/out"
     r = subprocess.run(

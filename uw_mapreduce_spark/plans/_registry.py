@@ -16,6 +16,11 @@ from .oracles import ORACLE_SQL
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
+# Faces whose oracle is built from the reference tree's own files
+# (`catalog._REFERENCE_DIR`), listed whether or not the tree is there:
+# ORACLE holds only the oracles this host can build, while the docs'
+# registry-counts block counts the oracles each face declares.
+REFERENCE_ORACLES: set[str] = set()
 
 # Faces whose query FUNCTION eagerly runs Spark jobs / filesystem side
 # effects before returning the DataFrame (write→re-read round trips,
@@ -51,11 +56,14 @@ EAGER_FACES: frozenset[str] = frozenset(
 )
 
 
-def query(name: str, oracle: str | None = None):
+def query(name: str, oracle: str | None = None, *, reference: bool = False):
     """Register a catalog query.  The DuckDB oracle comes either inline
     (for SQL built from shared fragments) or, for most queries, from
     ``plans/oracles.py`` keyed by name; queries in neither place get the
-    driver's rows-only check."""
+    driver's rows-only check.  ``reference=True`` marks an oracle built
+    from the reference tree's files: the name goes into
+    ``REFERENCE_ORACLES`` even where the tree is absent and ``oracle``
+    is None, so the face still counts as oracled in the docs."""
 
     def register(fn):
         if name in QUERIES:
@@ -63,6 +71,8 @@ def query(name: str, oracle: str | None = None):
             # driver row) without any test noticing — fail loudly.
             raise ValueError(f"duplicate catalog query name: {name!r}")
         QUERIES[name] = fn
+        if reference:
+            REFERENCE_ORACLES.add(name)
         sql = oracle if oracle is not None else ORACLE_SQL.get(name)
         if sql is not None:
             ORACLE[name] = sql
