@@ -443,7 +443,9 @@ def test_ann_index_save_load_round_trip(spark, sf_small, tmp_path):
 
 def test_snm_candidates_are_exactly_n_times_w_minus_tail(spark):
     """SNM candidate count is linear by construction: each rank pairs
-    with its next w neighbors, so total = n*w - (w + ... + 1) tail."""
+    with its next w neighbors, so total = n*w - (w + ... + 1) tail.
+    Duplicate keys are ranked by id, and a window of n or more pairs
+    every rank with every later one."""
     from uw_mapreduce_spark.operators.dedup import sorted_neighborhood_pairs
 
     rows = [(i, f"name{i:03d}") for i in range(20)]
@@ -454,6 +456,25 @@ def test_snm_candidates_are_exactly_n_times_w_minus_tail(spark):
     # adjacency in sort order: name000 pairs with 001,002,003 only
     nbrs = {r["key_b"] for r in cand.collect() if r["key_a"] == "name000"}
     assert nbrs == {"name001", "name002", "name003"}
+
+    def model(rows, w):
+        """Each rank with its next ``w`` ranks, in (key, id) order."""
+        order = sorted(rows, key=lambda r: (r[1], r[0]))
+        return sorted(
+            (*order[i], *order[j], j - i)
+            for i in range(len(order))
+            for j in range(i + 1, min(i + w, len(order) - 1) + 1)
+        )
+
+    dup_keys = [((i * 11) % 23, f"k{i % 5}") for i in range(23)]
+    few = [(i, f"name{i}") for i in range(6)]
+    for rows, w in ((dup_keys, 4), (few, 6), (few, 9)):
+        got = sorted(
+            map(tuple, sorted_neighborhood_pairs(
+                spark.createDataFrame(rows, "id long, k string"), "k", "id", window=w
+            ).select("id_a", "key_a", "id_b", "key_b", "delta").collect())
+        )
+        assert got == model(rows, w), (w, rows)
 
 
 def test_snm_catches_cross_block_typo(spark):

@@ -73,6 +73,78 @@ def test_ngram_jaccard_stays_inverted_index(spark, sf_small):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _call_jobs(spark, group, call):
+    """Run ``call`` under job group ``group``: (its result, the Spark
+    jobs it launched before returning)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _final_plan(df) -> str:
+    """The executed plan after an action: AQE's final plan only."""
+    df.collect()
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
+def test_shingle_pair_operators_share_one_exchange_without_barriers(spark, sf_small):
+    """With max_df, Jaccard and containment launch no Spark job at call
+    time (no cache count, no eager checkpoint), and their executed plan
+    tokenizes the corpus once: the per-doc sizes and the pair expansion
+    read one reused shingle exchange, and no cache."""
+    from uw_mapreduce_spark.caching import release_scope
+    from uw_mapreduce_spark.operators import dedup
+    from uw_mapreduce_spark.operators.dedup import ngram_containment_pairs, ngram_jaccard_pairs
+    from uw_mapreduce_spark.sources.tables import load_table
+
+    # A shingle table that an earlier max_df=None call left cached in
+    # the dedup scope matches this plan's, so Spark would read it in
+    # place of the operator's own plan: drop it first.
+    release_scope(dedup._SCOPE)
+    docs = load_table(spark, sf_small, "documents")
+    for fn in (ngram_jaccard_pairs, ngram_containment_pairs):
+        out, jobs = _call_jobs(
+            spark, f"pairs-{fn.__name__}",
+            lambda: fn(docs, "text", "doc_id", n=5, threshold=0.5, max_df=64),
+        )
+        assert jobs == 0, fn.__name__
+        plan = _final_plan(out)
+        assert plan.count("Generate explode(array_distinct(") == 1, (fn.__name__, plan)
+        assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, fn.__name__
+
+
+def test_snm_is_one_shifted_join_over_the_rank(spark, sf_small):
+    """sorted_neighborhood_pairs launches only the range pass's border
+    jobs at call time (its ranks are not checkpointed), and pairs each
+    rank with its next `window` ranks in ONE join against a shifted
+    copy: no union of one join per offset."""
+    import re
+
+    from uw_mapreduce_spark.operators.dedup import sorted_neighborhood_pairs
+    from uw_mapreduce_spark.operators.scale import global_rank_scalable
+    from uw_mapreduce_spark.sources.tables import load_table
+
+    part = load_table(spark, sf_small, "part")
+    out, snm_jobs = _call_jobs(
+        spark, "snm-pairs", lambda: sorted_neighborhood_pairs(part, "p_name", "p_partkey", 3)
+    )
+    _, rank_jobs = _call_jobs(
+        spark, "snm-rank",
+        lambda: global_rank_scalable(
+            part.select("p_partkey", "p_name"), ["p_name", "p_partkey"], "_snm_rank"
+        ),
+    )
+    assert snm_jobs == rank_jobs > 0, (snm_jobs, rank_jobs)
+    plan = _final_plan(out)
+    joins = re.findall(r"\b\w*(?:Join|CartesianProduct)\b", plan)
+    assert len(joins) == 1, (joins, plan)
+    assert "Union" not in plan, plan
+
+
 def test_coship_densification_guard(spark, sf_small):
     """The capped co-shipping builder must (a) carry the per-part cap
     in its plan (the sorted-array slice feeding the map-side pair
@@ -249,21 +321,17 @@ def test_scalable_pass_job_count(spark):
         sliding_aggregate_scalable,
     )
 
-    sc = spark.sparkContext
     df = _uniform_long_frame(spark)
     calls = {
         "sum": lambda: sliding_aggregate_scalable(df, ["k"], "v", 91, num_partitions=8),
         "rank": lambda: global_rank_scalable(df, ["k"], num_partitions=8),
     }
     for name, call in calls.items():
-        group = f"scalable-jobs-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            call().write.format("noop").mode("overwrite").save()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(jobs) <= 4, (name, len(jobs))
+        _, jobs = _call_jobs(
+            spark, f"scalable-jobs-{name}",
+            lambda: call().write.format("noop").mode("overwrite").save(),
+        )
+        assert jobs <= 4, (name, jobs)
 
 
 def test_scalable_halo_is_row_bounded(spark):
@@ -306,7 +374,9 @@ def test_scalable_pass_one_range_per_task(spark):
     uniform keys for the last).  The non-empty tasks number the ranges,
     each holds one contiguous block of ranks, and the exchange passes
     the range id through (plain pids 0..7 hashed into only 5 of 8
-    tasks)."""
+    tasks).  A single range is one exchange, however large P is."""
+    import re
+
     import pyspark.sql.functions as F
 
     from uw_mapreduce_spark.operators.scale import (
@@ -334,8 +404,10 @@ def test_scalable_pass_one_range_per_task(spark):
             assert all(b["hi"] - b["lo"] + 1 == b["n"] for b in blocks), (p, parts, blocks)
             assert sum(b["n"] for b in blocks) == n, (p, parts, blocks)
             plan = _plan(out).lower()
-            if p > 1:  # Spark plans a 1-partition exchange as SinglePartition
+            if parts > 1:
                 assert "shufflepartitionidpassthrough(" in plan, (p, parts, plan[:2000])
+            else:  # one range: one SinglePartition exchange, no pass-through under it
+                assert len(re.findall(r"\bexchange ", plan)) == 1, (p, parts, plan[:2000])
             assert "hashpartitioning(_pid" not in plan, (p, parts, plan[:2000])
 
 

@@ -1,7 +1,9 @@
 """Cache-lifecycle helpers.
 
-Multi-pass operators (scalable windowing, similarity joins) persist an
-intermediate frame that several downstream subtrees read.  Naked
+Multi-pass operators (dedup and similarity joins, clustering, PCA,
+heavy hitters, TF-IDF) persist an intermediate frame that several
+downstream subtrees read.  The scalable range pass (``operators.scale``)
+persists nothing: its consumers read one range exchange.  Naked
 ``persist()`` has two operational problems observed in this engine:
 
 - inside one action, AQE launches the consuming subtrees concurrently

@@ -146,13 +146,10 @@ def _inverted_pair_counts(sh: DataFrame, max_df: int):
     Arrays are sorted, so pair order (a<b) matches the join's doc_a<doc_b.
     """
     inv = sh.groupBy("shingle").agg(F.array_sort(F.collect_list("doc")).alias("_docs"))
+    # kept feeds two subtrees (sizes + pairs) that read the same
+    # shingle exchange; AQE reuses it, so the corpus is tokenized and
+    # shuffled once without a cache or a count() barrier.
     kept = inv.where(F.size("_docs") <= max_df).select("_docs")
-    # kept feeds two subtrees (sizes + pairs): persist once, eagerly —
-    # same race-avoidance barrier as the old shingle-table persist, on
-    # a frame that is one row per shingle instead of one per (doc,
-    # shingle).
-    kept = persist_scoped(kept, _SCOPE)
-    kept.count()
     sizes = (
         kept.select(F.explode("_docs").alias("doc"))
         .groupBy("doc")
@@ -175,29 +172,21 @@ def _inverted_pair_counts(sh: DataFrame, max_df: int):
     return common, sizes
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-    threshold: float = 0.8,
-    max_df: int | None = None,
-    shingles: DataFrame | None = None,
+def _shared_shingle_pairs(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_df: int | None
 ) -> DataFrame:
-    """Exact near-duplicate pairs by Jaccard over token n-gram shingles.
+    """(doc_a, doc_b, common, n_a, n_b) for every doc pair sharing a
+    shingle, doc_a < doc_b: the shared-shingle count and both docs'
+    shingle counts, the inputs of the Jaccard and containment formulas.
 
-    Inverted index: group docs per shingle, count shared shingles per
-    co-occurring pair, derive the union from per-doc shingle counts.
-    Output (doc_a, doc_b, jaccard_permille) with doc_a < doc_b; the
-    similarity is reported as floor(1000·J) so it is integer-exact
-    across engines.  With ``max_df`` (the production configuration —
-    at 100 TB you always set this) the pair stage runs on per-shingle
-    doc arrays bounded by max_df (`_inverted_pair_counts`); without it
+    With ``max_df`` the pairs come from per-shingle doc arrays bounded
+    by max_df (`_inverted_pair_counts`) and read no cache.  Without it
     array sizes are unbounded, so the classic shingle-keyed self-join
-    is kept.
+    is kept; it reads a scoped cache, so callers materialize their
+    small output on that branch only, freeing it from the cache's
+    residency.
     """
-    own_shingles = shingles is None
-    sh = _shingles(df, text_col, id_col, n) if own_shingles else shingles
+    sh = _shingles(df, text_col, id_col, n)
     if max_df is not None:
         common, sizes = _inverted_pair_counts(sh, max_df)
     else:
@@ -205,39 +194,50 @@ def ngram_jaccard_pairs(
         # of the pair join).  Persist ONCE and materialize eagerly:
         # inside a single action, AQE launches the subtree stages
         # concurrently and they would race the cache, computing the
-        # explode+distinct up to 3x (measured ~3x wall-clock).  The
-        # count() is an optimization barrier, exactly like the
-        # reference's per-job HDFS materialization but in memory.
-        # Scoped (bounded) registration: other dedup operators building
-        # the identical shingle table share the entry.
+        # explode+distinct up to 3x (measured ~3x wall-clock).  Scoped
+        # (bounded) registration: other dedup operators building the
+        # identical shingle table share the entry.
         sh = persist_scoped(sh, _SCOPE)
         sh.count()
         sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-        a = sh.alias("a")
-        b = sh.alias("b")
+        a, b = sh.alias("a"), sh.alias("b")
         common = (
             a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
             .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
             .agg(F.count(F.lit(1)).alias("common"))
         )
-    jac = (
-        common.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn(
-            "jaccard_permille",
-            F.floor(
-                F.lit(1000.0) * F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
-            ).cast("long"),
-        )
+    return common.join(
+        sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a"
+    ).join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 5,
+    threshold: float = 0.8,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Exact near-duplicate pairs by Jaccard over token n-gram shingles.
+
+    Inverted index: group docs per shingle, count shared shingles per
+    co-occurring pair, derive the union from per-doc shingle counts
+    (`_shared_shingle_pairs`).  Output (doc_a, doc_b, jaccard_permille)
+    with doc_a < doc_b; the similarity is reported as floor(1000·J) so
+    it is integer-exact across engines.  Set ``max_df`` in production
+    (at 100 TB you always do): shingles in more than max_df docs are
+    dropped before the pair expansion.
+    """
+    jac = _shared_shingle_pairs(df, text_col, id_col, n, max_df).select(
+        "doc_a",
+        "doc_b",
+        F.floor(
+            F.lit(1000.0) * F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
+        ).cast("long").alias("jaccard_permille"),
     )
-    out = jac.where(F.col("jaccard_permille") >= int(threshold * 1000)).select(
-        "doc_a", "doc_b", "jaccard_permille"
-    )
-    if own_shingles:
-        # Pair output is tiny; materialize it so the result no longer
-        # depends on the scoped caches' residency.
-        out = materialize_and_release(out)
-    return out
+    out = jac.where(F.col("jaccard_permille") >= int(threshold * 1000))
+    return out if max_df is not None else materialize_and_release(out)
 
 
 def jaccard_pairs_artifact(
@@ -293,10 +293,13 @@ def jaccard_pairs_artifact(
         f"njp{n}_t{int(round(threshold * 1000))}"
         f"_d{'x' if max_df is None else max_df}_"
     )
-    # Version covers the kernel AND its shingle projection — a
-    # tokenization-only change also rebuilds.
+    # Version covers the kernel, its pair helpers AND its shingle
+    # projection — a tokenization-only change also rebuilds.
+    version = _builder_version(
+        ngram_jaccard_pairs, _shared_shingle_pairs, _inverted_pair_counts, _shingles
+    )
     key = (
-        f"{family}v{_builder_version(ngram_jaccard_pairs, _shingles)}"
+        f"{family}v{version}"
         f"_{_corpus_fingerprint(df, id_col, text_col)}"
     )
     root = _artifact_cache_dir(cache_dir)
@@ -840,34 +843,34 @@ def sorted_neighborhood_pairs(
     blocks).
 
     Scale shape: the rank is `scale.global_rank_scalable` (range
-    exchange + P-row offsets — no single-partition sort), and each of
-    the ``window`` neighbor joins is a 1:1 shifted-rank equi-join —
-    the reference's own O12 bounded-replication idiom
+    exchange + P-row offsets — no single-partition sort), and ONE
+    equi-join on rank pairs it with a shifted copy of itself that
+    holds each row ``window`` times, at ranks r-1 .. r-window — the
+    reference's own O12 bounded-replication idiom
     (SlidingAggregation.java:433-536) reused for record linkage.
 
     Returns (id_a, key_a, id_b, key_b, delta) candidates; callers
     append their verify predicate (edit distance etc.)."""
     from .scale import global_rank_scalable
 
+    if window < 1:
+        raise ValueError("window must be >= 1")
     ranked = global_rank_scalable(
         df.select(F.col(id_col), F.col(key_col)), [key_col, id_col], "_snm_rank"
-    ).localCheckpoint(eager=True)
-    out = None
-    for delta in range(1, window + 1):
-        shifted = ranked.select(
-            (F.col("_snm_rank") - F.lit(delta)).alias("_snm_rank"),
-            F.col(id_col).alias("_id_b"),
-            F.col(key_col).alias("_key_b"),
-        )
-        p = ranked.join(shifted, "_snm_rank").select(
-            F.col(id_col).alias("id_a"),
-            F.col(key_col).alias("key_a"),
-            F.col("_id_b").alias("id_b"),
-            F.col("_key_b").alias("key_b"),
-            F.lit(delta).cast("long").alias("delta"),
-        )
-        out = p if out is None else out.unionByName(p)
-    return out
+    )
+    shifted = ranked.select(
+        F.col("_snm_rank"),
+        F.col(id_col).alias("_id_b"),
+        F.col(key_col).alias("_key_b"),
+        F.explode(F.sequence(F.lit(1), F.lit(window))).alias("_delta"),
+    ).withColumn("_snm_rank", F.col("_snm_rank") - F.col("_delta"))
+    return ranked.join(shifted, "_snm_rank").select(
+        F.col(id_col).alias("id_a"),
+        F.col(key_col).alias("key_a"),
+        F.col("_id_b").alias("id_b"),
+        F.col("_key_b").alias("key_b"),
+        F.col("_delta").cast("long").alias("delta"),
+    )
 
 
 def ngram_containment_pairs(
@@ -890,30 +893,12 @@ def ngram_containment_pairs(
     ∝ co-occurring pairs never |docs|²), with the denominator swapped
     to the SMALLER side — `least(n_a, n_b)` — and reported as integer
     floor(1000·C)."""
-    sh = _shingles(df, text_col, id_col, n)
-    if max_df is not None:
-        common, sizes = _inverted_pair_counts(sh, max_df)
-    else:
-        sh = persist_scoped(sh, _SCOPE)
-        sh.count()
-        sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-        a, b = sh.alias("a"), sh.alias("b")
-        common = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-            .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-    cont = (
-        common.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn(
-            "containment_permille",
-            F.floor(
-                F.lit(1000.0) * F.col("common") / F.least(F.col("n_a"), F.col("n_b"))
-            ).cast("long"),
-        )
+    cont = _shared_shingle_pairs(df, text_col, id_col, n, max_df).select(
+        "doc_a",
+        "doc_b",
+        F.floor(
+            F.lit(1000.0) * F.col("common") / F.least(F.col("n_a"), F.col("n_b"))
+        ).cast("long").alias("containment_permille"),
     )
-    out = cont.where(
-        F.col("containment_permille") >= int(threshold * 1000)
-    ).select("doc_a", "doc_b", "containment_permille")
-    return materialize_and_release(out)
+    out = cont.where(F.col("containment_permille") >= int(threshold * 1000))
+    return out if max_df is not None else materialize_and_release(out)

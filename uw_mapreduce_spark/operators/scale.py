@@ -45,10 +45,12 @@ which stays entirely JVM-side (no Python row serialization anywhere):
      the replication loop, :257-303).  A range's halo is ≤ l-1 rows plus
      one interval (an interval holds ≤ n/4P rows unless it is one heavy
      key's), not whole earlier ranges.
-     ``repartitionById(P, _pid)`` sends range k to shuffle task k, as
-     the reference's `SortMapper` keys each record by its range index
-     (:87-146): one task per range, no hash in between.  ``_pid`` must
-     stay INT; the pass-through rejects a BIGINT id.
+     ``repartitionById(parts, _pid)``, with one shuffle task per range
+     found, sends range k to task k, as the reference's `SortMapper`
+     keys each record by its range index (:87-146): no hash in
+     between and no empty task; a single range is one
+     ``SinglePartition`` exchange.  ``_pid`` must stay INT; the
+     pass-through rejects a BIGINT id.
   4. one window spec per range (PARTITION BY range ORDER BY key): the
      rank is a driver constant plus ``row_number``; sum/count/avg are
      running totals minus their ``lag(·, l)`` (O(1) per row); min/max
@@ -474,7 +476,7 @@ def _ranged_with_offsets(
     if halo and parts > 1:
         last = F.lit(k_all) + _pid_expr(order_by[0], t[k_all + 1:])
         ranged = ranged.withColumn("_pid", F.explode(F.sequence(F.col("_pid"), last)))
-    ranged = ranged.repartitionById(num_partitions, "_pid")
+    ranged = ranged.repartitionById(parts, "_pid")
 
     # Step 4: one window spec per range.
     tie = [v] if window is not None and value_col not in order_by else []

@@ -47,17 +47,13 @@ def sliding_aggregate(
     agg: str = "sum",
     rank_col: str = "rank",
     agg_col: str = "agg",
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
-    """Trailing window aggregate over the global (or per-group) order.
+    """Trailing window aggregate over the global order.
 
     Frame: rows [max(0, r-window+1), r] — trailing, inclusive of the
     current row, clamped at the start (`SlidingAggregation.java:357-362`,
-    verified on expected{16,79,91}).
-
-    ``partition_by`` generalizes the reference (whose order is global):
-    with a partition spec Spark parallelizes natively and this IS the
-    100 TB path; without one, use the scalable variant beyond ~10M rows.
+    verified on expected{16,79,91}).  The window has no PARTITION BY,
+    so it runs in one task: use the scalable variant beyond ~10M rows.
     """
     if window < 1:
         raise ValueError("window must be >= 1")
@@ -66,13 +62,8 @@ def sliding_aggregate(
     except KeyError:
         raise ValueError(f"agg must be one of {sorted(AGG_FNS)}") from None
 
-    parts = [F.col(c) for c in (partition_by or [])]
-    w_rank = Window.partitionBy(*parts).orderBy(*[F.col(c) for c in order_by])
-    w_agg = (
-        Window.partitionBy(*parts)
-        .orderBy(F.col(rank_col))
-        .rowsBetween(-(window - 1), Window.currentRow)
-    )
+    w_rank = Window.orderBy(*[F.col(c) for c in order_by])
+    w_agg = Window.orderBy(F.col(rank_col)).rowsBetween(-(window - 1), Window.currentRow)
     ranked = df.withColumn(rank_col, (F.row_number().over(w_rank) - F.lit(1)).cast("long"))
     return ranked.withColumn(agg_col, agg_fn(F.col(value_col)).over(w_agg))
 
