@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from uw_mapreduce_spark.session import get_spark
@@ -49,3 +51,16 @@ def sf_oracle():
 @pytest.fixture(scope="session")
 def reference_dir():
     return REF
+
+
+@contextmanager
+def shuffle_partitions(spark, p):
+    """Run the block with ``spark.sql.shuffle.partitions`` at ``p`` — the
+    range count every scalable entry point reads — then restore the
+    previous value."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(p))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -7,6 +7,7 @@ guard in table_diff_columns, and the host-sized driver-memory default.
 from __future__ import annotations
 
 import pytest
+from conftest import shuffle_partitions
 from pyspark.sql import functions as F
 
 
@@ -65,9 +66,8 @@ def test_prefix_max_scalable_preserves_value_type(spark):
         (F.col("id") % 7).cast("int").alias("v_int"),
         ((F.col("id") % 5) / 2.0).alias("v_dbl"),
     )
-    out_i = prefix_scalable(
-        df, ["i"], "v_int", agg="max", out_col="prefix_max", num_partitions=4
-    ).orderBy("i")
+    with shuffle_partitions(spark, 4):
+        out_i = prefix_scalable(df, ["i"], "v_int", agg="max", out_col="prefix_max").orderBy("i")
     vals = [r.prefix_max for r in out_i.collect()]
     run = []
     m = None
@@ -76,9 +76,8 @@ def test_prefix_max_scalable_preserves_value_type(spark):
         run.append(m)
     assert vals == run
 
-    out_d = prefix_scalable(
-        df, ["i"], "v_dbl", agg="max", out_col="prefix_max", num_partitions=4
-    ).orderBy("i")
+    with shuffle_partitions(spark, 4):
+        out_d = prefix_scalable(df, ["i"], "v_dbl", agg="max", out_col="prefix_max").orderBy("i")
     dvals = [r.prefix_max for r in out_d.collect()]
     drun = []
     m = None

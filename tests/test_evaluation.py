@@ -3,6 +3,7 @@ k-fold partition discipline."""
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import shuffle_partitions
 
 
 @pytest.fixture(scope="module")
@@ -22,13 +23,17 @@ def test_auc_perfect_and_reversed(spark):
     perfect = _scored(
         spark, [(1, 1, 0.9), (2, 1, 0.8), (3, 0, 0.2), (4, 0, 0.1)]
     )
-    r = roc_auc(perfect, num_partitions=4).collect()[0]
+    with shuffle_partitions(spark, 4):
+        out = roc_auc(perfect)
+    r = out.collect()[0]
     assert (r["n_pos"], r["n_neg"], r["auc_micro"]) == (2, 2, 1_000_000)
 
     reverse = _scored(
         spark, [(1, 0, 0.9), (2, 0, 0.8), (3, 1, 0.2), (4, 1, 0.1)]
     )
-    assert roc_auc(reverse, num_partitions=4).collect()[0]["auc_micro"] == 0
+    with shuffle_partitions(spark, 4):
+        out = roc_auc(reverse)
+    assert out.collect()[0]["auc_micro"] == 0
 
 
 def test_auc_ties_half_credit(spark):
@@ -36,7 +41,9 @@ def test_auc_ties_half_credit(spark):
     from uw_mapreduce_spark.operators.evaluation import roc_auc
 
     tied = _scored(spark, [(i, i % 2, 0.5) for i in range(10)])
-    r = roc_auc(tied, num_partitions=4).collect()[0]
+    with shuffle_partitions(spark, 4):
+        out = roc_auc(tied)
+    r = out.collect()[0]
     assert r["auc_micro"] == 500_000
     # num2 = 2*U = n_pos*n_neg when every pair ties
     assert r["num2"] == r["n_pos"] * r["n_neg"]
@@ -54,7 +61,9 @@ def test_auc_matches_bruteforce_pairs(spark):
         for _, lp, sp in rows if lp
         for _, ln, sn in rows if not ln
     )
-    r = roc_auc(_scored(spark, rows), num_partitions=4).collect()[0]
+    with shuffle_partitions(spark, 4):
+        out = roc_auc(_scored(spark, rows))
+    r = out.collect()[0]
     assert r["num2"] == num2
     assert r["auc_micro"] == num2 * 1_000_000 // (2 * r["n_pos"] * r["n_neg"])
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 import glob
 
 import pytest
+from conftest import shuffle_partitions
 
 from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
 from uw_mapreduce_spark.operators.window import sliding_sum_kv
@@ -61,9 +62,8 @@ def test_window_path_matches_golden(spark, reference_dir, window):
 @pytest.mark.parametrize("window", GOLDEN_WINDOWS)
 def test_scalable_path_matches_golden(spark, reference_dir, window):
     kv = read_text_kv(spark, f"{reference_dir}/input/simple103.txt")
-    out = sliding_aggregate_scalable(
-        kv, order_by=["key", "value"], value_col="value", window=window, num_partitions=4
-    )
+    with shuffle_partitions(spark, 4):
+        out = sliding_aggregate_scalable(kv, order_by=["key", "value"], value_col="value", window=window)
     got = {(r["rank"], r["key"], r["agg"]) for r in out.select("rank", "key", "agg").collect()}
     assert got == load_golden(reference_dir, window)
 
@@ -108,12 +108,11 @@ def test_simple103_analogue_matches_model(spark):
     for window in (*WINDOWS, 200):
         for agg in ("sum", "count", "avg", "min", "max"):
             want = _window_model(rows, window, agg)
-            paths = {
-                "window": sliding_aggregate(kv, ["key", "value"], "value", window, agg=agg),
-                "scalable": sliding_aggregate_scalable(
-                    kv, ["key", "value"], "value", window, agg=agg, num_partitions=4
-                ),
-            }
+            with shuffle_partitions(spark, 4):
+                paths = {
+                    "window": sliding_aggregate(kv, ["key", "value"], "value", window, agg=agg),
+                    "scalable": sliding_aggregate_scalable(kv, ["key", "value"], "value", window, agg=agg),
+                }
             for path, out in paths.items():
                 got = {(r["rank"], r["key"], r["agg"]) for r in out.collect()}
                 assert got == want, (path, window, agg)
@@ -127,10 +126,12 @@ def test_tosort100_analogue_windowed_count(spark):
 
     kv = spark.createDataFrame([((i * 53) % 61, 1) for i in range(100)], "key long, value long")
     for window in (1, 16, 100, 150):
-        for out in (
-            sliding_aggregate(kv, ["key", "value"], "value", window),
-            sliding_aggregate_scalable(kv, ["key", "value"], "value", window, num_partitions=4),
-        ):
+        with shuffle_partitions(spark, 4):
+            outs = (
+                sliding_aggregate(kv, ["key", "value"], "value", window),
+                sliding_aggregate_scalable(kv, ["key", "value"], "value", window),
+            )
+        for out in outs:
             rows = out.collect()
             assert sorted(r["rank"] for r in rows) == list(range(100))
             for r in rows:
@@ -160,9 +161,10 @@ def test_two_path_agreement_100k(spark, reference_dir):
 
     cols = ["rank", "key", "value", "agg"]
     for window in (10, 500):
-        sc = sliding_aggregate_scalable(
-            kv, order_by=["key", "value"], value_col="value", window=window, num_partitions=8
-        ).select(*cols)
+        with shuffle_partitions(spark, 8):
+            sc = sliding_aggregate_scalable(
+                kv, order_by=["key", "value"], value_col="value", window=window
+            ).select(*cols)
         wd = sliding_aggregate(
             kv, order_by=["key", "value"], value_col="value", window=window
         ).select(*cols)
@@ -170,10 +172,10 @@ def test_two_path_agreement_100k(spark, reference_dir):
         assert wd.exceptAll(sc).count() == 0
 
     # Non-invertible path (block decomposition) at the same volume.
-    mm = sliding_aggregate_scalable(
-        kv, order_by=["key", "value"], value_col="value", window=500, agg="min",
-        num_partitions=8,
-    ).select(*cols)
+    with shuffle_partitions(spark, 8):
+        mm = sliding_aggregate_scalable(
+            kv, order_by=["key", "value"], value_col="value", window=500, agg="min"
+        ).select(*cols)
     wd_min = sliding_aggregate(
         kv, order_by=["key", "value"], value_col="value", window=500, agg="min"
     ).select(*cols)
@@ -271,7 +273,8 @@ def test_scalable_invariant_5m_rows_with_hot_key(spark):
         F.lit(2_250_000).cast("long").alias("key"), F.lit(1).cast("long").alias("value")
     )
     df = base.unionByName(hot).withColumn("u", F.monotonically_increasing_id())
-    out = sliding_aggregate_scalable(df, ["key", "u"], "value", window=1000, num_partitions=32)
+    with shuffle_partitions(spark, 32):
+        out = sliding_aggregate_scalable(df, ["key", "u"], "value", window=1000)
     assert out.where(F.col("agg") != F.least(F.col("rank") + 1, F.lit(1000))).count() == 0
     assert out.count() == 5_000_000
 
@@ -289,7 +292,8 @@ def test_pack_documents_1m_rows_distributed_invariants(spark):
         F.col("id").alias("doc_id"),
         (F.when(F.col("id") % 1000 == 0, 50_000).otherwise(F.col("id") % 70)).cast("long").alias("n_tokens"),
     )
-    out = pack_documents(docs, "n_tokens", budget=8192, order_by=["doc_id"], num_partitions=32)
+    with shuffle_partitions(spark, 32):
+        out = pack_documents(docs, "n_tokens", budget=8192, order_by=["doc_id"])
     total = docs.agg(F.sum("n_tokens")).collect()[0][0]
     # end of the last doc == total tokens; every end == next start
     ends = out.select("doc_id", (F.col("start_offset") + F.col("n_tokens")).alias("end"))

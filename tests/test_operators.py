@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from conftest import shuffle_partitions
 from pyspark.sql import functions as F
 
 from uw_mapreduce_spark.operators.partitioning import rebalance_by_rank, total_sort
@@ -31,10 +32,9 @@ def test_equi_depth_borders_fewer_rows_than_partitions(spark):
 def test_global_rank_paths_agree(spark):
     df = kv(spark, [(i * 7 % 50, i) for i in range(200)])
     a = {(r.key, r.value, r["rank"]) for r in global_rank(df, ["key", "value"]).collect()}
-    b = {
-        (r.key, r.value, r["rank"])
-        for r in global_rank_scalable(df, ["key", "value"], num_partitions=4).collect()
-    }
+    with shuffle_partitions(spark, 4):
+        scalable = global_rank_scalable(df, ["key", "value"])
+    b = {(r.key, r.value, r["rank"]) for r in scalable.collect()}
     assert a == b
     ranks = sorted(r[2] for r in a)
     assert ranks == list(range(200))
@@ -84,12 +84,9 @@ def test_sliding_minmax_scalable_matches_window_path(spark):
                 (r["rank"], r["agg"])
                 for r in sliding_aggregate(df, ["key", "value"], "value", l, agg=agg).collect()
             }
-            b = {
-                (r["rank"], r["agg"])
-                for r in sliding_aggregate_scalable(
-                    df, ["key", "value"], "value", l, agg=agg, num_partitions=5
-                ).collect()
-            }
+            with shuffle_partitions(spark, 5):
+                scalable = sliding_aggregate_scalable(df, ["key", "value"], "value", l, agg=agg)
+            b = {(r["rank"], r["agg"]) for r in scalable.collect()}
             assert a == b, (agg, l)
 
 
@@ -191,7 +188,8 @@ def test_pack_documents_stream_invariants(spark):
         # than the budget below
         (F.col("id") % 100).cast("long").alias("n_tokens"),
     )
-    out = pack_documents(docs, "n_tokens", budget=64, order_by=["doc_id"], num_partitions=8)
+    with shuffle_partitions(spark, 8):
+        out = pack_documents(docs, "n_tokens", budget=64, order_by=["doc_id"])
     rows = sorted((r.doc_id, r.n_tokens, r.start_offset, r.first_pack, r.last_pack, r.n_packs_spanned)
                   for r in out.collect())
     # contiguous stream: each start is the previous end
@@ -203,9 +201,8 @@ def test_pack_documents_stream_invariants(spark):
         assert last == ((start + n - 1) // 64 if n > 0 else first)
         assert spans == last - first + 1
     # partitioning-invariance (pure function of the data)
-    out13 = pack_documents(
-        docs.repartition(13), "n_tokens", budget=64, order_by=["doc_id"], num_partitions=8
-    )
+    with shuffle_partitions(spark, 8):
+        out13 = pack_documents(docs.repartition(13), "n_tokens", budget=64, order_by=["doc_id"])
     assert sorted(tuple(r) for r in out13.select(*out.columns).collect()) == sorted(
         tuple(r) for r in out.select(*out.columns).collect()
     )

@@ -4,6 +4,7 @@ different shuffle-partition settings — hidden dependence on partition
 count is the classic way a 'scalable' rank/prefix path goes wrong."""
 
 import pytest
+from conftest import shuffle_partitions
 
 SF = "/root/testdata/sf0.001"
 
@@ -34,12 +35,9 @@ def test_result_invariant_to_shuffle_partitions(spark, face):
     qs = e.queries()
 
     def run(parts):
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
+        with shuffle_partitions(spark, parts):
             return sorted(
                 tuple(str(v) for v in row) for row in qs[face](spark, SF).collect()
             )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     assert run(3) == run(16), face

@@ -13,6 +13,8 @@ and the co-shipping densification guard.
 
 from __future__ import annotations
 
+from conftest import shuffle_partitions
+
 from uw_mapreduce_spark.plans.catalog import QUERIES, _coship_supplier_edges
 
 
@@ -101,9 +103,11 @@ def test_shingle_pair_operators_share_one_exchange_without_barriers(spark, sf_sm
     from uw_mapreduce_spark.operators.dedup import ngram_containment_pairs, ngram_jaccard_pairs
     from uw_mapreduce_spark.sources.tables import load_table
 
-    # A shingle table that an earlier max_df=None call left cached in
-    # the dedup scope matches this plan's, so Spark would read it in
-    # place of the operator's own plan: drop it first.
+    # The pair operators free their shingle caches, but
+    # cross_corpus_overlap(max_df=...) keeps its train-side table cached
+    # for its lazy result; one left in the dedup scope matches this
+    # plan's shingles, so Spark would read it in place of the
+    # operator's own plan: drop it first.
     release_scope(dedup._SCOPE)
     docs = load_table(spark, sf_small, "documents")
     for fn in (ngram_jaccard_pairs, ngram_containment_pairs):
@@ -115,6 +119,28 @@ def test_shingle_pair_operators_share_one_exchange_without_barriers(spark, sf_sm
         plan = _final_plan(out)
         assert plan.count("Generate explode(array_distinct(") == 1, (fn.__name__, plan)
         assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, fn.__name__
+
+
+def test_pair_operators_leave_no_shingle_cache(spark, sf_small):
+    """ppjoin, Jaccard without max_df and MinHash LSH unpersist the
+    shingle table they cache once their small output is materialized,
+    so a max_df Jaccard call after them on the same documents and n
+    still tokenizes once and reads no cache (the dedup scope is not
+    released here)."""
+    from uw_mapreduce_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        ngram_jaccard_pairs,
+        ppjoin_pairs,
+    )
+    from uw_mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_small, "documents")
+    ppjoin_pairs(docs, "text", "doc_id", n=5)
+    ngram_jaccard_pairs(docs, "text", "doc_id", n=5)
+    minhash_lsh_pairs(docs, "text", "doc_id", n=5)
+    plan = _final_plan(ngram_jaccard_pairs(docs, "text", "doc_id", n=5, max_df=64))
+    assert plan.count("Generate explode(array_distinct(") == 1, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
 
 
 def test_snm_is_one_shifted_join_over_the_rank(spark, sf_small):
@@ -279,13 +305,12 @@ def test_scalable_range_pass_has_no_cache_or_rank_join(spark):
     )
 
     df = _kv_frame(spark)
-    frames = {
-        "sum": sliding_aggregate_scalable(df, ["key", "value"], "value", 91, num_partitions=4),
-        "max": sliding_aggregate_scalable(
-            df, ["key", "value"], "value", 91, agg="max", num_partitions=4
-        ),
-        "rank": global_rank_scalable(df, ["key", "value"], num_partitions=4),
-    }
+    with shuffle_partitions(spark, 4):
+        frames = {
+            "sum": sliding_aggregate_scalable(df, ["key", "value"], "value", 91),
+            "max": sliding_aggregate_scalable(df, ["key", "value"], "value", 91, agg="max"),
+            "rank": global_rank_scalable(df, ["key", "value"]),
+        }
     for name, out in frames.items():
         plan = _plan(out)
         assert "InMemoryRelation" not in plan, name
@@ -298,9 +323,8 @@ def test_scalable_minmax_uses_running_frames_only(spark):
     of the block for every row, O(l) per row."""
     from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
 
-    out = sliding_aggregate_scalable(
-        _kv_frame(spark), ["key", "value"], "value", 91, agg="min", num_partitions=4
-    )
+    with shuffle_partitions(spark, 4):
+        out = sliding_aggregate_scalable(_kv_frame(spark), ["key", "value"], "value", 91, agg="min")
     assert "unboundedfollowing" not in _plan(out).lower()
 
 
@@ -323,14 +347,15 @@ def test_scalable_pass_job_count(spark):
 
     df = _uniform_long_frame(spark)
     calls = {
-        "sum": lambda: sliding_aggregate_scalable(df, ["k"], "v", 91, num_partitions=8),
-        "rank": lambda: global_rank_scalable(df, ["k"], num_partitions=8),
+        "sum": lambda: sliding_aggregate_scalable(df, ["k"], "v", 91),
+        "rank": lambda: global_rank_scalable(df, ["k"]),
     }
     for name, call in calls.items():
-        _, jobs = _call_jobs(
-            spark, f"scalable-jobs-{name}",
-            lambda: call().write.format("noop").mode("overwrite").save(),
-        )
+        with shuffle_partitions(spark, 8):
+            _, jobs = _call_jobs(
+                spark, f"scalable-jobs-{name}",
+                lambda: call().write.format("noop").mode("overwrite").save(),
+            )
         assert jobs <= 4, (name, jobs)
 
 
@@ -347,9 +372,9 @@ def test_scalable_halo_is_row_bounded(spark):
     group = "scalable-halo-rows"
     sc.setJobGroup(group, group)
     try:
-        sliding_aggregate_scalable(df, ["k"], "v", l, num_partitions=p).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        with shuffle_partitions(spark, p):
+            out = sliding_aggregate_scalable(df, ["k"], "v", l)
+        out.write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jsc = sc._jsc.sc()
@@ -393,7 +418,8 @@ def test_scalable_pass_one_range_per_task(spark):
                 df = spark.range(n).select((F.col("id") % parts).alias("k"), (F.col("id") % 100).alias("v"))
             borders = _deterministic_borders(df, "k", p)
             assert len(borders) + 1 == parts, (p, parts, borders)
-            out = sliding_aggregate_scalable(df, ["k"], "v", 91, num_partitions=p)
+            with shuffle_partitions(spark, p):
+                out = sliding_aggregate_scalable(df, ["k"], "v", 91)
             blocks = (
                 out.withColumn("p", F.spark_partition_id())
                 .groupBy("p")
@@ -412,8 +438,8 @@ def test_scalable_pass_one_range_per_task(spark):
 
 
 def test_prefix_max_scalable_defaults_to_shuffle_partitions(spark):
-    """prefix_scalable resolves num_partitions=None like its
-    siblings: the session's shuffle partitions, not a fixed 32."""
+    """prefix_scalable builds as many ranges as its siblings: the
+    session's shuffle partitions, not a fixed 32."""
     from uw_mapreduce_spark.operators.scale import prefix_scalable
 
     out = prefix_scalable(_uniform_long_frame(spark, 2000), ["k"], "v", agg="max")
@@ -459,9 +485,40 @@ def test_range_pass_is_private_to_scale():
     }, private
 
 
+def test_range_count_is_a_session_setting():
+    """The range count P is the session's shuffle partitions, read in
+    one place: no function of the range pass, nor of the consumers that
+    only forwarded a count (ntile, AUC, rank-sum, packing, shuffle),
+    takes `num_partitions`.  `_deterministic_borders` keeps its third
+    argument: `similarity._blocked_pairs` passes it a block count."""
+    import inspect
+
+    from uw_mapreduce_spark.operators import evaluation, packing, rank, scale
+
+    public = {
+        scale: {"sliding_aggregate_scalable", "global_rank_scalable", "prefix_scalable"},
+        rank: {"ntile_scalable"},
+        evaluation: {"roc_auc", "rank_sum_test"},
+        packing: {"pack_documents", "deterministic_shuffle"},
+    }
+    takes = set()
+    for mod, names in public.items():
+        fns = {
+            name: f for name, f in inspect.getmembers(mod, inspect.isfunction)
+            if f.__module__ == mod.__name__
+        }
+        assert names <= set(fns), (mod.__name__, names - set(fns))
+        takes |= {
+            f"{mod.__name__}.{name}" for name, f in fns.items()
+            if "num_partitions" in inspect.signature(f).parameters
+        }
+    assert takes == {"uw_mapreduce_spark.operators.scale._deterministic_borders"}, takes
+
+
 def test_range_consumers_default_to_shuffle_partitions(spark, sf_small, monkeypatch):
     """roc_auc and the quantile-normalize face build as many ranges as
-    the session has shuffle partitions, not a fixed 32."""
+    the session has shuffle partitions, not a fixed 32, and follow that
+    conf when it changes."""
     import pyspark.sql.functions as F
 
     from uw_mapreduce_spark.operators import scale
@@ -482,6 +539,12 @@ def test_range_consumers_default_to_shuffle_partitions(spark, sf_small, monkeypa
     QUERIES["quantile_normalize_events"](spark, sf_small)
     want = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert len(asked) >= 2 and set(asked) == {want}, asked
+
+    asked.clear()
+    with shuffle_partitions(spark, 3):
+        roc_auc(scored)
+        QUERIES["quantile_normalize_events"](spark, sf_small)
+    assert len(asked) >= 2 and set(asked) == {3}, asked
 
 
 def test_blocked_kernels_size_blocks_from_border_counts(spark, sf_small):

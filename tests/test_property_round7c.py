@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+from conftest import shuffle_partitions
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -41,7 +42,9 @@ def test_auc_pair_model_property(spark, rows):
         for p, sp in rows if p
         for q, sn in rows if not q
     )
-    r = roc_auc(df, num_partitions=4).collect()[0]
+    with shuffle_partitions(spark, 4):
+        out = roc_auc(df)
+    r = out.collect()[0]
     assert r["num2"] == num2
     assert r["auc_micro"] == num2 * 1_000_000 // (2 * r["n_pos"] * r["n_neg"])
 

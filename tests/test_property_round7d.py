@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+from conftest import shuffle_partitions
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -51,7 +52,9 @@ def test_rank_sum_matches_pair_model(spark, rows):
     df = spark.createDataFrame(
         [(int(g), int(v)) for g, v in rows], "treated long, v long"
     )
-    got = rank_sum_test(df, num_partitions=4).collect()
+    with shuffle_partitions(spark, 4):
+        out = rank_sum_test(df)
+    got = out.collect()
     if n1b == 0 or n2b == 0 or zb is None:
         assert got == []
         return
@@ -82,8 +85,9 @@ def test_rank_sum_arm_swap_antisymmetry(spark, rows):
     sw = spark.createDataFrame(
         [(int(not g), int(v)) for g, v in rows], "treated long, v long"
     )
-    a = rank_sum_test(df, num_partitions=4).collect()[0]
-    b = rank_sum_test(sw, num_partitions=4).collect()[0]
+    with shuffle_partitions(spark, 4):
+        outs = rank_sum_test(df), rank_sum_test(sw)
+    a, b = (out.collect()[0] for out in outs)
     assert a["u2_treatment"] + b["u2_treatment"] == 2 * a["n_treatment"] * a["n_control"]
     # floor(x) + floor(-x) is 0 (grid point) or -1; allow -2 for the
     # one-ulp sqrt asymmetry between the two float trees.

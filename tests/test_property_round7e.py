@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import itertools
 
+from conftest import shuffle_partitions
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -225,12 +226,12 @@ def test_prefix_max_scalable_matches_running_max(spark, rows):
     df = spark.createDataFrame(data, f"k double, i long, v {vtype}").repartition(6)
 
     def prefixes(agg):
+        with shuffle_partitions(spark, 4):
+            incl = prefix_scalable(df, ["k", "i"], "v", agg=agg, out_col="incl")
+            excl = prefix_scalable(df, ["k", "i"], "v", agg=agg, out_col="excl", inclusive=False)
         return {
             r["i"]: (r["incl"], r["excl"])
-            for r in prefix_scalable(df, ["k", "i"], "v", agg=agg, out_col="incl", num_partitions=4)
-            .join(prefix_scalable(df, ["k", "i"], "v", agg=agg, out_col="excl", num_partitions=4,
-                                  inclusive=False).select("i", "excl"), "i")
-            .collect()
+            for r in incl.join(excl.select("i", "excl"), "i").collect()
         }
 
     got, got_sum = prefixes("max"), prefixes("sum")

@@ -3,6 +3,7 @@ brute-force model on arbitrary inputs (hypothesis-generated)."""
 
 from __future__ import annotations
 
+from conftest import shuffle_partitions
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -109,15 +110,13 @@ def test_sliding_paths_match_brute_force(spark, inputs, l):
     df = spark.createDataFrame(rows, schema)
     assert ranked(sliding_aggregate(df, ["key", "value"], "value", l)) == brute(rows, l, "sum")
     for agg in ("sum", "count", "avg"):
-        got = ranked(sliding_aggregate_scalable(
-            df, ["key", "value"], "value", l, agg=agg, num_partitions=3
-        ))
-        assert got == brute(rows, l, agg), agg
+        with shuffle_partitions(spark, 3):
+            out = sliding_aggregate_scalable(df, ["key", "value"], "value", l, agg=agg)
+        assert ranked(out) == brute(rows, l, agg), agg
     for agg in ("min", "max"):
-        got = ranked(sliding_aggregate_scalable(
-            df, ["key", "value"], "value", l, agg=agg, num_partitions=3
-        ))
-        assert got == brute(rows, l, agg), agg
+        with shuffle_partitions(spark, 3):
+            out = sliding_aggregate_scalable(df, ["key", "value"], "value", l, agg=agg)
+        assert ranked(out) == brute(rows, l, agg), agg
 
 
 @settings(deadline=None, max_examples=12, suppress_health_check=list(HealthCheck))
@@ -236,11 +235,11 @@ def test_pack_documents_matches_brute_force(spark, sizes, budget):
 
     rows = [(i, n) for i, n in enumerate(sizes)]
     df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    with shuffle_partitions(spark, 3):
+        out = pack_documents(df, "n_tokens", budget=budget, order_by=["doc_id"])
     got = sorted(
         (r.doc_id, r.start_offset, r.first_pack, r.last_pack, r.n_packs_spanned)
-        for r in pack_documents(
-            df, "n_tokens", budget=budget, order_by=["doc_id"], num_partitions=3
-        ).collect()
+        for r in out.collect()
     )
     expected, off = [], 0
     for i, n in enumerate(sizes):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from conftest import shuffle_partitions
 
 
 def test_knn_graph_artifact_builds_once_then_probes(spark, sf_small, tmp_path, monkeypatch):
@@ -238,12 +239,9 @@ def test_prefix_max_scalable_exclusive_matches_model(spark):
     for vals in cases:
         rows = [(i, v) for i, v in enumerate(vals)]
         df = spark.createDataFrame(rows, "i long, v long").repartition(5)
-        got = {
-            r["i"]: r["pm"]
-            for r in prefix_scalable(
-                df, ["i"], "v", agg="max", out_col="pm", num_partitions=4, inclusive=False
-            ).collect()
-        }
+        with shuffle_partitions(spark, 4):
+            out = prefix_scalable(df, ["i"], "v", agg="max", out_col="pm", inclusive=False)
+        got = {r["i"]: r["pm"] for r in out.collect()}
         acc, want = None, {}
         for i, v in rows:
             want[i] = acc

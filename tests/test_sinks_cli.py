@@ -104,6 +104,23 @@ def test_cli_scalable_matches_model(tmp_path):
     assert got == _window_model(rows, 79, "sum")
 
 
+@pytest.mark.parametrize("flag", [("--partitions", "0"), ("--partitions", "-2"), ("--window", "0")])
+def test_cli_rejects_counts_below_one(tmp_path, monkeypatch, capsys, flag):
+    """``--partitions`` or ``--window`` below 1 is a usage error: exit 2
+    from argparse, before any Spark session starts."""
+    from uw_mapreduce_spark import __main__ as cli
+    from uw_mapreduce_spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(SystemExit) as exc:
+        cli.main([str(tmp_path / "in.txt"), str(tmp_path / "out"), "--scalable", *flag])
+    assert exc.value.code == 2
+    assert f"{flag[0]} must be >= 1" in capsys.readouterr().err
+
+
 def test_cli_modules_import_without_pandas():
     """The CLI's modules load without the rest of the operator surface:
     importing them in a fresh interpreter (no JVM) pulls in neither

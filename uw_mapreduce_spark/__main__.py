@@ -17,6 +17,9 @@ contract) or parquet.  ``--threshold`` is accepted for CLI parity but
 unused: the reference's sampling job only computes partition borders,
 which the scalable path derives from a deterministic key histogram
 (``operators/scale._deterministic_borders``) instead of a sample.
+``--partitions`` sets ``spark.sql.shuffle.partitions``, which is also the
+scalable path's range count.  ``--window`` or ``--partitions`` below 1 is
+a usage error (exit 2) before any Spark session starts.
 """
 
 from __future__ import annotations
@@ -33,13 +36,17 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("input", help="input path: tab-separated key\\tvalue text, or parquet")
     ap.add_argument("output", help="output path")
     ap.add_argument("--window", type=int, default=10, help="window length l (reference -D my.window)")
-    ap.add_argument("--partitions", type=int, default=None, help="shuffle partitions (reference -D my.reducers)")
+    ap.add_argument("--partitions", type=int, default=None, help="spark.sql.shuffle.partitions, also the scalable path's range count (reference -D my.reducers)")
     ap.add_argument("--threshold", type=float, default=None, help="accepted for reference parity; unused (borders come from a deterministic key histogram, not a sample)")
     ap.add_argument("--agg", default="sum", choices=["sum", "min", "max", "count", "avg"])
     ap.add_argument("--scalable", action="store_true", help="use the no-single-partition path")
     ap.add_argument("--format", default="text", choices=["text", "parquet", "csv"])
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
+    if args.window < 1:
+        ap.error("--window must be >= 1")
+    if args.partitions is not None and args.partitions < 1:
+        ap.error("--partitions must be >= 1")
 
     from .session import get_spark
     from .sources.text_kv import read_text_kv, write_text_kv
@@ -47,7 +54,7 @@ def main(argv: list[str] | None = None) -> int:
     from .operators.scale import sliding_aggregate_scalable
 
     spark = get_spark(app_name="uw-mapreduce-spark-cli", master=args.master)
-    if args.partitions:
+    if args.partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.partitions))
 
     if args.input.endswith(".parquet") or args.input.rstrip("/").endswith("parquet"):
@@ -56,10 +63,7 @@ def main(argv: list[str] | None = None) -> int:
         kv = read_text_kv(spark, args.input)
 
     if args.scalable:
-        out = sliding_aggregate_scalable(
-            kv, ["key", "value"], "value", args.window, agg=args.agg,
-            num_partitions=args.partitions,
-        )
+        out = sliding_aggregate_scalable(kv, ["key", "value"], "value", args.window, agg=args.agg)
     else:
         out = sliding_aggregate(kv, ["key", "value"], "value", args.window, agg=args.agg)
     result = out.select("rank", "key", "agg")

@@ -75,7 +75,10 @@ def persist_scoped(df: DataFrame, scope: str, keep: int = 2) -> DataFrame:
     with _scoped_lock:
         if df.storageLevel != StorageLevel.NONE:
             return df
-        frames = _scoped.setdefault(scope, [])
+        # Forget handles whose cache their operator already released:
+        # evicting one later would uncache a newer entry of its plan.
+        frames = [f for f in _scoped.get(scope, []) if f.storageLevel != StorageLevel.NONE]
+        _scoped[scope] = frames
         frames.append(df.persist(StorageLevel.MEMORY_AND_DISK))
         evicted = []
         while len(frames) > keep:

@@ -174,19 +174,23 @@ def _inverted_pair_counts(sh: DataFrame, max_df: int):
 
 def _shared_shingle_pairs(
     df: DataFrame, text_col: str, id_col: str, n: int, max_df: int | None
-) -> DataFrame:
+) -> tuple[DataFrame, list[DataFrame]]:
     """(doc_a, doc_b, common, n_a, n_b) for every doc pair sharing a
     shingle, doc_a < doc_b: the shared-shingle count and both docs'
     shingle counts, the inputs of the Jaccard and containment formulas.
+    Returns the pairs and the cached frames they read.
 
     With ``max_df`` the pairs come from per-shingle doc arrays bounded
     by max_df (`_inverted_pair_counts`) and read no cache.  Without it
     array sizes are unbounded, so the classic shingle-keyed self-join
-    is kept; it reads a scoped cache, so callers materialize their
-    small output on that branch only, freeing it from the cache's
-    residency.
+    is kept; it reads a scoped shingle cache, so callers materialize
+    their small output on that branch only and then unpersist the
+    cache: left behind, Spark's cache manager would substitute it into
+    every later plan over the same shingles, breaking the ``max_df``
+    branch's exchange reuse.
     """
     sh = _shingles(df, text_col, id_col, n)
+    cached = []
     if max_df is not None:
         common, sizes = _inverted_pair_counts(sh, max_df)
     else:
@@ -199,6 +203,7 @@ def _shared_shingle_pairs(
         # identical shingle table share the entry.
         sh = persist_scoped(sh, _SCOPE)
         sh.count()
+        cached.append(sh)
         sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
         a, b = sh.alias("a"), sh.alias("b")
         common = (
@@ -206,9 +211,10 @@ def _shared_shingle_pairs(
             .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
             .agg(F.count(F.lit(1)).alias("common"))
         )
-    return common.join(
+    pairs = common.join(
         sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a"
     ).join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
+    return pairs, cached
 
 
 def ngram_jaccard_pairs(
@@ -229,7 +235,8 @@ def ngram_jaccard_pairs(
     (at 100 TB you always do): shingles in more than max_df docs are
     dropped before the pair expansion.
     """
-    jac = _shared_shingle_pairs(df, text_col, id_col, n, max_df).select(
+    pairs, cached = _shared_shingle_pairs(df, text_col, id_col, n, max_df)
+    jac = pairs.select(
         "doc_a",
         "doc_b",
         F.floor(
@@ -237,7 +244,7 @@ def ngram_jaccard_pairs(
         ).cast("long").alias("jaccard_permille"),
     )
     out = jac.where(F.col("jaccard_permille") >= int(threshold * 1000))
-    return out if max_df is not None else materialize_and_release(out)
+    return materialize_and_release(out, *cached) if cached else out
 
 
 def jaccard_pairs_artifact(
@@ -450,6 +457,7 @@ def save_minhash_index(
         "overwrite"
     ).parquet(os.path.join(path, "buckets"))
     sh.write.mode("overwrite").parquet(os.path.join(path, "shingles"))
+    sh.unpersist()
     with open(os.path.join(path, "manifest.json"), "w") as f:
         json.dump(
             {"n": n, "num_hashes": num_hashes, "bands": bands,
@@ -514,7 +522,7 @@ def minhash_dedup_against_index(
             "jaccard_permille",
         )
     )
-    return materialize_and_release(out)
+    return materialize_and_release(out, sh_new)
 
 
 def minhash_lsh_pairs(
@@ -567,7 +575,7 @@ def minhash_lsh_pairs(
     out = _jaccard_for_pairs(cand, sh).where(
         F.col("jaccard_permille") >= int(threshold * 1000)
     )
-    return materialize_and_release(out)
+    return materialize_and_release(out, sh)
 
 
 def simhash(
@@ -821,7 +829,7 @@ def ppjoin_pairs(
     out = jac.where(F.col("jaccard_permille") >= t_milli).select(
         "doc_a", "doc_b", "jaccard_permille"
     )
-    return materialize_and_release(out)
+    return materialize_and_release(out, sh)
 
 
 def sorted_neighborhood_pairs(
@@ -893,7 +901,8 @@ def ngram_containment_pairs(
     ∝ co-occurring pairs never |docs|²), with the denominator swapped
     to the SMALLER side — `least(n_a, n_b)` — and reported as integer
     floor(1000·C)."""
-    cont = _shared_shingle_pairs(df, text_col, id_col, n, max_df).select(
+    pairs, cached = _shared_shingle_pairs(df, text_col, id_col, n, max_df)
+    cont = pairs.select(
         "doc_a",
         "doc_b",
         F.floor(
@@ -901,4 +910,4 @@ def ngram_containment_pairs(
         ).cast("long").alias("containment_permille"),
     )
     out = cont.where(F.col("containment_permille") >= int(threshold * 1000))
-    return out if max_df is not None else materialize_and_release(out)
+    return materialize_and_release(out, *cached) if cached else out

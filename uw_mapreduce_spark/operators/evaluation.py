@@ -97,7 +97,7 @@ def binary_centroid_scores(
     )
 
 
-def _u2_frame(df, pos_col, value_col, num_partitions, *aggs):
+def _u2_frame(df, pos_col, value_col, *aggs):
     """The value histogram behind `roc_auc` and `rank_sum_test`: per
     DISTINCT ``value_col``, ``_np`` positive and ``_nn`` negative rows
     (plus ``aggs``), and its doubled U term ``np · (2·negatives_below +
@@ -112,7 +112,7 @@ def _u2_frame(df, pos_col, value_col, num_partitions, *aggs):
         F.sum(F.lit(1) - F.col(pos_col)).cast("long").alias("_nn"),
         *aggs,
     )
-    pref = prefix_scalable(g, ["_v"], "_nn", out_col="_prefix", num_partitions=num_partitions)
+    pref = prefix_scalable(g, ["_v"], "_nn", out_col="_prefix")
     below = (F.col("_prefix") - F.col("_nn")).cast(_DEC)
     term = F.col("_np").cast(_DEC) * (F.lit(2).cast(_DEC) * below + F.col("_nn").cast(_DEC))
     return pref, term
@@ -122,7 +122,6 @@ def roc_auc(
     scored: DataFrame,
     is_pos_col: str = "is_pos",
     score_col: str = "score",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """One-row exact AUC: (n_pos, n_neg, num2, auc_micro).
 
@@ -144,7 +143,7 @@ def roc_auc(
     The ordered cumulative count runs on the scalable two-pass prefix
     plan (`_u2_frame`), not an unpartitioned window — |distinct scores|
     grows with the corpus."""
-    pref, u2 = _u2_frame(scored, is_pos_col, score_col, num_partitions)
+    pref, u2 = _u2_frame(scored, is_pos_col, score_col)
     tot = pref.agg(
         F.sum("_np").cast("long").alias("n_pos"),
         F.sum("_nn").cast("long").alias("n_neg"),
@@ -163,7 +162,6 @@ def rank_sum_test(
     df: DataFrame,
     treated_col: str = "treated",
     value_col: str = "v",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) test, one exact row:
     (n_treatment, n_control, u2_treatment, z_micro).
@@ -188,7 +186,7 @@ def rank_sum_test(
     (`_u2_frame` — no unpartitioned window), one scalar aggregate.  The
     corpus is never range-shuffled, only its value histogram."""
     pref, u2 = _u2_frame(
-        df, treated_col, value_col, num_partitions, F.count(F.lit(1)).cast("long").alias("_cnt")
+        df, treated_col, value_col, F.count(F.lit(1)).cast("long").alias("_cnt")
     )
     t3 = (
         F.col("_cnt").cast(_DEC) * F.col("_cnt").cast(_DEC) * F.col("_cnt").cast(_DEC)

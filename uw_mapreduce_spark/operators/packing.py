@@ -27,7 +27,6 @@ def pack_documents(
     token_col: str,
     budget: int,
     order_by: list[str],
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Assign each document its token-stream position and pack range.
 
@@ -42,9 +41,7 @@ def pack_documents(
     rank/sliding family) — per-task memory O(n/P), shuffle carries each
     row once.
     """
-    out = prefix_scalable(
-        docs, order_by, token_col, out_col="_prefix", num_partitions=num_partitions
-    )
+    out = prefix_scalable(docs, order_by, token_col, out_col="_prefix")
     start = (F.col("_prefix") - F.col(token_col)).cast("long")
     end_incl = (F.col("_prefix") - F.lit(1)).cast("long")  # last token's offset
     budget = int(budget)
@@ -117,7 +114,6 @@ def deterministic_shuffle(
     df: DataFrame,
     key_cols: list[str],
     rank_col: str = "shuffle_rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Deterministic pseudo-random global permutation for training-data
     ordering: rank rows by ``md5(key)`` (any engine reproduces it — no
@@ -129,7 +125,5 @@ def deterministic_shuffle(
     hashed = df.withColumn(
         "_h", F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in key_cols]))
     )
-    out = global_rank_scalable(
-        hashed, ["_h", *key_cols], rank_col=rank_col, num_partitions=num_partitions
-    )
+    out = global_rank_scalable(hashed, ["_h", *key_cols], rank_col=rank_col)
     return out.drop("_h")

@@ -42,7 +42,6 @@ def ntile_scalable(
     order_by: list[str],
     k: int,
     tile_col: str = "tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``ntile(k) OVER (ORDER BY ...)`` without the single-partition
     window — the quartile/decile assignment that survives 100 TB.
@@ -66,7 +65,7 @@ def ntile_scalable(
 
     if k < 1:
         raise ValueError("k must be >= 1")
-    ranked = global_rank_scalable(df, order_by, "__nt_rank", num_partitions)
+    ranked = global_rank_scalable(df, order_by, "__nt_rank")
     n_row = df.agg(F.count(F.lit(1)).cast("long").alias("__nt_n"))
     tile = F.expr(
         f"CAST(CASE WHEN __nt_rank < (__nt_n % {k}) * (__nt_n DIV {k} + 1)"

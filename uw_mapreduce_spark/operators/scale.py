@@ -15,7 +15,11 @@ sum or max carried across partition totals, :305-310) and
 scalable consumer — ntile, sampling, dedup, packing, evaluation, the
 skyline and the catalog rank/prefix faces — calls one of them, and all
 three read their rows from ONE range pass, ``_ranged_with_offsets``,
-which stays entirely JVM-side (no Python row serialization anywhere):
+which stays entirely JVM-side (no Python row serialization anywhere).
+The range count P is a session setting, read in one place: the pass
+takes the session's ``spark.sql.shuffle.partitions``, which the CLI's
+``--partitions`` sets, as the reference reads its reducer count once per
+job (``-D my.reducers``, :436).  No entry point takes a count of its own.
 
   1. deterministic range borders with EXACT per-range totals — one
      bounded histogram job (plus ≤2 refinement jobs for narrow or
@@ -102,7 +106,7 @@ def _as_double(key, dtype: str):
     return key.cast("double")
 
 
-def _borders_from_intervals(intervals, n: int, num_partitions: int):
+def _borders_from_intervals(intervals, n: int, P: int):
     """Equi-depth walk over disjoint (count, max) intervals sorted by
     key: border i is the top key of the interval where cumulative EXACT
     row count crosses i·n/P — `chooseBorders`
@@ -116,9 +120,9 @@ def _borders_from_intervals(intervals, n: int, num_partitions: int):
     for cnt, mx in intervals:
         ranges.append(len(borders))
         cum += cnt
-        if j < num_partitions and cum * num_partitions >= j * n:
+        if j < P and cum * P >= j * n:
             borders.append(mx)
-            j = cum * num_partitions // n + 1  # the next threshold not yet crossed
+            j = cum * P // n + 1  # the next threshold not yet crossed
     return borders, ranges
 
 
@@ -164,7 +168,7 @@ _TOTALS = {"sum": (F.sum, _spark_sum), "max": (F.max, _spark_max)}
 
 
 def _borders_histogram(
-    keyed: DataFrame, dtype: str, num_partitions: int, buckets_per_partition: int, agg
+    keyed: DataFrame, dtype: str, P: int, buckets_per_partition: int, agg
 ) -> _Borders | None:
     """Equi-depth borders with exact per-range counts and totals, from a
     deterministic bounded histogram; None when the key's double image
@@ -207,7 +211,7 @@ def _borders_histogram(
     total, fold = _TOTALS[agg] if agg else (lambda _v: F.lit(None), _spark_sum)
     aggs = [F.count(F.lit(1)), F.min(key), F.max(key), F.min(kd), F.max(kd), total(F.col("_v"))]
 
-    s = float(max(16, 2 * num_partitions))
+    s = float(max(16, 2 * P))
     level0 = F.when(~nan, F.floor(F.signum(kd) * F.log2(F.lit(1.0) + F.abs(kd)) * F.lit(s)))
     level: list = []  # (bucket path, count, min, max, min image, max image, total)
     edge = {False: (0, None), True: (0, None)}  # NULL keys, NaN keys: (count, total)
@@ -218,8 +222,8 @@ def _borders_histogram(
         else:
             level.append(((b,), *agged))
     n = sum(iv[1] for iv in level)
-    refine_min = max(2, n // (4 * num_partitions))
-    budget = 4 * num_partitions * buckets_per_partition
+    refine_min = max(2, n // (4 * P))
+    budget = 4 * P * buckets_per_partition
     child_min = max(8, min(64, buckets_per_partition))
     final: list = []
     for depth in range(3):  # level-0 pass + ≤2 refinement passes
@@ -247,7 +251,7 @@ def _borders_histogram(
     if any(c > refine_min and mn != mx and not mxd > mnd for _p, c, mn, mx, mnd, mxd, _t in final):
         return None
     final.sort(key=lambda iv: iv[0])
-    borders, ranges = _borders_from_intervals([(iv[1], iv[3]) for iv in final], n, num_partitions)
+    borders, ranges = _borders_from_intervals([(iv[1], iv[3]) for iv in final], n, P)
     if final and len(borders) > ranges[-1]:
         borders.pop()  # a border at the top key would leave only NaN above it
     parts = len(borders) + 1
@@ -262,7 +266,7 @@ def _borders_histogram(
 
 
 def _borders_exact(
-    keyed: DataFrame, n: int, num_partitions: int, sample_per_partition: int
+    keyed: DataFrame, n: int, P: int, sample_per_partition: int
 ) -> list:
     """Exact-count fallback for key types the histogram cannot bin
     (strings, or numerics whose double image collapses): hash-sampled
@@ -273,9 +277,9 @@ def _borders_exact(
     ``xxhash64(key) % mod == 0`` with Horvitz-Thompson weight count·mod,
     and driver rows are hard-capped at 4·target in a deterministic total
     order."""
-    target = sample_per_partition * num_partitions
+    target = sample_per_partition * P
     mod = max(1, n // target)
-    heavy_min = max(2, n // (4 * num_partitions))
+    heavy_min = max(2, n // (4 * P))
     counts = keyed.groupBy("_k").agg(F.count(F.lit(1)).alias("_c"))
     heavy = F.col("_c") >= heavy_min
     cand = counts.where(
@@ -296,7 +300,7 @@ def _borders_exact(
     if not pairs:
         return []
     total_w = sum(w for _, w in pairs)
-    return _borders_from_intervals([(w, k_) for k_, w in pairs], total_w, num_partitions)[0]
+    return _borders_from_intervals([(w, k_) for k_, w in pairs], total_w, P)[0]
 
 
 def _range_totals(keyed: DataFrame, borders: list, agg) -> _Borders:
@@ -431,7 +435,6 @@ def _ranged_with_offsets(
     df: DataFrame,
     order_by: list[str],
     value_col: str | None,
-    num_partitions: int | None,
     window: int | None = None,
     agg: str = "sum",
     inclusive: bool = True,
@@ -452,15 +455,14 @@ def _ranged_with_offsets(
     ordered by ``value_col`` too: every range holding copies of them then
     sees the same value sequence, whatever order the shuffle delivers.
     """
-    if num_partitions is None:
-        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    P = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     halo = 0 if window is None else window - 1
     v = None if value_col is None else F.col(value_col)
     prefix = window is None and v is not None
 
     # Step 1: borders with each range's row count (and value total for a prefix).
     borders = _deterministic_borders(
-        df, order_by[0], num_partitions, value_col=value_col if prefix else None, agg=agg
+        df, order_by[0], P, value_col=value_col if prefix else None, agg=agg
     )
     parts = len(borders) + 1
     counts, totals = borders.counts, borders.totals
@@ -583,7 +585,6 @@ def sliding_aggregate_scalable(
     agg: str = "sum",
     rank_col: str = "rank",
     agg_col: str = "agg",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Distributed trailing-window aggregate with no single-partition stage.
 
@@ -598,7 +599,7 @@ def sliding_aggregate_scalable(
         raise ValueError("window must be >= 1")
     if agg not in _SLIDING_AGGS:
         raise ValueError(f"agg must be one of {sorted(_SLIDING_AGGS)}")
-    out = _ranged_with_offsets(df, order_by, value_col, num_partitions, window=window, agg=agg)
+    out = _ranged_with_offsets(df, order_by, value_col, window=window, agg=agg)
     return out.withColumnRenamed("rank", rank_col).withColumnRenamed("_agg", agg_col)
 
 
@@ -606,7 +607,6 @@ def global_rank_scalable(
     df: DataFrame,
     order_by: list[str],
     rank_col: str = "rank",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """0-based global rank with no single-partition stage (100 TB path).
 
@@ -617,7 +617,7 @@ def global_rank_scalable(
     per-range row_number (≈ O9 prefix-count ranking) — entirely
     JVM-side, no join.
     """
-    out = _ranged_with_offsets(df, order_by, None, num_partitions)
+    out = _ranged_with_offsets(df, order_by, None)
     return out.withColumnRenamed("rank", rank_col)
 
 
@@ -628,7 +628,6 @@ def prefix_scalable(
     agg: str = "sum",
     out_col: str = "prefix",
     inclusive: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running ``agg`` ("sum" or "max") of ``value_col`` in
     ``order_by`` order, without a single-partition window.
@@ -646,7 +645,5 @@ def prefix_scalable(
     """
     if agg not in _TOTALS:
         raise ValueError(f"agg must be one of {sorted(_TOTALS)}")
-    out = _ranged_with_offsets(
-        df, order_by, value_col, num_partitions, agg=agg, inclusive=inclusive
-    )
+    out = _ranged_with_offsets(df, order_by, value_col, agg=agg, inclusive=inclusive)
     return out.withColumnRenamed("_prefix", out_col).drop("rank")
