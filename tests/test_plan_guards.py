@@ -573,3 +573,54 @@ def test_blocked_kernels_size_blocks_from_border_counts(spark, sf_small):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) <= 6, (name, len(jobs))
+
+
+def test_load_table_reuses_and_invalidates_the_inferred_schema(spark, sf_small, tmp_path):
+    """Only the first load of an unchanged table runs Spark's one-task
+    schema-inference job; a rewritten table, or a changed inference
+    conf, is inferred again; a missing table raises Spark's own error;
+    and the stream replay takes the batch loader's schema without a job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from uw_mapreduce_spark.sources.tables import load_table
+    from uw_mapreduce_spark.streaming.sliding import stream_events
+
+    sf = str(tmp_path)
+    path = f"{sf}/orders.parquet"
+    spark.range(5).write.parquet(path)
+    first, jobs = _call_jobs(spark, "memo-first", lambda: load_table(spark, sf, "orders"))
+    assert jobs == 1
+    second, jobs = _call_jobs(spark, "memo-second", lambda: load_table(spark, sf, "orders"))
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert sorted(r.id for r in second.collect()) == list(range(5))
+
+    spark.range(3).selectExpr("id", "id * 10 AS extra").write.mode("overwrite").parquet(path)
+    got = load_table(spark, sf, "orders")
+    assert got.columns == ["id", "extra"]
+    assert sorted(tuple(r) for r in got.collect()) == [(0, 0), (1, 10), (2, 20)]
+
+    # A file without Spark's own schema in its footer, so the conf decides.
+    pq.write_table(pa.table({"t": pa.array([0], pa.timestamp("us"))}), f"{sf}/part.parquet")
+    assert load_table(spark, sf, "part").dtypes == [("t", "timestamp_ntz")]
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    try:
+        assert load_table(spark, sf, "part").dtypes == [("t", "timestamp")]
+    finally:
+        spark.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
+
+    with pytest.raises(AnalysisException) as missing:
+        load_table(spark, sf, "region")
+    assert missing.value.getCondition() == "PATH_NOT_FOUND"
+
+    batch = load_table(spark, sf_small, "events")
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    stream, jobs = _call_jobs(
+        spark, "memo-stream", lambda: stream_events(spark, sf_small, staging_dir=str(stage))
+    )
+    assert jobs == 0
+    assert stream.schema == batch.schema

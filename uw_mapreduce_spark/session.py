@@ -101,6 +101,15 @@ def get_spark(
         # instead of baking in the 128 GiB test box (ADVICE r7): 1/8 of
         # system RAM, clamped to [4g, 16g]; SPARK_DRIVER_MEMORY overrides.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
+        # Spark: "Enable the DataFrame debugging. This feature is enabled
+        # by default, but has a non-trivial performance overhead because
+        # of the stack trace collection."  With it on, every PySpark
+        # Column function walks the Python stack and makes extra py4j
+        # calls to record its call site.  It is a static conf
+        # (spark.conf.set raises CANNOT_MODIFY_STATIC_CONFIG), so it is
+        # set here and not in RUNTIME_CONFS; a session the engine is
+        # handed, or one that already exists, keeps its own value.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

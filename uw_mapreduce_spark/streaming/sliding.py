@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import apply_runtime_confs
+from ..sources.tables import normalize_event_ts, read_parquet
 
 
 def stream_events(
@@ -30,15 +31,15 @@ def stream_events(
     max_files_per_trigger: int = 1,
     staging_dir: str | None = None,
 ) -> DataFrame:
-    """Replay the events parquet as a file-source stream (ns ts handled
-    as in the batch loader).
+    """Replay the events parquet as a file-source stream, with the batch
+    loader's schema and ``ts`` normalization.
 
     Pass ``staging_dir`` to own the staging location; otherwise a temp
     dir is created and removed at interpreter exit (each call otherwise
     leaks a copy of events.parquet for the process lifetime).
     """
     apply_runtime_confs(spark)
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_parquet(spark, f"{sf_dir}/events.parquet")
     # The file stream source requires a DIRECTORY; stage the single
     # events file into a temp dir (copy — testdata is read-only).
     if staging_dir is None:
@@ -53,14 +54,7 @@ def stream_events(
         .format("parquet")
         .load(stage)
     )
-    ts_type = dict(static.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif ts_type == "timestamp_ntz":
-        # Watermarks require TimestampType; session zone is UTC so the
-        # cast is wall-clock-identical (same normalization as load_table).
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_event_ts(stream)
 
 
 def sliding_event_time_sum(
