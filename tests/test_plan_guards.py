@@ -393,6 +393,37 @@ def test_scalable_halo_is_row_bounded(spark):
     assert 0 < written <= n + p * (l - 1) + n // 4, written
 
 
+def test_scalable_window_tasks_hold_small_pages(spark):
+    """Uniform keys, n=100k, P=8, l=91: every task of the window stage
+    peaks at ≤ 4 MiB of execution memory.  Each holds ~12.5k rows; with
+    Spark's default 32 MiB page on a 4g local[4] session each reported
+    32.5 MiB, one page whatever its data."""
+    from uw_mapreduce_spark.operators.scale import sliding_aggregate_scalable
+
+    sc = spark.sparkContext
+    n, p, l = 100_000, 8, 91
+    with shuffle_partitions(spark, p):
+        out = sliding_aggregate_scalable(_uniform_long_frame(spark, n), ["k"], "v", l)
+    group = "scalable-window-pages"
+    _call_jobs(spark, group, lambda: out.write.format("noop").mode("overwrite").save())
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # status events reach the store asynchronously
+    tracker, store = sc.statusTracker(), jsc.statusStore()
+    stage_ids = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stages = store.stageList(None, False, False, no_quantiles, None)
+    window_stages = [
+        s for s in (stages.apply(i) for i in range(stages.size()))
+        if s.stageId() in stage_ids and s.shuffleReadRecords() > 0
+    ]
+    assert [s.numTasks() for s in window_stages] == [p]
+    tasks = store.taskList(window_stages[0].stageId(), window_stages[0].attemptId(), p)
+    peaks = [tasks.apply(i).taskMetrics().get().peakExecutionMemory() for i in range(tasks.size())]
+    assert len(peaks) == p and max(peaks) <= 4 << 20, peaks
+
+
 def test_scalable_pass_one_range_per_task(spark):
     """Range k windows in shuffle task k, at every P and range count:
     1, about P/2 and P ranges (few distinct keys for the first two,

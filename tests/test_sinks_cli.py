@@ -137,6 +137,22 @@ def test_cli_modules_import_without_pandas():
     assert r.stdout.strip() == "[]", r.stdout
 
 
+def test_text_sink_keeps_a_field_per_column_on_null(spark, tmp_path):
+    """A NULL aggregate is an empty field, as in Spark's CSV writer, so
+    each line keeps ``rank\\tkey\\tagg``; ``concat_ws`` alone dropped it
+    and wrote ``0\\t0``."""
+    from uw_mapreduce_spark.operators.window import sliding_aggregate
+    from uw_mapreduce_spark.sources.text_kv import write_text_kv
+
+    kv = spark.createDataFrame(
+        [(0, None), (1, None), (2, 3), (3, None), (4, 5)], "key long, value long"
+    )
+    out = sliding_aggregate(kv, ["key"], "value", 2).select("rank", "key", "agg")
+    write_text_kv(out, str(tmp_path / "out"))
+    lines = sorted(r.value for r in spark.read.text(str(tmp_path / "out")).collect())
+    assert lines == ["0\t0\t", "1\t1\t", "2\t2\t3", "3\t3\t3", "4\t4\t5"]
+
+
 def test_csv_json_roundtrip(spark, sf_small):
     import tempfile
 

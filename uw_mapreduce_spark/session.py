@@ -9,6 +9,7 @@ slaves files) has no equivalent worth rebuilding.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -68,6 +69,30 @@ def _default_driver_memory() -> str:
     return f"{max(4, min(16, int(total_gib // 8)))}g"
 
 
+# Size suffixes Spark accepts in a memory string such as
+# ``spark.driver.memory``; a bare number means MiB.
+_MEMORY_UNITS = {"": 1 << 20, "b": 1} | {
+    u + b: 1 << (10 * i) for i, u in enumerate("kmgtp", start=1) for b in ("", "b")
+}
+
+# TaskMemoryManager.PAGE_TABLE_SIZE: the most pages one task can hold.
+_PAGE_TABLE_SIZE = 8192
+
+
+def _memory_bytes(memory: str) -> int:
+    """Bytes in a memory string as Spark reads ``spark.driver.memory``."""
+    m = re.fullmatch(r"(\d+)([a-z]*)", memory.strip().lower())
+    if m is None or m.group(2) not in _MEMORY_UNITS:
+        raise ValueError(f"not a memory size: {memory!r}")
+    return int(m.group(1)) * _MEMORY_UNITS[m.group(2)]
+
+
+def _page_size_bytes(heap: str) -> int:
+    """The smallest power of two that is >= 1 MiB and >= heap / 8192."""
+    need = -(-_memory_bytes(heap) // _PAGE_TABLE_SIZE)
+    return max(1 << 20, 1 << (need - 1).bit_length())
+
+
 def get_spark(
     app_name: str = "uw-mapreduce-spark",
     master: str | None = None,
@@ -76,9 +101,9 @@ def get_spark(
     """Build (or fetch) a session.
 
     Defaults follow the driver environment: ``local[$SPARK_GRAFT_CPUS]``
-    (32 on the test box) and shuffle partitions sized to the core count —
-    at real cluster scale you would leave AQE to coalesce from a high
-    initial count instead.
+    (32 when unset) and max(cores, 8) shuffle partitions; at real cluster
+    scale you would leave AQE to coalesce from a high initial count
+    instead.  Local masters also get memory pages sized to the heap.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -89,6 +114,7 @@ def get_spark(
         except (IndexError, ValueError):
             n = 32
         shuffle_partitions = max(n, 8)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory()
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -100,7 +126,7 @@ def get_spark(
         # wedge join (round-7 sweep).  Size the default from the host
         # instead of baking in the 128 GiB test box (ADVICE r7): 1/8 of
         # system RAM, clamped to [4g, 16g]; SPARK_DRIVER_MEMORY overrides.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
+        .config("spark.driver.memory", driver_memory)
         # Spark: "Enable the DataFrame debugging. This feature is enabled
         # by default, but has a non-trivial performance overhead because
         # of the stack trace collection."  With it on, every PySpark
@@ -111,6 +137,20 @@ def get_spark(
         # handed, or one that already exists, keeps its own value.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        # Spark's default page is heap share / cores / 16, rounded up to a
+        # power of two: 32 MiB on a 4g local[4] session.  The first record
+        # of every sort, window buffer or hash map in a task takes one
+        # page, whatever its data.  Use the smallest power of two >= 1 MiB
+        # (Spark's own lower clamp) and >= heap / 8192: a task holds at
+        # most 8192 pages (TaskMemoryManager's page table) and its
+        # execution memory never exceeds the heap, so no task runs out of
+        # page-table entries.  4g gives 1 MiB, 16g 2 MiB, 64g 8 MiB.  Only
+        # in local mode is the driver heap the executor heap; elsewhere
+        # the executors' heaps are unknown here and Spark's default
+        # stays.  Static conf, so it is set on the builder, and a session
+        # the engine is handed keeps its own value.
+        builder = builder.config("spark.buffer.pageSize", str(_page_size_bytes(driver_memory)))
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

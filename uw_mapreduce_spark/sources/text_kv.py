@@ -11,10 +11,11 @@ Reference parity:
   `PairInt.java:80-83`).
 
 Spark-first notes: the reference is int32-only; we parse to int64
-(SURVEY.md §2.3.5 — deliberate overflow fix).  `spark.read.csv` gives
-splittable, predicate-pushdown-capable scans; at 100 TB you would land
-this data as Parquet once and never re-read text, which is why the rest
-of the engine is Parquet-first.
+(SURVEY.md §2.3.5 — deliberate overflow fix).  The scan is
+`spark.read.text` plus a split on the first tab, which keeps splittable
+line-oriented input; at 100 TB you would land this data as Parquet once
+and never re-read text, which is why the rest of the engine is
+Parquet-first.
 """
 
 from __future__ import annotations
@@ -47,7 +48,12 @@ def read_text_kv(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_text_kv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write ``col1\\tcol2\\t...`` text, one line per record (O2 parity)."""
-    cols = [F.col(c).cast("string") for c in df.columns]
+    """Write ``col1\\tcol2\\t...`` text, one line per record (O2 parity).
+
+    NULL is written as an empty field, as Spark's CSV writer does, so
+    every line has one field per column (``concat_ws`` alone skips NULLs
+    and shifts the later fields left).
+    """
+    cols = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
     out = df.select(F.concat_ws("\t", *cols).alias("value"))
     out.write.mode(mode).text(path)
